@@ -5,6 +5,7 @@ KLL) — each plugs the kernel monoid into the shared two-phase
 
 from __future__ import annotations
 
+from dataclasses import replace
 from typing import Optional, Sequence
 
 import numpy as np
@@ -14,12 +15,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     BooleanType,
     DoubleType,
     LongType,
+    StringType,
 )
 
+from gr_tdigest_spark.functions import (
+    _COMPANION_PROBES, _PROBES, _as_str, _merge_udf, _register,
+)
 from gr_tdigest_spark.operators.agg import SketchSpec, sketch_agg
 from gr_tdigest_spark.sketches.bloom import BloomFilter
 from gr_tdigest_spark.sketches.bottomk import BottomK, WeightedBottomK
@@ -664,17 +668,12 @@ def bottomk_agg(df: DataFrame, keys, col: str, k: int = 64,
 
 
 # ------------------------------------------------------------------ #
-# query functions (pandas UDFs over the sketch blob columns)
+# query functions: rows of the shared probe table (functions._PROBES)
 # ------------------------------------------------------------------ #
 
 def hll_estimate(col) -> Column:
-    @F.pandas_udf(DoubleType())
-    def _e(blobs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [HLL.from_bytes(b).estimate() for b in blobs], dtype="float64"
-        )
-
-    return _e(col)
+    """Distinct-count estimate per HLL blob; NULL blob → NULL."""
+    return _PROBES["hll_estimate"](col)
 
 
 def hll_intersect_estimate(col_a, col_b) -> Column:
@@ -689,13 +688,15 @@ def hll_intersect_estimate(col_a, col_b) -> Column:
     clamp) or off by multiples of itself. Use for intersections that
     are a non-trivial fraction of the union; for rare-overlap joins use
     Bloom semi-filters instead."""
-    return _make_hll_intersect_udf()(col_a, col_b)
+    return _PROBES["hll_intersect_estimate"](col_a, col_b)
 
 
 def register_companion_sql(spark) -> None:
     """SQL names for the companion surface — the analogue of
-    ``functions.register_sql`` for t-digest: scalar probes plus
-    grouped-aggregate merges, so a pure-SQL user can roll up and query
+    ``functions.register_sql`` for t-digest: the companion rows of the
+    probe table that have a SQL name, plus one grouped-aggregate merge
+    per family (``hll/cms/bloom/minhash/kll/bottomk_merge``, the UDF
+    ``merge_sketches`` builds), so a pure-SQL user can roll up and query
     sketch tables end to end:
 
         SELECT g, hll_estimate(hll_merge(hll)) FROM sketches GROUP BY g
@@ -703,150 +704,15 @@ def register_companion_sql(spark) -> None:
 
     Merges need no config arguments: every blob carries its own header
     and the kernels enforce merge compatibility (mismatched configs
-    raise, same contract as the Python surface). Probe keys for
-    ``bloom_contains``/``cms_estimate`` are STRING columns here —
-    SQL-side probing of a sketch ingested from a non-string column
+    raise, same contract as the Python surface). SQL
+    ``cms_estimate(blob, key)`` is the DataFrame ``cms_estimate_col``.
+    Probe keys for ``bloom_contains``/``cms_estimate`` are STRING columns
+    here — SQL-side probing of a sketch ingested from a non-string column
     must cast consistently on both sides (hashing is dtype-aware)."""
-
-    def _merge_udf(kernel):
-        @F.pandas_udf(BinaryType())
-        def _merge(blobs: pd.Series) -> Optional[bytes]:
-            states = [
-                kernel.from_bytes(bytes(b)) for b in blobs if b is not None
-            ]
-            if not states:
-                return None
-            out = states[0]
-            for s in states[1:]:
-                out = out.merge(s)
-            return out.to_bytes()
-
-        return _merge
-
-    spark.udf.register("hll_merge", _merge_udf(HLL))
-    spark.udf.register("cms_merge", _merge_udf(CMS))
-    spark.udf.register("bloom_merge", _merge_udf(BloomFilter))
-    spark.udf.register("minhash_merge", _merge_udf(MinHash))
-    spark.udf.register("kll_merge", _merge_udf(KLL))
-    spark.udf.register("bottomk_merge", _merge_udf(BottomK))
-
-    @F.pandas_udf(DoubleType())
-    def _hll_est(blobs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [None if b is None else HLL.from_bytes(bytes(b)).estimate()
-             for b in blobs],
-            dtype="float64",
-        )
-
-    @F.pandas_udf(DoubleType())
-    def _kll_q(blobs: pd.Series, qs: pd.Series) -> pd.Series:
-        out = np.full(len(blobs), np.nan)
-        for i, (b, q) in enumerate(zip(blobs, qs)):
-            if b is not None and q is not None:
-                out[i] = float(KLL.from_bytes(bytes(b)).quantile(
-                    float(q))[0])
-        return pd.Series(out)
-
-    @F.pandas_udf(DoubleType())
-    def _bk_distinct(blobs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [None if b is None else
-             BottomK.from_bytes(bytes(b)).distinct_estimate()
-             for b in blobs],
-            dtype="float64",
-        )
-
-    from pyspark.sql.types import StringType as _StringType
-
-    @F.pandas_udf(ArrayType(_StringType()))
-    def _bk_sample(blobs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [None if b is None else
-             [v if isinstance(v, str) else str(v)
-              for v in BottomK.from_bytes(bytes(b)).sample()]
-             for b in blobs],
-        )
-
-    spark.udf.register("hll_estimate", _hll_est)
-    spark.udf.register("kll_quantile", _kll_q)
-    spark.udf.register("bottomk_distinct", _bk_distinct)
-    spark.udf.register("bottomk_sample", _bk_sample)
-    spark.udf.register("bloom_contains", _make_bloom_contains_udf())
-    spark.udf.register("cms_estimate", _make_cms_estimate_col_udf())
-    spark.udf.register("minhash_jaccard", _make_minhash_jaccard_udf())
-    spark.udf.register("hll_intersect", _make_hll_intersect_udf())
-    spark.udf.register("cms_inner_product", _make_cms_ip_udf())
-
-
-def _make_bloom_contains_udf():
-    @F.pandas_udf(BooleanType())
-    def _c(blobs: pd.Series, keys: pd.Series) -> pd.Series:
-        out = np.zeros(len(blobs), dtype=bool)
-        arr = keys.to_numpy()
-        for bb, idxs in _group_rows_by_blob(blobs):
-            sk = BloomFilter.from_bytes(bb)
-            out[idxs] = sk.contains(arr[idxs])
-        return pd.Series(out)
-
-    return _c
-
-
-def _make_cms_estimate_col_udf():
-    @F.pandas_udf(LongType())
-    def _e(blobs: pd.Series, keys: pd.Series) -> pd.Series:
-        out = np.zeros(len(blobs), dtype=np.int64)
-        arr = keys.to_numpy()
-        for bb, idxs in _group_rows_by_blob(blobs):
-            sk = CMS.from_bytes(bb)
-            out[idxs] = sk.estimate(arr[idxs])
-        return pd.Series(out)
-
-    return _e
-
-
-def _make_minhash_jaccard_udf():
-    @F.pandas_udf(DoubleType())
-    def _j(a_blobs: pd.Series, b_blobs: pd.Series) -> pd.Series:
-        out = np.full(len(a_blobs), np.nan)
-        for i, (ab, bb) in enumerate(zip(a_blobs, b_blobs)):
-            if ab is not None and bb is not None:
-                out[i] = MinHash.from_bytes(bytes(ab)).jaccard(
-                    MinHash.from_bytes(bytes(bb))
-                )
-        return pd.Series(out)
-
-    return _j
-
-
-def _make_hll_intersect_udf():
-    @F.pandas_udf(DoubleType())
-    def _ix(a_blobs: pd.Series, b_blobs: pd.Series) -> pd.Series:
-        out = np.full(len(a_blobs), np.nan)
-        for i, (ab, bb) in enumerate(zip(a_blobs, b_blobs)):
-            if ab is not None and bb is not None:
-                ha = HLL.from_bytes(bytes(ab))
-                hb = HLL.from_bytes(bytes(bb))
-                out[i] = max(
-                    ha.estimate() + hb.estimate()
-                    - ha.merge(hb).estimate(), 0.0,
-                )
-        return pd.Series(out)
-
-    return _ix
-
-
-def _make_cms_ip_udf():
-    @F.pandas_udf(DoubleType())
-    def _ip(a_blobs: pd.Series, b_blobs: pd.Series) -> pd.Series:
-        out = np.full(len(a_blobs), np.nan)
-        for i, (ab, bb) in enumerate(zip(a_blobs, b_blobs)):
-            if ab is not None and bb is not None:
-                out[i] = float(CMS.from_bytes(bytes(ab)).inner_product(
-                    CMS.from_bytes(bytes(bb))
-                ))
-        return pd.Series(out)
-
-    return _ip
+    for spec in (HLLSpec(), CMSSpec(), BloomSpec(), MinHashSpec(),
+                 KLLSpec(), BottomKSpec()):
+        spark.udf.register(f"{spec.name}_merge", _merge_udf(spec))
+    _register(spark, _COMPANION_PROBES)
 
 
 def merge_sketches(col, spec: SketchSpec) -> Column:
@@ -859,20 +725,11 @@ def merge_sketches(col, spec: SketchSpec) -> Column:
     for OLAP-style subtotals: facts are read once at the finest grain;
     the cube is computed entirely on sketch-sized rows.
 
-    NULL blobs are skipped; an all-NULL (or empty) group yields NULL.
-    Merge-compatibility is enforced by the kernels (mismatched configs
-    raise, same contract as every other surface)."""
-
-    @F.pandas_udf(BinaryType())
-    def _merge(blobs: pd.Series) -> Optional[bytes]:
-        states = [
-            spec.blob_to_state(bytes(b)) for b in blobs if b is not None
-        ]
-        if not states:
-            return None
-        return spec.state_to_blob(spec.merge_many(states))
-
-    return _merge(col)
+    NULL blobs are skipped; an all-NULL (or empty) group yields NULL
+    (the canonical empty digest for a ``TDigestSpec``, as in
+    ``merge_tdigests``). Merge-compatibility is enforced by the kernels
+    (mismatched configs raise, same contract as every other surface)."""
+    return _merge_udf(spec)(col)
 
 
 def minhash_jaccard(col_a, col_b) -> Column:
@@ -881,7 +738,7 @@ def minhash_jaccard(col_a, col_b) -> Column:
     ≤ 1/(2√k). NULL if either side is NULL. Signatures must share
     (k, seed); incompatible pairs raise (merge-compatibility contract,
     same as every other sketch)."""
-    return _make_minhash_jaccard_udf()(col_a, col_b)
+    return _PROBES["minhash_jaccard"](col_a, col_b)
 
 
 def minhash_hll_intersect_estimate(mh_a, mh_b, hll_a, hll_b) -> Column:
@@ -898,24 +755,8 @@ def minhash_hll_intersect_estimate(mh_a, mh_b, hll_a, hll_b) -> Column:
     ≈ |A∪B|·(σ_J + J·1.04/√m) with σ_J = sqrt(J(1−J)/k) — it SHRINKS
     with J, so rare overlaps stay resolvable (SURVEY §2.8 caveat
     addressed by composition rather than by a bigger m)."""
-
-    @F.pandas_udf(DoubleType())
-    def _ix(ma: pd.Series, mb: pd.Series,
-            ha: pd.Series, hb: pd.Series) -> pd.Series:
-        out = np.full(len(ma), np.nan)
-        for i, (a, b, u, v) in enumerate(zip(ma, mb, ha, hb)):
-            if a is None or b is None or u is None or v is None:
-                continue
-            j = MinHash.from_bytes(bytes(a)).jaccard(
-                MinHash.from_bytes(bytes(b))
-            )
-            union = HLL.from_bytes(bytes(u)).merge(
-                HLL.from_bytes(bytes(v))
-            ).estimate()
-            out[i] = j * union
-        return pd.Series(out)
-
-    return _ix(mh_a, mh_b, hll_a, hll_b)
+    return _PROBES["minhash_hll_intersect_estimate"](mh_a, mh_b,
+                                                     hll_a, hll_b)
 
 
 def cms_inner_product(col_a, col_b) -> Column:
@@ -924,7 +765,7 @@ def cms_inner_product(col_a, col_b) -> Column:
     SIZE estimate (a·b ≤ est ≤ a·b + ε·N_a·N_b w.p. ≥ 1−δ): the
     100 TB use is costing a join between two fact tables from two
     sketch blobs, without shuffling either side."""
-    return _make_cms_ip_udf()(col_a, col_b)
+    return _PROBES["cms_inner_product"](col_a, col_b)
 
 
 def cms_estimate(col, candidates: Sequence) -> Column:
@@ -935,93 +776,45 @@ def cms_estimate(col, candidates: Sequence) -> Column:
     cand = np.asarray(candidates)
     if cand.dtype.kind == "U":
         cand = cand.astype(object)
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _e(blobs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [CMS.from_bytes(b).estimate(cand).tolist() for b in blobs]
-        )
-
-    return _e(col)
-
-
-def _group_rows_by_blob(blobs: pd.Series):
-    """Yield (blob_bytes, row_indices) so each distinct sketch is decoded
-    once and probed vectorized. NULL blobs are skipped — their rows keep
-    the caller's pre-initialized default (0 / False)."""
-    uniq = {}
-    for i, b in enumerate(blobs):
-        if b is None:
-            continue
-        uniq.setdefault(bytes(b), []).append(i)
-    for bb, idxs in uniq.items():
-        yield bb, np.asarray(idxs, dtype=np.int64)
+    return _PROBES["cms_estimate"](col, consts=(cand,))
 
 
 def cms_estimate_col(blob_col, key_col) -> Column:
     """Per-row estimate: sketch blob column × per-row key column.
     Key dtype must match the ingested column dtype (hashing is
     dtype-aware). NULL blobs yield 0."""
-    return _make_cms_estimate_col_udf()(blob_col, key_col)
+    return _PROBES["cms_estimate_col"](blob_col, key_col)
 
 
 def bloom_contains(blob_col, key_col) -> Column:
     """Membership probe: sketch blob column × per-row key column.
     Key dtype must match the ingested column dtype (hashing is
     dtype-aware). NULL blobs yield false."""
-    return _make_bloom_contains_udf()(blob_col, key_col)
+    return _PROBES["bloom_contains"](blob_col, key_col)
 
 
 def kll_quantile(col, q: float) -> Column:
-    qv = float(q)
-
-    @F.pandas_udf(DoubleType())
-    def _q(blobs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [float(KLL.from_bytes(b).quantile(qv)[0]) for b in blobs],
-            dtype="float64",
-        )
-
-    return _q(col)
+    return _PROBES["kll_quantile"](col, F.lit(float(q)))
 
 
 def kll_rank(col, x: float) -> Column:
-    xv = float(x)
-
-    @F.pandas_udf(DoubleType())
-    def _r(blobs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [float(KLL.from_bytes(b).rank(xv)[0]) for b in blobs],
-            dtype="float64",
-        )
-
-    return _r(col)
+    return _PROBES["kll_rank"](col, consts=(float(x),))
 
 
 def kll_count(col) -> Column:
-    @F.pandas_udf(DoubleType())
-    def _n(blobs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [KLL.from_bytes(b).n for b in blobs], dtype="float64"
-        )
-
-    return _n(col)
+    return _PROBES["kll_count"](col)
 
 
 def bottomk_distinct(col) -> Column:
     """Distinct-count estimate from a bottom-k blob column (exact below
     capacity; KMV (k−1)/U_(k) at it — rel. std error ≈ 1/√(k−2))."""
+    return _PROBES["bottomk_distinct"](col)
 
-    @F.pandas_udf(DoubleType())
-    def _d(blobs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [None if b is None else
-             BottomK.from_bytes(bytes(b)).distinct_estimate()
-             for b in blobs],
-            dtype="float64",
-        )
 
-    return _d(col)
+_SAMPLE_TYPES = {
+    "string": (StringType(), _as_str), "long": (LongType(), int),
+    "double": (DoubleType(), float),
+}
 
 
 def _sketch_sample_col(col, dtype: str, kernel) -> Column:
@@ -1029,31 +822,14 @@ def _sketch_sample_col(col, dtype: str, kernel) -> Column:
     sample as an array column, decoded with ``kernel.from_bytes``
     (BottomK for GSBK KMV blobs, WeightedBottomK for GSWK race blobs —
     the magics differ, so the right decoder must be picked)."""
-    from pyspark.sql.types import StringType
-
-    elem = {
-        "string": StringType(), "long": LongType(),
-        "double": DoubleType(),
-    }.get(dtype)
-    if elem is None:
+    if dtype not in _SAMPLE_TYPES:
         raise ValueError(
             f"bottomk_sample dtype must be string/long/double, got {dtype!r}"
         )
-
-    def conv(v):
-        if dtype == "string":
-            return v if isinstance(v, str) else str(v)
-        return int(v) if dtype == "long" else float(v)
-
-    @F.pandas_udf(ArrayType(elem))
-    def _s(blobs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [None if b is None else
-             [conv(v) for v in kernel.from_bytes(bytes(b)).sample()]
-             for b in blobs],
-        )
-
-    return _s(col)
+    elem, conv = _SAMPLE_TYPES[dtype]
+    row = replace(_PROBES["bottomk_sample"], decode=(kernel.from_bytes,),
+                  return_type=ArrayType(elem))
+    return row(col, consts=(conv,))
 
 
 def bottomk_sample(col, dtype: str = "string") -> Column:

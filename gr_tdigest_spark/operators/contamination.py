@@ -249,11 +249,14 @@ class ContaminationFilter:
         self.blob, self.n, self.seed, self.n_bench_grams = state
 
 
-# collect-build toggle: "true" (default) pulls the benchmark's distinct
-# gram hashes (8 B each) to the driver and sets the Bloom bits locally —
-# ONE Spark job instead of three (count + two-phase aggregate + first).
-# The driver footprint is the same order as the join method's broadcast
-# gram table (benchmarks are the small side by contract); set "false"
+# collect-build toggle: "true" (default) pulls one gram-hash array per
+# benchmark doc (distinct within the doc, 8 B per hash) to the driver,
+# where np.unique dedups them across docs before the Bloom bits are set
+# locally — ONE Spark job instead of three (count + two-phase aggregate
+# + first). The driver footprint is 8 B per per-doc-distinct gram
+# occurrence, the same order as the benchmark text itself and as the
+# join method's broadcast gram table (benchmarks are the small side by
+# contract); set "false"
 # for a pathologically large benchmark to build through the distributed
 # bloom_agg instead. Both paths produce byte-identical blobs (bitwise
 # OR of the same positions, same n_added bookkeeping).

@@ -22,6 +22,30 @@ DATA = [0.0, 1.0, 2.0, 3.0]
 PIN_Q50 = 1.5
 PIN_CDF2 = 0.625
 
+# constant arguments of the DataFrame functions behind the probe table;
+# for SQL-registered rows their repr is the SQL literal of the same call
+_DF_ARGS = {
+    "tdigest_quantile": (0.5,), "tdigest_quantiles": ([0.25, 0.5],),
+    "tdigest_cdf": (1.5,), "tdigest_cdfs": ([0.5, 1.5],),
+    "tdigest_trimmed_mean": (0.1, 0.9), "tdigest_scale_weights": (2.0,),
+    "tdigest_scale_values": (2.0,), "tdigest_cast_precision": ("f32",),
+    "tdigest_to_version": (2,), "kll_quantile": (0.5,), "kll_rank": (1.5,),
+    "cms_estimate": (["a", "b"],), "bloom_contains": ("a",),
+    "cms_estimate_col": ("a",),
+}
+_KEY_COLUMN_ARGS = ("bloom_contains", "cms_estimate_col")
+
+
+def _df_call(name, *cols):
+    """The DataFrame function of probe-table row ``name`` over ``cols``."""
+    from gr_tdigest_spark.operators import companions as C
+
+    fn = getattr(Fn, name, None) or getattr(C, name)
+    args = _DF_ARGS.get(name, ())
+    if name in _KEY_COLUMN_ARGS:
+        args = tuple(F.lit(a) for a in args)
+    return fn(*cols, *args)
+
 
 @pytest.fixture(scope="module")
 def spark_digest(spark):
@@ -112,10 +136,15 @@ class TestErrorContractsAcrossSurfaces:
         assert row["c"] is None or math.isnan(row["c"])
         assert row["m"] is None
 
-    def test_null_blob_errors(self, spark):
+    @pytest.mark.parametrize(
+        "name", [p.name for p in Fn._TDIGEST_PROBES]
+    )
+    def test_null_blob_errors(self, spark, name):
+        """Every t-digest row raises the same reference error on a NULL
+        blob (no bare TypeError from decoding None)."""
         dg = spark.range(1).select(F.lit(None).cast("binary").alias("b"))
         with pytest.raises(Exception, match="null TDIG blob"):
-            dg.select(Fn.tdigest_quantile("b", 0.5)).collect()
+            dg.select(_df_call(name, "b")).collect()
 
     def test_empty_bytes_blob_errors(self, spark):
         dg = spark.range(1).select(F.lit(b"").alias("b"))
@@ -243,3 +272,193 @@ class TestCompanionSQLSurface:
         assert len(bk) == 3
         for r in bk:
             assert r["s"] == 16 and r["d"] >= 16.0
+
+
+def _sketches(family):
+    """(sketch, empty sketch, sketch under another config) blobs."""
+    from gr_tdigest_spark.sketches.bloom import BloomFilter
+    from gr_tdigest_spark.sketches.bottomk import BottomK
+    from gr_tdigest_spark.sketches.cms import CMS
+    from gr_tdigest_spark.sketches.hll import HLL
+    from gr_tdigest_spark.sketches.kll import KLL
+    from gr_tdigest_spark.sketches.minhash import MinHash
+
+    if family == "tdigest":
+        return tuple(
+            td_wire.encode(TDigest.from_values(v, max_size=m))
+            for v, m in ((DATA, 10), ([], 10), (DATA, 20))
+        )
+    new = {
+        "hll": lambda c: HLL(p=10 + 2 * c),
+        "cms": lambda c: CMS(4, 64 << c, 7),
+        "bloom": lambda c: BloomFilter(1024 << c, 3, 11),
+        "minhash": lambda c: MinHash(k=16 << c, seed=23),
+        "kll": lambda c: KLL(k=50 + c, seed=17),
+        "bottomk": lambda c: BottomK(k=4 + c, seed=29),
+    }[family]
+    vals = (np.asarray(DATA) if family == "kll"
+            else np.array(["a", "b", "c", "a"], dtype=object))
+    full, empty, other = new(0), new(0), new(1)
+    full.add(vals)
+    other.add(vals)
+    return full.to_bytes(), empty.to_bytes(), other.to_bytes()
+
+
+def _values(df):
+    """Column ``v`` ordered by ``id``/``g`` (NaN as None), or the kernel
+    error both surfaces must share."""
+    import re
+
+    from pyspark.errors import PythonException
+
+    try:
+        rows = df.collect()
+    except PythonException as e:
+        errs = re.findall(r"ValueError: ([^\n]*)", str(e))
+        return "raised: " + (errs[-1] if errs else str(e).splitlines()[0])
+    out = [r["v"] for r in rows]
+    return [None if isinstance(v, float) and math.isnan(v) else
+            bytes(v) if isinstance(v, (bytes, bytearray)) else v
+            for v in out]
+
+
+class TestProbeTable:
+    """One probe table serves both surfaces: every SQL-registered row
+    answers the same on the DataFrame and SQL surfaces over the same
+    blobs, NULL and empty sketches included."""
+
+    SQL_NAMES = sorted([
+        "tdigest_quantile", "tdigest_cdf", "tdigest_median",
+        "tdigest_count", "tdigest_min", "tdigest_max", "tdigest_sum",
+        "hll_merge", "cms_merge", "bloom_merge", "minhash_merge",
+        "kll_merge", "bottomk_merge",
+        "hll_estimate", "kll_quantile", "bottomk_distinct",
+        "bottomk_sample", "bloom_contains", "cms_estimate",
+        "minhash_jaccard", "hll_intersect", "cms_inner_product",
+    ])
+
+    def test_registered_sql_names_pinned(self):
+        from gr_tdigest_spark.operators.companions import (
+            register_companion_sql,
+        )
+
+        names = []
+
+        class _Spark:
+            class udf:
+                @staticmethod
+                def register(name, fn):
+                    names.append(name)
+
+        Fn.register_sql(_Spark)
+        register_companion_sql(_Spark)
+        assert sorted(names) == self.SQL_NAMES
+
+    @pytest.mark.parametrize(
+        "name", [p.name for p in Fn._PROBES.values() if p.sql]
+    )
+    def test_surfaces_agree(self, spark, name):
+        from gr_tdigest_spark.operators.companions import (
+            register_companion_sql,
+        )
+
+        Fn.register_sql(spark)
+        register_companion_sql(spark)
+        row = Fn._PROBES[name]
+        family = name.split("_")[0]
+        full, empty, other = _sketches(family)
+        cols = [f"b{i}" for i in range(len(row.decode))]
+        schema = "id int, " + ", ".join(f"{c} binary" for c in cols)
+        sql_args = ", ".join(cols + [repr(a) for a in _DF_ARGS.get(name, ())])
+
+        def both(cases):
+            df = spark.createDataFrame(
+                [(i, *c) for i, c in enumerate(cases)], schema
+            ).orderBy("id")
+            df.createOrReplaceTempView("probe_rows")
+            return (
+                _values(df.select(_df_call(name, *cols).alias("v"))),
+                _values(spark.sql(
+                    f"SELECT {row.sql}({sql_args}) AS v FROM probe_rows "
+                    "ORDER BY id"
+                )),
+            )
+
+        if len(cols) == 1:
+            sketches, nulls = [(full,), (empty,)], [(None,)]
+        else:
+            sketches = [(full, full), (full, empty), (empty, full)]
+            nulls = [(None, full), (full, None)]
+        df_out, sql_out = both(sketches)
+        assert df_out == sql_out and not isinstance(df_out, str)
+        df_out, sql_out = both(nulls)
+        assert df_out == sql_out
+        if family == "tdigest":
+            assert df_out.startswith("raised: null TDIG blob")
+        else:
+            assert df_out == [row.on_null] * len(nulls)
+        if len(cols) == 2:
+            df_out, sql_out = both([(full, other)])
+            assert df_out == sql_out and df_out.startswith("raised: ")
+
+    @pytest.mark.parametrize(
+        "family", ["hll", "cms", "bloom", "minhash", "kll", "bottomk"]
+    )
+    def test_merges_agree(self, spark, family):
+        from gr_tdigest_spark.operators import companions as C
+
+        spec = {
+            "hll": C.HLLSpec, "cms": C.CMSSpec, "bloom": C.BloomSpec,
+            "minhash": C.MinHashSpec, "kll": C.KLLSpec,
+            "bottomk": C.BottomKSpec,
+        }[family]()
+        C.register_companion_sql(spark)
+        full, empty, other = _sketches(family)
+
+        def both(rows):
+            df = spark.createDataFrame(rows, "g int, v binary")
+            df.createOrReplaceTempView("merge_rows")
+            return (
+                _values(df.groupBy("g").agg(
+                    C.merge_sketches("v", spec).alias("v")).orderBy("g")),
+                _values(spark.sql(
+                    f"SELECT g, {family}_merge(v) AS v FROM merge_rows "
+                    "GROUP BY g ORDER BY g"
+                )),
+            )
+
+        df_out, sql_out = both([
+            (0, full), (0, full), (1, empty), (1, full), (1, None),
+            (2, None), (3, empty),
+        ])
+        assert df_out == sql_out and not isinstance(df_out, str)
+        assert df_out[2] is None and df_out[3] == empty
+        df_out, sql_out = both([(0, full), (0, other)])
+        assert df_out == sql_out and df_out.startswith("raised: ")
+
+    def test_sql_quantile_probe_validation(self, spark, spark_digest):
+        Fn.register_sql(spark)
+        spark_digest.createOrReplaceTempView("cs_digest")
+        for bad in ("1.5", "-0.1", "CAST('NaN' AS DOUBLE)"):
+            out = spark.sql(
+                f"SELECT tdigest_quantile(tdigest, {bad}) AS v FROM cs_digest"
+            )
+            assert _values(out).startswith("raised: q must be")
+
+    def test_tdigest_merge_of_no_digest_is_empty_digest(self, spark):
+        df = spark.createDataFrame([(0, None), (0, None)], "g int, v binary")
+        out = df.groupBy("g").agg(Fn.merge_tdigests("v").alias("v"))
+        assert _values(out) == [td_wire.encode(TDigest())]
+
+    @pytest.mark.parametrize(
+        "name", [p.name for p in Fn._COMPANION_PROBES]
+    )
+    def test_companion_null_blob(self, spark, name):
+        """Companion probes return their NULL policy value on a NULL
+        blob on the DataFrame surface too (NULL, or 0 / false for
+        ``cms_estimate_col`` / ``bloom_contains``)."""
+        row = Fn._PROBES[name]
+        assert row.on_null in (None, 0, False)
+        dg = spark.range(1).select(F.lit(None).cast("binary").alias("b"))
+        v = dg.select(_df_call(name, *["b"] * len(row.decode)).alias("v"))
+        assert _values(v) == [row.on_null]
