@@ -6,7 +6,7 @@ Spark's pandas GROUPED_AGG UDFs have no partial-merge step, so the
 classic ``partial → shuffle → final merge`` plan is built explicitly:
 
     df.select(keys + [col])
-      .mapInPandas(build_partials)       # map-side combine: one sketch
+      .mapInArrow(build_partials)        # map-side combine: one sketch
                                          #   per (task-partition, key)
       .repartition(*keys)                # shuffles ~KB sketches, not rows
       .mapInPandas(merge_partials)       # hash-merge per partition —
@@ -17,11 +17,12 @@ Design points for the 100 TB / 1000-executor shape:
 
 - Shuffle payload is O(#partitions × #keys × sketch_size) — independent
   of row count. Only partial sketches cross the wire.
-- High-cardinality groups (the per-conversation case) are built
-  **vectorized**: one lexsort + reduceat pass per flush handles every
-  group in the batch; groups small enough to stay uncompressed skip the
-  compression pipeline entirely (provably identical output — see
-  ``_NO_MERGE_FACTOR``).
+- One partial builder serves every ``SketchSpec`` (and the checkpoint
+  and streaming surfaces): key columns are dictionary-encoded straight
+  from the Arrow batch, and each spec's columnar ``build_from_codes``
+  builds every group of a flush at once — one hash/sort/reduceat pass,
+  no per-group numpy dispatch. That is the per-conversation case: many
+  small groups.
 - The final merge is partition-wise (mapInPandas over hash-partitioned
   partials), so per-group scheduling overhead is gone; an optional
   ``salt_buckets`` level adds a treeAggregate-style intermediate merge
@@ -103,6 +104,9 @@ class SketchSpec:
     """
 
     name = "sketch"
+    # True when NULL values are skipped rather than rejected: the input
+    # projection then filters them in the JVM (``_project_input``)
+    skips_null_values = False
 
     # --- kernel state protocol ---
     def build_state(self, values: np.ndarray, weights: Optional[np.ndarray]):
@@ -130,6 +134,31 @@ class SketchSpec:
         """Validate/filter one batch of raw values before building."""
         return values, weights
 
+    def build_from_codes(
+        self,
+        codes: np.ndarray,
+        key_tuples: list,
+        values: np.ndarray,
+        weights: Optional[np.ndarray],
+    ) -> Dict[tuple, object]:
+        """Columnar core of every partial build: ``{key: state}`` for
+        each group with surviving rows. ``codes`` (int64, aligned with
+        ``values``) index the distinct ``key_tuples``; values arrive in
+        the numpy form Spark's pandas conversion gives, unfiltered."""
+        raise NotImplementedError
+
+    def build_blobs_from_codes(
+        self,
+        codes: np.ndarray,
+        key_tuples: list,
+        values: np.ndarray,
+        weights: Optional[np.ndarray],
+    ) -> Tuple[list, list]:
+        """``(keys, blobs)`` of the non-empty groups — the partial
+        builder's single-flush output."""
+        states = self.build_from_codes(codes, key_tuples, values, weights)
+        return list(states), [self.state_to_blob(s) for s in states.values()]
+
     def build_groups(
         self,
         pdf: pd.DataFrame,
@@ -137,10 +166,9 @@ class SketchSpec:
         value_col: str,
         weight_col: Optional[str],
     ) -> Dict[tuple, object]:
-        """Build {key_tuple: state} for every group in the frame.
-
-        Default: pandas groupby + per-group build. Specs can override
-        with a fully vectorized multi-group path (see TDigestSpec).
+        """Reference oracle: ``{key_tuple: state}`` via pandas groupby
+        and one ``clean_values`` + ``build_state`` per group. Tests hold
+        every spec's ``build_from_codes`` to it; no Spark plan runs it.
         """
         out: Dict[tuple, object] = {}
         vals = pdf[value_col].to_numpy()
@@ -168,7 +196,6 @@ class TDigestSpec(SketchSpec):
     vectorized multi-group builder."""
 
     name = "tdigest"
-    supports_arrow = True  # opt into the mapInArrow partial path
 
     def __init__(
         self,
@@ -254,35 +281,6 @@ class TDigestSpec(SketchSpec):
         td.max = float(means[-1])
         td._store()
         return td
-
-    def build_groups(self, pdf, key_cols, value_col, weight_col):
-        """Vectorized multi-group build from a pandas frame (see
-        ``build_from_codes`` for the core)."""
-        vals = np.asarray(pdf[value_col].to_numpy(), dtype=np.float64)
-        ws = (
-            np.asarray(pdf[weight_col].to_numpy(), dtype=np.float64)
-            if weight_col else None
-        )
-        if self.on_invalid == "drop" and key_cols:
-            # row-filtering changes key alignment; use the generic
-            # per-group path for this rare mode
-            return super().build_groups(pdf, key_cols, value_col, weight_col)
-        if key_cols:
-            keys_frame = pdf[key_cols]
-            if len(key_cols) == 1:
-                codes, uniques = pd.factorize(
-                    keys_frame[key_cols[0]], use_na_sentinel=False
-                )
-                key_tuples = [(_canon_key(u),) for u in uniques]
-            else:
-                codes, uniques = pd.factorize(
-                    pd.MultiIndex.from_frame(keys_frame), use_na_sentinel=False
-                )
-                key_tuples = [_canon_key_tuple(u) for u in uniques]
-        else:
-            codes = np.zeros(vals.size, dtype=np.int64)
-            key_tuples = [()]
-        return self.build_from_codes(codes, key_tuples, vals, ws)
 
     def _prepare_runs(
         self,
@@ -392,10 +390,7 @@ class TDigestSpec(SketchSpec):
                 # piles are already sorted+coalesced: run the pipeline on
                 # them instead of the raw rows (≤ distinct-count items)
                 td._compress(run_means[r0:r1], run_weights[r0:r1])
-            prev = out.get(key)
-            # canonicalized keys can collide (None vs NaN in an object
-            # key column) — merge, never overwrite
-            out[key] = td if prev is None else self.merge_states(prev, td)
+            out[key] = td
         return out
 
     def build_blobs_from_codes(
@@ -476,8 +471,36 @@ class TDigestSpec(SketchSpec):
 
 
 # --------------------------------------------------------------------- #
-# Arrow-native partial builder (t-digest fast path)
+# the partial builder: every spec; sketch_agg, checkpoint and streaming
 # --------------------------------------------------------------------- #
+
+def _project_input(
+    df: DataFrame,
+    key_cols: List[str],
+    value_col: str,
+    weight_col: Optional[str],
+    spec: SketchSpec,
+) -> DataFrame:
+    """The columns a partial build reads, deduped (a key column may
+    double as the value column), so column pruning reaches the scan.
+
+    Specs that SKIP null values (all hash-family companions) get the
+    null filter pushed into the JVM. Semantically identical to their
+    Python-side filtering, but load-bearing for correctness: Arrow
+    hands a nullable int64 column to numpy as float64 ONLY in batches
+    that contain a null, so the same value would hash as int64 in one
+    partition and float64 in another — partition-layout-dependent
+    sketches. With the JVM filter every batch arrives in the column's
+    native dtype. (t-digest keeps nulls flowing to Python: its
+    on_invalid='error' contract must RAISE on them, and its values
+    are cast to float64 anyway.)"""
+    src = df.select(*dict.fromkeys(
+        key_cols + [value_col] + ([weight_col] if weight_col else [])
+    ))
+    if spec.skips_null_values:
+        src = src.where(F.col(value_col).isNotNull())
+    return src
+
 
 def _encode_batch_keys(batch, key_cols: List[str]):
     """Dictionary-encode the key columns of an Arrow batch WITHOUT
@@ -489,7 +512,7 @@ def _encode_batch_keys(batch, key_cols: List[str]):
     per_col_idx = []
     per_col_vocab = []
     for name in key_cols:
-        col = batch.column(batch.schema.get_field_index(name))
+        col = batch.column(name)
         enc = col if isinstance(col.type, pa.DictionaryType) else (
             col.dictionary_encode()
         )
@@ -500,24 +523,46 @@ def _encode_batch_keys(batch, key_cols: List[str]):
             vocab = vocab + [None]
         per_col_idx.append(idx.to_numpy(zero_copy_only=False).astype(np.int64))
         per_col_vocab.append(vocab)
-    # mixed-radix combine of per-column local codes
-    combined = per_col_idx[0]
-    radix = [len(v) for v in per_col_vocab]
-    for i in range(1, len(per_col_idx)):
-        combined = combined * radix[i] + per_col_idx[i]
+    # mixed-radix combine of per-column local codes, compacted back to
+    # dense codes whenever the next radix could overflow int64 (five
+    # columns of 10k distinct values each already do)
+    combined, size = per_col_idx[0], len(per_col_vocab[0])
+    for idx, vocab in zip(per_col_idx[1:], per_col_vocab[1:]):
+        if size * len(vocab) >= 1 << 63:
+            uniq, combined = np.unique(combined, return_inverse=True)
+            size = len(uniq)
+        combined = combined * len(vocab) + idx
+        size *= len(vocab)
     uniq, inv = np.unique(combined, return_inverse=True)
-    key_tuples = []
-    for u in uniq:
-        parts = []
-        for i in range(len(key_cols) - 1, -1, -1):
-            u, r = divmod(int(u), radix[i]) if i > 0 else (0, int(u))
-            parts.append(_canon_key(per_col_vocab[i][r]))
-        key_tuples.append(tuple(reversed(parts)))
-    return inv.astype(np.int64), key_tuples
+    rep = np.empty(len(uniq), dtype=np.int64)  # one row per local key
+    rep[inv] = np.arange(inv.size)
+    key_cols_vals = [
+        [_canon_key(vocab[i]) for i in idx[rep].tolist()]
+        for idx, vocab in zip(per_col_idx, per_col_vocab)
+    ]
+    return inv.astype(np.int64), list(zip(*key_cols_vals))
+
+
+def _value_numpy(col) -> np.ndarray:
+    """One Arrow value (or weight) column as numpy, in the form Spark's
+    pandas conversion delivers it — the hash kernels are dtype-aware,
+    so this fixes every sketch's bytes. Numbers, booleans, strings,
+    binary and decimals are Arrow's own ``to_numpy``; temporal types
+    are not: dates become ``datetime.date`` objects and timestamps
+    naive ``datetime64[ns]`` wall-clock times in the column's (session)
+    time zone, exactly as ``mapInPandas`` hands them over."""
+    import pyarrow as pa
+
+    if not pa.types.is_temporal(col.type):
+        return col.to_numpy(zero_copy_only=False)
+    s = col.to_pandas(date_as_object=True, coerce_temporal_nanoseconds=True)
+    if getattr(col.type, "tz", None) is not None:
+        s = s.dt.tz_localize(None)
+    return s.to_numpy()
 
 
 def _partial_builder_arrow(
-    spec: "TDigestSpec",
+    spec: SketchSpec,
     key_cols: List[str],
     value_col: str,
     weight_col: Optional[str],
@@ -525,9 +570,10 @@ def _partial_builder_arrow(
     out_schema: StructType,
     flush_rows: int = _FLUSH_ROWS,
 ):
-    """mapInArrow partial builder: key columns stay dictionary-encoded
-    end to end (no per-row Python strings), values go straight from
-    Arrow buffers to numpy."""
+    """mapInArrow partial builder for every spec: key columns stay
+    dictionary-encoded end to end (no per-row Python objects), values
+    go from Arrow buffers to numpy (``_value_numpy``) and into the
+    spec's columnar ``build_from_codes``."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -536,7 +582,7 @@ def _partial_builder_arrow(
     def build(batches):
         gid_of: Dict[tuple, int] = {}
         keys_by_gid: List[tuple] = []
-        states: Dict[tuple, TDigest] = {}
+        states: Dict[tuple, object] = {}
         buf_codes: List[np.ndarray] = []
         buf_vals: List[np.ndarray] = []
         buf_ws: List[np.ndarray] = []
@@ -563,9 +609,7 @@ def _partial_builder_arrow(
             buffered = 0
 
         for batch in batches:
-            vals = batch.column(
-                batch.schema.get_field_index(value_col)
-            ).to_numpy(zero_copy_only=False)
+            vals = _value_numpy(batch.column(value_col))
             if key_cols:
                 local_codes, local_keys = _encode_batch_keys(batch, key_cols)
                 lookup = np.empty(len(local_keys), dtype=np.int64)
@@ -581,44 +625,29 @@ def _partial_builder_arrow(
                     gid_of[()] = 0
                     keys_by_gid.append(())
                 buf_codes.append(np.zeros(len(vals), dtype=np.int64))
-            buf_vals.append(np.asarray(vals, dtype=np.float64))
+            buf_vals.append(vals)
             if weight_col:
-                buf_ws.append(
-                    np.asarray(
-                        batch.column(
-                            batch.schema.get_field_index(weight_col)
-                        ).to_numpy(zero_copy_only=False),
-                        dtype=np.float64,
-                    )
-                )
+                buf_ws.append(_value_numpy(batch.column(weight_col)))
             buffered += len(vals)
             if buffered >= flush_rows:
                 flush()
         if not spilled and buf_codes:
             # single-flush partition (the common case: flush_rows is 1M
-            # and partitions are sized ~rows/2·cores): encode blobs
-            # straight from the coalesced run arrays — no per-key
-            # TDigest objects, no states dict, no re-encode
+            # and partitions are sized ~rows/2·cores): blobs straight
+            # from the columnar core — for t-digest, from the coalesced
+            # run arrays with no per-key TDigest objects
             keys_out, blobs = spec.build_blobs_from_codes(
                 np.concatenate(buf_codes), keys_by_gid,
                 np.concatenate(buf_vals),
                 np.concatenate(buf_ws) if buf_ws else None,
             )
-            if not keys_out:
-                return
-            pdf = _keyed_blob_frame(keys_out, blobs, key_cols, out_col)
-            yield pa.RecordBatch.from_pandas(
-                pdf, schema=arrow_schema, preserve_index=False
-            )
+        else:
+            flush()
+            keys_out = list(states)
+            blobs = [spec.state_to_blob(st) for st in states.values()]
+        if not keys_out:
             return
-        flush()
-        if not states:
-            return
-        pdf = _keyed_blob_frame(
-            list(states.keys()),
-            [spec.state_to_blob(st) for st in states.values()],
-            key_cols, out_col,
-        )
+        pdf = _keyed_blob_frame(keys_out, blobs, key_cols, out_col)
         yield pa.RecordBatch.from_pandas(
             pdf, schema=arrow_schema, preserve_index=False
         )
@@ -853,51 +882,6 @@ def _canon_float_keys(df: DataFrame, key_cols: List[str]) -> DataFrame:
             )
     return df
 
-def _partial_builder(
-    spec: SketchSpec,
-    key_cols: List[str],
-    value_col: str,
-    weight_col: Optional[str],
-    out_col: str,
-    flush_rows: int = _FLUSH_ROWS,
-) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        states: Dict[tuple, object] = {}
-        buffer: List[pd.DataFrame] = []
-        buffered = 0
-
-        def flush():
-            nonlocal buffer, buffered
-            if not buffer:
-                return
-            pdf = buffer[0] if len(buffer) == 1 else pd.concat(
-                buffer, ignore_index=True
-            )
-            built = spec.build_groups(pdf, key_cols, value_col, weight_col)
-            for key, st in built.items():
-                prev = states.get(key)
-                states[key] = st if prev is None else spec.merge_states(
-                    prev, st
-                )
-            buffer = []
-            buffered = 0
-
-        for pdf in batches:
-            buffer.append(pdf)
-            buffered += len(pdf)
-            if buffered >= flush_rows:
-                flush()
-        flush()
-        if not states:
-            return
-        yield _keyed_blob_frame(
-            list(states.keys()),
-            [spec.state_to_blob(st) for st in states.values()],
-            key_cols, out_col,
-        )
-
-    return build
-
 
 def _partition_merger(
     spec: SketchSpec, key_cols: List[str], out_col: str
@@ -965,24 +949,7 @@ def sketch_agg(
     """
     key_cols = list(keys) if keys else []
     out_col = out_col or spec.name
-    # dedupe: a key column may double as the value column
-    proj = list(dict.fromkeys(
-        key_cols + [value_col] + ([weight_col] if weight_col else [])
-    ))
-    src = df.select(*proj)  # column pruning reaches the scan
-
-    # Specs that SKIP null values (all hash-family companions) get the
-    # null filter pushed into the JVM. Semantically identical to their
-    # Python-side filtering, but load-bearing for correctness: Arrow
-    # hands a nullable int64 column to pandas as float64 ONLY in batches
-    # that contain a null, so the same value would hash as int64 in one
-    # partition and float64 in another — partition-layout-dependent
-    # sketches. With the JVM filter every batch arrives in the column's
-    # native dtype. (t-digest keeps nulls flowing to Python: its
-    # on_invalid='error' contract must RAISE on them, and its values
-    # are cast to float64 anyway.)
-    if getattr(spec, "skips_null_values", False):
-        src = src.where(F.col(value_col).isNotNull())
+    src = _project_input(df, key_cols, value_col, weight_col, spec)
 
     # Partial-build cost is dominated by a fixed per-(flush, group) term
     # (pile coalescing + k-limit cap search), so many small partitions
@@ -1073,20 +1040,12 @@ def sketch_agg(
     ]
     out_schema = StructType(out_fields)
 
-    if getattr(spec, "supports_arrow", False) and getattr(
-        spec, "on_invalid", "error"
-    ) != "drop":
-        partials = src.mapInArrow(
-            _partial_builder_arrow(
-                spec, key_cols, value_col, weight_col, out_col, out_schema
-            ),
-            schema=out_schema,
-        )
-    else:
-        partials = src.mapInPandas(
-            _partial_builder(spec, key_cols, value_col, weight_col, out_col),
-            schema=out_schema,
-        )
+    partials = src.mapInArrow(
+        _partial_builder_arrow(
+            spec, key_cols, value_col, weight_col, out_col, out_schema
+        ),
+        schema=out_schema,
+    )
 
     if single_phase:
         # the by-key rebalance made every group local to one partition:

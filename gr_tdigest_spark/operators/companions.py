@@ -1,6 +1,8 @@
 """SketchSpec adapters for the companion sketches (HLL / CMS / Bloom /
-KLL) — each plugs the kernel monoid into the shared two-phase
-``sketch_agg`` plan (see operators/agg.py), plus convenience aggregates.
+KLL / MinHash / bottom-k / weighted bottom-k) — each plugs its kernel
+monoid into the shared two-phase ``sketch_agg`` plan through one
+columnar ``build_from_codes`` (see operators/agg.py), plus convenience
+aggregates.
 """
 
 from __future__ import annotations
@@ -50,8 +52,7 @@ __all__ = [
 def _missing_mask(arr: np.ndarray):
     """Keep-mask for missing values (None/NaN), or None when the dtype
     cannot hold them. THE single definition of companion-sketch missing
-    semantics — the per-group path (_to_numpy), the weighted CMS path,
-    and the vectorized builders all route through it."""
+    semantics: every build path routes through ``_drop_missing``."""
     if arr.dtype == object:
         return np.array([v is not None and v == v for v in arr],
                         dtype=bool)
@@ -60,11 +61,17 @@ def _missing_mask(arr: np.ndarray):
     return None
 
 
-def _to_numpy(values: np.ndarray) -> np.ndarray:
-    """Normalize pandas-extracted values for hashing (None→skip)."""
+def _drop_missing(values, *aligned):
+    """``values`` without its missing entries, followed by each array
+    aligned with it (group codes, weights; None passes through) masked
+    the same way."""
     arr = np.asarray(values)
     mask = _missing_mask(arr)
-    return arr if mask is None else arr[mask]
+    if mask is None:
+        return (arr, *aligned)
+    return (arr[mask], *(
+        None if a is None else np.asarray(a)[mask] for a in aligned
+    ))
 
 
 class _KernelSpec(SketchSpec):
@@ -73,15 +80,15 @@ class _KernelSpec(SketchSpec):
 
     kernel = None  # class with .from_bytes
     # nulls are SKIPPED (not errors) for the hash-family sketches;
-    # sketch_agg uses this to push the null filter into the JVM so
-    # pandas batch dtypes never flip int64→float64 on nullable columns
+    # the input projection pushes the null filter into the JVM so batch
+    # dtypes never flip int64→float64 on nullable columns
     skips_null_values = True
 
     def _new(self):
         raise NotImplementedError
 
     def clean_values(self, values, weights=None):
-        return _to_numpy(values), None
+        return _drop_missing(values)[0], None
 
     def build_state(self, values, weights=None):
         sk = self._new()
@@ -90,7 +97,7 @@ class _KernelSpec(SketchSpec):
         return sk
 
     def merge_states(self, a, b):
-        # partial states may be Sparse* (vectorized builders below);
+        # partial states may be Sparse* (columnar builders below);
         # every companion merge is commutative (max/add/or/min), so
         # either side may normalize
         if hasattr(a, "to_dense"):
@@ -101,48 +108,6 @@ class _KernelSpec(SketchSpec):
 
     def blob_to_state(self, blob: bytes):
         return self.kernel.from_bytes(blob)
-
-
-def _factorize_groups(pdf, key_cols, value_col, weight_col=None):
-    """Shared front half of the vectorized multi-group builders:
-    null/NaN-mask the value column, factorize the key tuple, and return
-    ``(codes, keys_by_gid, values, weights)`` — or None when nothing
-    survives. codes are int64 group ids aligned with values."""
-    from gr_tdigest_spark.operators.agg import _canon_key_tuple
-
-    arr = np.asarray(pdf[value_col].to_numpy())
-    ws = (
-        np.asarray(pdf[weight_col].to_numpy())
-        if weight_col is not None else None
-    )
-    mask = _missing_mask(arr)
-    if mask is not None:
-        if not mask.any():
-            return None
-        arr = arr[mask]
-        if ws is not None:
-            ws = ws[mask]
-    if not arr.size:
-        return None
-    if not key_cols:
-        return (
-            np.zeros(arr.size, dtype=np.int64), [()], arr, ws
-        )
-    key_arrays = [
-        (pdf[k].to_numpy() if mask is None else pdf[k].to_numpy()[mask])
-        for k in key_cols
-    ]
-    if len(key_cols) == 1:
-        codes, uniq = pd.factorize(
-            pd.Series(key_arrays[0]), use_na_sentinel=False
-        )
-        keys_by_gid = [_canon_key_tuple((u,)) for u in uniq]
-    else:
-        codes, uniq = pd.factorize(
-            pd.MultiIndex.from_arrays(key_arrays), use_na_sentinel=False
-        )
-        keys_by_gid = [_canon_key_tuple(tuple(u)) for u in uniq]
-    return codes.astype(np.int64), keys_by_gid, arr, ws
 
 
 def _group_bounds(gcodes: np.ndarray):
@@ -161,8 +126,8 @@ class HLLSpec(_KernelSpec):
     def _new(self):
         return HLL(p=self.p)
 
-    def build_groups(self, pdf, key_cols, value_col, weight_col):
-        """Vectorized multi-group build (the HLL analogue of the
+    def build_from_codes(self, codes, key_tuples, values, weights):
+        """Columnar multi-group build (the HLL analogue of the
         t-digest columnar partial): ONE hash pass over the whole batch,
         one sort, reduceat-max per (group, register) run — no per-group
         numpy-call overhead and no dense 2^p array per group (SparseHLL
@@ -171,10 +136,9 @@ class HLLSpec(_KernelSpec):
         from gr_tdigest_spark.sketches.hashing import hash64
         from gr_tdigest_spark.sketches.hll import SparseHLL, idx_rank
 
-        fac = _factorize_groups(pdf, key_cols, value_col)
-        if fac is None:
+        arr, codes = _drop_missing(values, codes)
+        if not arr.size:
             return {}
-        codes, keys_by_gid, arr, _ = fac
         idx, rank = idx_rank(hash64(arr), self.p)
         m = 1 << self.p
         combined = codes * m + idx
@@ -190,7 +154,7 @@ class HLLSpec(_KernelSpec):
         out = {}
         for i in range(gstarts.size):
             lo, hi = bounds[i], bounds[i + 1]
-            out[keys_by_gid[gcodes[lo]]] = SparseHLL(
+            out[key_tuples[gcodes[lo]]] = SparseHLL(
                 self.p, ridx[lo:hi], max_rank[lo:hi]
             )
         return out
@@ -210,13 +174,7 @@ class CMSSpec(_KernelSpec):
         """Weight-aware cleaning: CMS accepts (value, count) piles from
         the pre-aggregated plan — keep the weights aligned with the
         null/NaN filter."""
-        arr = np.asarray(values)
-        mask = _missing_mask(arr)
-        if mask is not None:
-            arr = arr[mask]
-            if weights is not None:
-                weights = np.asarray(weights)[mask]
-        return arr, (None if weights is None else np.asarray(weights))
+        return _drop_missing(values, weights)
 
     def build_state(self, values, weights=None):
         sk = self._new()
@@ -227,17 +185,16 @@ class CMSSpec(_KernelSpec):
                 sk.add(values)
         return sk
 
-    def build_groups(self, pdf, key_cols, value_col, weight_col):
-        """Vectorized multi-group build: one depth×n column pass, one
+    def build_from_codes(self, codes, key_tuples, values, weights):
+        """Columnar multi-group build: one depth×n column pass, one
         sort of (group, cell) keys, reduceat-sum of (pile) weights,
         SparseCMS states — the pre_aggregate pile path and the raw-row
         path both route through it."""
         from gr_tdigest_spark.sketches.cms import SparseCMS
 
-        fac = _factorize_groups(pdf, key_cols, value_col, weight_col)
-        if fac is None:
+        arr, codes, ws = _drop_missing(values, codes, weights)
+        if not arr.size:
             return {}
-        codes, keys_by_gid, arr, ws = fac
         w = (
             np.ones(arr.size, dtype=np.int64) if ws is None
             else np.asarray(ws).astype(np.int64)
@@ -260,14 +217,14 @@ class CMSSpec(_KernelSpec):
         cidx = ucells % cells
         totals = np.bincount(
             codes, weights=w.astype(np.float64),
-            minlength=len(keys_by_gid),
+            minlength=len(key_tuples),
         )
         gstarts, bounds = _group_bounds(gcodes)
         out = {}
         for i in range(gstarts.size):
             lo, hi = bounds[i], bounds[i + 1]
             g = int(gcodes[lo])
-            out[keys_by_gid[g]] = SparseCMS(
+            out[key_tuples[g]] = SparseCMS(
                 self.depth, self.width, self.seed,
                 cidx[lo:hi], sums[lo:hi], float(totals[g]),
             )
@@ -284,28 +241,27 @@ class BloomSpec(_KernelSpec):
     def _new(self):
         return BloomFilter(self.m_bits, self.k, self.seed)
 
-    def build_groups(self, pdf, key_cols, value_col, weight_col):
-        """Vectorized multi-group build: one k×n bit-position pass,
+    def build_from_codes(self, codes, key_tuples, values, weights):
+        """Columnar multi-group build: one k×n bit-position pass,
         one unique over (group, bit) keys, SparseBloom states — same
         shape (and same ~10× high-cardinality win) as the HLL builder."""
         from gr_tdigest_spark.sketches.bloom import SparseBloom
 
-        fac = _factorize_groups(pdf, key_cols, value_col)
-        if fac is None:
+        arr, codes = _drop_missing(values, codes)
+        if not arr.size:
             return {}
-        codes, keys_by_gid, arr, _ = fac
         pos = self._new()._bit_positions(arr).astype(np.int64)  # k × n
         combined = codes[None, :] * self.m_bits + pos
         uniq = np.unique(combined.ravel())  # sorted unique (group, bit)
         gcodes = uniq // self.m_bits
         bits = uniq % self.m_bits
-        n_per_group = np.bincount(codes, minlength=len(keys_by_gid))
+        n_per_group = np.bincount(codes, minlength=len(key_tuples))
         gstarts, bounds = _group_bounds(gcodes)
         out = {}
         for i in range(gstarts.size):
             lo, hi = bounds[i], bounds[i + 1]
             g = int(gcodes[lo])
-            out[keys_by_gid[g]] = SparseBloom(
+            out[key_tuples[g]] = SparseBloom(
                 self.m_bits, self.k, self.seed,
                 bits[lo:hi], int(n_per_group[g]),
             )
@@ -322,8 +278,8 @@ class MinHashSpec(_KernelSpec):
     def _new(self):
         return MinHash(k=self.k, seed=self.seed)
 
-    def build_groups(self, pdf, key_cols, value_col, weight_col):
-        """Vectorized multi-group build: hash the batch once, sort rows
+    def build_from_codes(self, codes, key_tuples, values, weights):
+        """Columnar multi-group build: hash the batch once, sort rows
         by group ONCE, then one `minimum.reduceat` per signature slot
         (slot-chunked to bound the k×n temp). Signatures are dense by
         nature (k uint64s), so states are plain MinHash objects; the
@@ -333,10 +289,9 @@ class MinHashSpec(_KernelSpec):
             dedupe_hash_pairs, hash_pair,
         )
 
-        fac = _factorize_groups(pdf, key_cols, value_col)
-        if fac is None:
+        arr, codes = _drop_missing(values, codes)
+        if not arr.size:
             return {}
-        codes, keys_by_gid, arr, _ = fac
         h1, h2 = hash_pair(arr, seed=self.seed)
         # dedupe (group, h1, h2) before the k×n slot expansion: slot
         # hashes derive from (h1, h2) alone and min ignores multiplicity,
@@ -358,11 +313,11 @@ class MinHashSpec(_KernelSpec):
                 hv = h1s[None, :] + rows[lo:hi] * h2s[None, :]
             # unsigned minimum per group run, per slot
             sigs[lo:hi] = np.minimum.reduceat(hv, gstarts, axis=1)
-        n_per_group = np.bincount(codes, minlength=len(keys_by_gid))
+        n_per_group = np.bincount(codes, minlength=len(key_tuples))
         out = {}
         for i in range(n_groups):
             g = int(codes_s[gstarts[i]])
-            out[keys_by_gid[g]] = MinHash(
+            out[key_tuples[g]] = MinHash(
                 self.k, self.seed, sigs[:, i].copy(),
                 float(n_per_group[g]),
             )
@@ -408,8 +363,8 @@ class BottomKSpec(_KernelSpec):
             codes_s, h_s, vals_s = codes_s[keep], h_s[keep], vals_s[keep]
         return codes_s, h_s, vals_s
 
-    def build_groups(self, pdf, key_cols, value_col, weight_col):
-        """Vectorized multi-group build (the per-conversation sampling
+    def build_from_codes(self, codes, key_tuples, values, weights):
+        """Columnar multi-group build (the per-conversation sampling
         shape at high group cardinality): hash the batch once, one
         lexsort over (group, priority), dedupe per the spec's rule
         (``_order_and_dedupe``), then each group's state is a pure
@@ -418,29 +373,25 @@ class BottomKSpec(_KernelSpec):
         truncation)."""
         from gr_tdigest_spark.sketches.bottomk import _canon_values
 
-        fac = _factorize_groups(pdf, key_cols, value_col, weight_col)
-        if fac is None:
+        arr, codes, ws = _drop_missing(values, codes, weights)
+        if not arr.size:
             return {}
-        codes, keys_by_gid, arr, ws = fac
         arr = _canon_values(np.asarray(arr))
         h = self._priority(arr, ws)
         codes_s, h_s, vals_s = self._order_and_dedupe(codes, h, arr)
-        n_per_group = np.bincount(codes, minlength=len(keys_by_gid))
-        bounds = np.searchsorted(codes_s, np.arange(len(keys_by_gid) + 1))
+        n_per_group = np.bincount(codes, minlength=len(key_tuples))
+        gstarts, bounds = _group_bounds(codes_s)
         out = {}
-        for g, key in enumerate(keys_by_gid):
-            b0, b1 = int(bounds[g]), int(bounds[g + 1])
-            if b1 <= b0:
-                continue
+        for i in range(gstarts.size):
+            b0, b1 = int(bounds[i]), int(bounds[i + 1])
+            g = int(codes_s[b0])
             hi = min(b1, b0 + self.k)
-            sk = self.kernel(
+            out[key_tuples[g]] = self.kernel(
                 self.k, self.seed,
                 h_s[b0:hi].astype(np.uint64).copy(),
                 np.asarray(vals_s[b0:hi], dtype=object).copy(),
                 float(n_per_group[g]),
             )
-            prev = out.get(key)
-            out[key] = sk if prev is None else self.merge_states(prev, sk)
         return out
 
 
@@ -522,8 +473,8 @@ class KLLSpec(_KernelSpec):
         v = np.asarray(values, dtype=np.float64)
         return v[np.isfinite(v)], None
 
-    def build_groups(self, pdf, key_cols, value_col, weight_col):
-        """Vectorized multi-group build: sort rows by group once, then
+    def build_from_codes(self, codes, key_tuples, values, weights):
+        """Columnar multi-group build: sort rows by group once, then
         every group at-or-under the sketch capacity (n ≤ k — the
         high-cardinality regime) is an UNCOMPACTED level-0 state, i.e.
         a pure slice; only over-capacity groups pay the kernel's
@@ -531,10 +482,9 @@ class KLLSpec(_KernelSpec):
         level-0 ordering, same compaction sequence)."""
         from gr_tdigest_spark.sketches.kll import KLL
 
-        fac = _factorize_groups(pdf, key_cols, value_col)
-        if fac is None:
+        arr, codes = _drop_missing(values, codes)
+        if not arr.size:
             return {}
-        codes, keys_by_gid, arr, _ = fac
         v = np.asarray(arr, dtype=np.float64)
         finite = np.isfinite(v)
         if not finite.all():
@@ -550,7 +500,7 @@ class KLLSpec(_KernelSpec):
         for i in range(gstarts.size):
             lo, hi = bounds[i], bounds[i + 1]
             vals = v_s[lo:hi]
-            key = keys_by_gid[int(codes_s[lo])]
+            key = key_tuples[int(codes_s[lo])]
             if vals.size <= self.k:
                 out[key] = KLL(self.k, self.seed,
                                [vals.copy()], float(vals.size))

@@ -174,7 +174,7 @@ class BloomFilter:
 class SparseBloom:
     """Lightweight partial state: sorted unique set-bit positions for
     ONE group, produced by the vectorized multi-group builder
-    (BloomSpec.build_groups). ``to_bytes`` emits the identical blob a
+    (BloomSpec.build_from_codes). ``to_bytes`` emits the identical blob a
     dense filter with the same bits would (positions are sorted,
     matching the unpackbits scan order)."""
 

@@ -199,7 +199,7 @@ class CMS:
 class SparseCMS:
     """Lightweight partial state: sorted unique flat cell indices +
     counts for ONE group, produced by the vectorized multi-group
-    builder (CMSSpec.build_groups). ``to_bytes`` emits the identical
+    builder (CMSSpec.build_from_codes). ``to_bytes`` emits the identical
     blob a dense table with the same cells would (indices sorted,
     matching flatnonzero order)."""
 

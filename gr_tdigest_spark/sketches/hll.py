@@ -164,7 +164,7 @@ class HLL:
 class SparseHLL:
     """Lightweight partial state: sorted unique register indices + ranks
     for ONE group, produced by the vectorized multi-group builder
-    (HLLSpec.build_groups). Never allocates the dense 2^p array unless
+    (HLLSpec.build_from_codes). Never allocates the dense 2^p array unless
     a cross-flush merge or a dense encoding actually needs it — at
     150k-group partials that is the difference between kilobytes and
     gigabytes of transient state. ``to_bytes`` emits the IDENTICAL blob

@@ -30,9 +30,9 @@ from __future__ import annotations
 import os
 import time
 import uuid
-from typing import Iterator, List, Optional, Sequence
+from typing import List, Optional, Sequence
 
-import pandas as pd
+import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
@@ -41,7 +41,7 @@ from pyspark.sql.types import (
 )
 
 from gr_tdigest_spark.operators.agg import (
-    SketchSpec, _partition_merger, TDigestSpec,
+    SketchSpec, _partial_builder_arrow, _partition_merger, _project_input,
 )
 from gr_tdigest_spark.sources.tables import (
     drop_table, is_table_ref, read_table, write_table,
@@ -111,14 +111,9 @@ def build_partials_checkpointed(
         _clear_partials(spark, ckpt_dir)
         done = set()
 
-    proj = key_cols + [value_col] + ([weight_col] if weight_col else [])
-    src = df.select(*proj)
-    # same JVM null filter as sketch_agg (agg.py): without it a nullable
-    # int64 column reaches pandas as float64 only in null-bearing shard
-    # frames, so identical values hash differently per shard — the
-    # checkpointed blobs would disagree with sketch_agg's
-    if getattr(spec, "skips_null_values", False):
-        src = src.where(F.col(value_col).isNotNull())
+    # the same projection, null filter and partial builder as
+    # sketch_agg, with shard_id as the leading key column
+    src = _project_input(df, key_cols, value_col, weight_col, spec)
     # deterministic sharding: hash of keys (or value for global aggs)
     shard_on = key_cols if key_cols else [value_col]
     src = src.withColumn(
@@ -129,54 +124,54 @@ def build_partials_checkpointed(
         src = src.where(~F.col("shard_id").isin(sorted(done)))
     src = src.repartition(n_shards, "shard_id")
 
-    out_schema = StructType(
+    part_schema = StructType(
         [StructField("shard_id", IntegerType(), False)]
         + [src.schema[k] for k in key_cols]
-        + [
-            StructField(out_col, BinaryType(), True),
-            StructField("rows_ingested", LongType(), False),
-            StructField("n_keys", LongType(), False),
-            StructField("wall_ms", DoubleType(), False),
-            StructField("attempt", StringType(), False),
-        ]
+        + [StructField(out_col, BinaryType(), True)]
     )
+    out_schema = StructType(part_schema.fields + [
+        StructField("rows_ingested", LongType(), False),
+        StructField("n_keys", LongType(), False),
+        StructField("wall_ms", DoubleType(), False),
+        StructField("attempt", StringType(), False),
+    ])
+    build_partials = _partial_builder_arrow(
+        spec, ["shard_id"] + key_cols, value_col, weight_col, out_col,
+        part_schema,
+    )
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    arrow_schema = to_arrow_schema(out_schema)
+
+    def build(batches):
+        """Partials of every shard in the partition, plus per-shard
+        lineage: rows ingested, keys built, wall time, attempt id."""
+        import pyarrow as pa
+
         t0 = time.perf_counter()
-        frames: dict[int, list] = {}
-        rows = 0
-        for pdf in batches:
-            rows += len(pdf)
-            for sid, sub in pdf.groupby("shard_id", sort=False):
-                frames.setdefault(int(sid), []).append(
-                    sub.drop(columns=["shard_id"])
-                )
-        for sid, subs in frames.items():
-            pdf = pd.concat(subs, ignore_index=True)
-            states = spec.build_groups(pdf, key_cols, value_col, weight_col)
-            wall = (time.perf_counter() - t0) * 1000.0
-            out_rows = [
-                dict(zip(key_cols, key))
-                | {
-                    "shard_id": sid,
-                    out_col: spec.state_to_blob(st),
-                    "rows_ingested": len(pdf),
-                    "n_keys": len(states),
-                    "wall_ms": wall,
-                    "attempt": attempt,
-                }
-                for key, st in states.items()
-            ]
-            if out_rows:
-                yield pd.DataFrame(
-                    out_rows,
-                    columns=["shard_id"] + key_cols + [
-                        out_col, "rows_ingested", "n_keys", "wall_ms",
-                        "attempt",
-                    ],
-                )
+        rows = np.zeros(n_shards, dtype=np.int64)
 
-    partials = src.mapInPandas(build, schema=out_schema)
+        def counted():
+            for batch in batches:
+                np.add(rows, np.bincount(
+                    batch.column("shard_id").to_numpy(), minlength=n_shards
+                ), out=rows)
+                yield batch
+
+        for part in build_partials(counted()):
+            sid = part.column("shard_id").to_numpy()
+            n_keys = np.bincount(sid, minlength=n_shards)
+            wall = (time.perf_counter() - t0) * 1000.0
+            yield pa.RecordBatch.from_arrays(
+                part.columns + [
+                    pa.array(rows[sid]), pa.array(n_keys[sid]),
+                    pa.array(np.full(sid.size, wall)),
+                    pa.array([attempt] * sid.size, pa.string()),
+                ],
+                schema=arrow_schema,
+            )
+
+    partials = src.mapInArrow(build, schema=out_schema)
     write_table(partials, _partials_path(ckpt_dir), mode="append")
     # report the shards actually written by THIS attempt (a shard with no
     # data never materializes and needs no processing)
@@ -223,11 +218,9 @@ def checkpoint_lineage(spark: SparkSession, ckpt_dir: str) -> DataFrame:
         p.groupBy("shard_id", "attempt")
         .agg(
             F.max("rows_ingested").alias("rows_ingested"),
-            F.countDistinct(*[c for c in ("attempt",)]).alias("_a"),
             F.count("*").alias("n_partial_rows"),
             F.max("wall_ms").alias("wall_ms"),
         )
-        .drop("_a")
         .orderBy("shard_id")
     )
 

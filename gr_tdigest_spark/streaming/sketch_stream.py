@@ -1,18 +1,20 @@
 """Generic stateful streaming sketch aggregation (north_rule §2.9).
 
-Any ``SketchSpec`` monoid (t-digest, HLL, CMS, Bloom, KLL) plugs into
-the same ``applyInPandasWithState`` plan: one sketch blob per key in
-the state store, updated per micro-batch, emitted in update mode. The
-batch path and the streaming path share the identical kernel monoid,
-so a streaming aggregate equals the batch aggregate over the same rows
-(tested), and watermark/window semantics compose by adding the window
-column to ``keys``.
+Any ``SketchSpec`` monoid (t-digest, HLL, CMS, Bloom, KLL, MinHash,
+bottom-k) plugs into the same ``applyInPandasWithState`` plan: one
+sketch blob per key in the state store, updated per micro-batch,
+emitted in update mode. The batch path and the streaming path share the
+input projection, the columnar ``build_from_codes`` and the kernel
+monoid, so a streaming aggregate equals the batch aggregate over the
+same rows (tested), and watermark/window semantics compose by adding
+the window column to ``keys``.
 """
 
 from __future__ import annotations
 
 from typing import Callable, Iterable, Optional, Sequence, Tuple
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -21,7 +23,7 @@ from pyspark.sql.types import (
     BinaryType, DoubleType, StructField, StructType,
 )
 
-from gr_tdigest_spark.operators.agg import SketchSpec
+from gr_tdigest_spark.operators.agg import SketchSpec, _project_input
 
 __all__ = ["sketch_stream_agg"]
 
@@ -63,21 +65,22 @@ def sketch_stream_agg(
         pdfs: Iterable[pd.DataFrame],
         state: GroupState,
     ) -> Iterable[pd.DataFrame]:
+        frames = [pdf[value_col].to_numpy() for pdf in pdfs]
+        vals = np.concatenate(frames) if frames else np.empty(0)
+        n_new = float(spec.clean_values(vals, None)[0].size)
+        built = spec.build_from_codes(
+            np.zeros(vals.size, dtype=np.int64), [key], vals, None
+        ).get(key)
         if state.exists:
             blob, rows = state.get
             sk = spec.blob_to_state(bytes(blob))
-            rows = float(rows)
-        else:
-            sk, rows = None, 0.0
-        for pdf in pdfs:
-            vals, _ = spec.clean_values(pdf[value_col].to_numpy(), None)
-            if vals.size == 0:
-                continue
-            rows += float(vals.size)
-            batch_sk = spec.build_state(vals, None)
-            sk = batch_sk if sk is None else spec.merge_states(sk, batch_sk)
-        if sk is None:
+            if built is not None:
+                sk = spec.merge_states(sk, built)
+            rows = float(rows) + n_new
+        elif built is None:
             return
+        else:
+            sk, rows = built, n_new
         blob = spec.state_to_blob(sk)
         state.update((blob, rows))
         row = dict(zip(key_cols, key))
@@ -85,18 +88,8 @@ def sketch_stream_agg(
         row["n"] = float(count_fn(sk)) if count_fn is not None else rows
         yield pd.DataFrame([row], columns=key_cols + [out_col, "n"])
 
-    src = stream_df.select(*key_cols, value_col)
-    # same JVM null filter as sketch_agg (agg.py): keeps micro-batch
-    # pandas dtypes at the column's native type, so a value ingested in
-    # a null-bearing micro-batch hashes identically to one ingested in
-    # a clean batch (otherwise HLL double-counts and Bloom probes can
-    # miss)
-    from pyspark.sql import functions as F
-
-    if getattr(spec, "skips_null_values", False):
-        src = src.where(F.col(value_col).isNotNull())
     return (
-        src
+        _project_input(stream_df, key_cols, value_col, None, spec)
         .groupBy(*key_cols)
         .applyInPandasWithState(
             update,

@@ -1,0 +1,50 @@
+"""Drive the production partial build without Spark: one pandas frame
+becomes one Arrow batch, fed to the same code a mapInArrow task runs.
+
+Tests compare these against ``SketchSpec.build_groups``, the per-group
+reference, so the two sides never share the code under test.
+"""
+
+import numpy as np
+import pyarrow as pa
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import BinaryType, StructField, StructType
+
+from gr_tdigest_spark.operators.agg import (
+    _encode_batch_keys,
+    _partial_builder_arrow,
+    _value_numpy,
+)
+
+
+def build_states(spec, pdf, key_cols, value_col, weight_col=None):
+    """``{key: state}`` from ``spec.build_from_codes`` over the batch's
+    dictionary-encoded keys and Spark-form values."""
+    batch = pa.RecordBatch.from_pandas(pdf, preserve_index=False)
+    if key_cols:
+        codes, keys = _encode_batch_keys(batch, key_cols)
+    else:
+        codes, keys = np.zeros(batch.num_rows, dtype=np.int64), [()]
+    ws = _value_numpy(batch.column(weight_col)) if weight_col else None
+    return spec.build_from_codes(
+        codes, keys, _value_numpy(batch.column(value_col)), ws
+    )
+
+
+def build_blobs(spec, pdf, key_cols, value_col, weight_col=None, **kw):
+    """``{key: blob}`` emitted by ``_partial_builder_arrow`` for the
+    frame as one partition (``kw`` reaches the builder, e.g.
+    ``flush_rows``)."""
+    batch = pa.RecordBatch.from_pandas(pdf, preserve_index=False)
+    types = from_arrow_schema(batch.schema)
+    schema = StructType(
+        [types[k] for k in key_cols] + [StructField("b", BinaryType())]
+    )
+    build = _partial_builder_arrow(
+        spec, key_cols, value_col, weight_col, "b", schema, **kw
+    )
+    out = {}
+    for part in build(iter([batch])):
+        for row in part.to_pylist():
+            out[tuple(row[k] for k in key_cols)] = row["b"]
+    return out

@@ -2,9 +2,11 @@
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
-from gr_tdigest_spark.operators.agg import TDigestSpec
+from arrow_build import build_states
+from gr_tdigest_spark.operators.agg import TDigestSpec, _encode_batch_keys
 from gr_tdigest_spark.sketches.tdigest import TDigest
 
 
@@ -23,7 +25,7 @@ def test_vectorized_matches_kernel_small_groups(max_size, policy):
     keys = rng.integers(0, 500, n)  # ~40 rows/group → fast path
     vals = np.round(rng.lognormal(3, 1, n), 2)
     spec = TDigestSpec(max_size=max_size, policy=policy)
-    built = spec.build_groups(_pdf(keys, vals), ["g"], "x", None)
+    built = build_states(spec, _pdf(keys, vals), ["g"], "x", None)
     for g in [0, 17, 499]:
         sel = vals[keys == g]
         ref = TDigest.from_values(sel, max_size=max_size, policy=policy)
@@ -46,7 +48,7 @@ def test_vectorized_matches_kernel_large_groups():
     keys = rng.integers(0, 3, n)  # 20k rows/group, max_size=100 → compress
     vals = rng.standard_normal(n)
     spec = TDigestSpec(max_size=100)
-    built = spec.build_groups(_pdf(keys, vals), ["g"], "x", None)
+    built = build_states(spec, _pdf(keys, vals), ["g"], "x", None)
     for g in range(3):
         sel = vals[keys == g]
         ref = TDigest.from_values(sel, max_size=100)
@@ -63,7 +65,7 @@ def test_vectorized_weighted_matches_kernel():
     vals = np.round(rng.uniform(0, 100, n), 1)
     ws = rng.integers(1, 10, n).astype(float)
     spec = TDigestSpec(max_size=500)
-    built = spec.build_groups(_pdf(keys, vals, ws), ["g"], "x", "w")
+    built = build_states(spec, _pdf(keys, vals, ws), ["g"], "x", "w")
     for g in [0, 25, 49]:
         sel = keys == g
         ref = TDigest.from_weighted(vals[sel], ws[sel], max_size=500)
@@ -85,7 +87,7 @@ def test_vectorized_multi_key_columns():
     vals = rng.uniform(size=n)
     pdf = pd.DataFrame({"g1": k1, "g2": k2, "x": vals})
     spec = TDigestSpec(max_size=200)
-    built = spec.build_groups(pdf, ["g1", "g2"], "x", None)
+    built = build_states(spec, pdf, ["g1", "g2"], "x", None)
     sel = vals[(k1 == 2) & (k2 == "b")]
     ref = TDigest.from_values(sel, max_size=200)
     got = built[(2, "b")]
@@ -96,13 +98,13 @@ def test_nan_raises_in_strict_mode():
     pdf = _pdf([1, 1, 2], [1.0, np.nan, 3.0])
     spec = TDigestSpec(max_size=100)
     with pytest.raises(ValueError, match="NaN"):
-        spec.build_groups(pdf, ["g"], "x", None)
+        build_states(spec, pdf, ["g"], "x", None)
 
 
 def test_drop_mode_filters():
     pdf = _pdf([1, 1, 2], [1.0, np.nan, 3.0])
     spec = TDigestSpec(max_size=100, on_invalid="drop")
-    built = spec.build_groups(pdf, ["g"], "x", None)
+    built = build_states(spec, pdf, ["g"], "x", None)
     assert built[(1,)].count == 1.0
     assert built[(2,)].count == 1.0
 
@@ -112,12 +114,28 @@ def test_f32_precision_vectorized():
     vals = rng.uniform(size=2000)
     pdf = _pdf(np.zeros(2000, dtype=int), vals)
     spec = TDigestSpec(max_size=20000, policy="off", precision="f32")
-    built = spec.build_groups(pdf, ["g"], "x", None)
+    built = build_states(spec, pdf, ["g"], "x", None)
     ref = TDigest.from_values(vals, max_size=20000, policy="off",
                               precision="f32")
     got = built[(0,)]
     assert got.precision == "f32"
     np.testing.assert_array_equal(got.means, ref.means)
+
+
+@pytest.mark.parametrize("n_cols", [2, 5])
+def test_encode_batch_keys_wide_key_space(n_cols):
+    """Five key columns of 10k distinct values each span 10^20 key
+    combinations, past int64: the mixed-radix combine must still give
+    every row its own key tuple (and nulls their own slot)."""
+    rng = np.random.default_rng(6)
+    n = 10_000
+    cols = {f"k{i}": rng.permutation(n).tolist() for i in range(n_cols)}
+    cols["k0"][::7] = [None] * len(cols["k0"][::7])
+    codes, keys = _encode_batch_keys(
+        pa.RecordBatch.from_pydict(cols), list(cols)
+    )
+    assert [keys[c] for c in codes] == list(zip(*cols.values()))
+    assert len(set(keys)) == len(keys) == n
 
 
 class TestColumnarBlobPath:

@@ -267,3 +267,27 @@ def test_checkpointed_hll_matches_sketch_agg_on_nullable_column(
         for r in sketch_agg(df, ["g"], "v", HLLSpec(p=10)).collect()
     }
     assert got == direct
+
+
+@pytest.mark.parametrize("spec_name", ["tdigest", "hll"])
+def test_key_column_doubling_as_value(spark, ckpt, spec_name):
+    """A key column may also be the value column: the checkpoint
+    projects its input like sketch_agg (deduped columns) and returns
+    sketch_agg's blobs."""
+    from gr_tdigest_spark.operators.agg import sketch_agg
+    from gr_tdigest_spark.operators.companions import HLLSpec
+
+    df = spark.range(0, 30, 1, 1).select((F.col("id") % 3).alias("x"))
+    spec = TDigestSpec() if spec_name == "tdigest" else HLLSpec(p=10)
+    got = {
+        r["x"]: bytes(r[spec.name])
+        for r in checkpointed_sketch_agg(
+            df, ["x"], "x", spec, ckpt, n_shards=4
+        ).collect()
+    }
+    direct = {
+        r["x"]: bytes(r[spec.name])
+        for r in sketch_agg(df, ["x"], "x", spec).collect()
+    }
+    assert sorted(got) == [0, 1, 2]
+    assert got == direct

@@ -958,9 +958,10 @@ class TestSparseWire:
 
 
 class TestVectorizedHLLBuild:
-    """HLLSpec.build_groups (one hash pass + sort + reduceat-max with
-    SparseHLL states) must be blob-exact vs the kernel's per-group
-    build, including multi-key grouping, null keys, and null values."""
+    """HLLSpec.build_from_codes (one hash pass + sort + reduceat-max
+    with SparseHLL states), run by hll_agg's partial builder, must be
+    blob-exact vs the kernel's per-group build, including multi-key
+    grouping, null keys, and null values."""
 
     def test_agg_equals_driver_build(self, spark, sf_dir):
         from gr_tdigest_spark.operators.companions import hll_agg

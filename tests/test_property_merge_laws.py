@@ -352,10 +352,12 @@ def test_wire_single_bitflip_raises_or_roundtrips(kind, pos, bit):
     ),
 )
 def test_vectorized_build_groups_equals_default_path(rows):
-    """Every spec's columnar build_groups must produce blob-identical
-    states to the base-class per-group path on arbitrary (group, value)
-    frames including null keys and null values."""
+    """Every spec's partial builder (Arrow batch → build_from_codes)
+    must emit blobs identical to the base-class per-group reference on
+    arbitrary (group, value) frames including null keys and null
+    values."""
     import pandas as pd
+    from arrow_build import build_blobs
     from gr_tdigest_spark.operators.agg import SketchSpec
     from gr_tdigest_spark.operators.companions import (
         BloomSpec, BottomKSpec, CMSSpec, HLLSpec, KLLSpec, MinHashSpec,
@@ -367,12 +369,12 @@ def test_vectorized_build_groups_equals_default_path(rows):
         CMSSpec(depth=3, width=64), MinHashSpec(k=16), KLLSpec(k=8),
         BottomKSpec(k=8),
     ):
-        got = spec.build_groups(pdf, ["g"], "v", None)
+        got = build_blobs(spec, pdf, ["g"], "v")
         exp = SketchSpec.build_groups(spec, pdf, ["g"], "v", None)
         assert set(got) == set(exp), type(spec).__name__
         for key in exp:
-            assert spec.state_to_blob(got[key]) == \
-                spec.state_to_blob(exp[key]), (type(spec).__name__, key)
+            assert got[key] == spec.state_to_blob(exp[key]), \
+                (type(spec).__name__, key)
 
 
 @settings(max_examples=_n(20), deadline=None)
@@ -390,14 +392,15 @@ def test_vectorized_cms_pile_build_equals_default_path(rows):
     """The weighted (pile) CMS columnar build matches the base-class
     weighted path exactly (counter tables and totals)."""
     import pandas as pd
+    from arrow_build import build_blobs
     from gr_tdigest_spark.operators.agg import SketchSpec
     from gr_tdigest_spark.operators.companions import CMSSpec
 
     pdf = pd.DataFrame(rows, columns=["g", "v", "w"])
     pdf["w"] = pdf["w"].astype(float)
     spec = CMSSpec(depth=3, width=64)
-    got = spec.build_groups(pdf, ["g"], "v", "w")
+    got = build_blobs(spec, pdf, ["g"], "v", "w")
     exp = SketchSpec.build_groups(spec, pdf, ["g"], "v", "w")
     assert set(got) == set(exp)
     for key in exp:
-        assert spec.state_to_blob(got[key]) == spec.state_to_blob(exp[key])
+        assert got[key] == spec.state_to_blob(exp[key])

@@ -855,10 +855,11 @@ class TestWeightedTieSemantics:
         assert win == want
 
     def test_spec_tie_collision_layout_independent(self):
-        """Drive the spec's build_groups directly with crafted race-key
-        collisions split across flushes in different orders — the merged
-        state must be identical (the r5 review's failure scenario)."""
+        """Drive the spec's build_from_codes directly with crafted
+        race-key collisions split across flushes in different orders —
+        the merged state must be identical."""
         import pandas as pd
+        from arrow_build import build_states
         from gr_tdigest_spark.operators.companions import (
             WeightedBottomKSpec,
         )
@@ -867,14 +868,14 @@ class TestWeightedTieSemantics:
         ids = [30, 10, 20, 40, 50]
         es = [0.5, 0.5, 0.5, 0.5, 7.0]  # four-way collision
         pdf = pd.DataFrame({"g": ["A"] * 5, "id": ids, "e": es})
-        whole = spec.build_groups(pdf, ["g"], "id", "e")[("A",)]
+        whole = build_states(spec, pdf, ["g"], "id", "e")[("A",)]
         assert list(whole.values) == [10, 20, 30]
         for split in ([2, 5], [1, 3, 5], [4, 5]):
             prev = 0
             state = None
             for hi in split:
-                part = spec.build_groups(
-                    pdf.iloc[prev:hi], ["g"], "id", "e"
+                part = build_states(
+                    spec, pdf.iloc[prev:hi], ["g"], "id", "e"
                 ).get(("A",))
                 if part is not None:
                     state = part if state is None else \

@@ -1,0 +1,121 @@
+"""Blob digests of every partial-build surface, for byte-identity checks
+across commits.
+
+Builds each spec (t-digest in 'error', 'drop' and weighted form, HLL,
+CMS, weighted CMS piles, Bloom, KLL, MinHash, bottom-k, weighted
+bottom-k) over a fixture's lineitem table with three key sets (two
+string columns, one high-cardinality long, global) through
+``sketch_agg`` and ``checkpointed_sketch_agg``, and writes, per case,
+the sorted (key, sha256(blob)) list as JSON. A case that raises is
+recorded as ``["ERROR <type>"]``. Run it from the root of each checkout
+and diff the outputs:
+
+    python tools/blob_digests.py <sf_dir> <out.json>
+"""
+
+from __future__ import annotations
+
+import hashlib
+import json
+import os
+import sys
+import tempfile
+
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
+
+from pyspark.sql import SparkSession, functions as F  # noqa: E402
+
+from gr_tdigest_spark.operators.agg import (  # noqa: E402
+    TDigestSpec, sketch_agg,
+)
+from gr_tdigest_spark.operators.companions import (  # noqa: E402
+    BloomSpec, BottomKSpec, CMSSpec, HLLSpec, KLLSpec, MinHashSpec,
+    WeightedBottomKSpec,
+)
+from gr_tdigest_spark.sources.checkpoint import (  # noqa: E402
+    checkpointed_sketch_agg,
+)
+
+KEY_SETS = (["l_returnflag", "l_linestatus"], ["l_suppkey"], None)
+
+
+def cases():
+    """(name, spec, value column, weight column) per spec and column."""
+    return [
+        ("tdigest_error", TDigestSpec(max_size=100), "l_extendedprice", None),
+        ("tdigest_drop", TDigestSpec(max_size=100, on_invalid="drop"),
+         "x_bad", None),
+        ("tdigest_weighted", TDigestSpec(max_size=100), "l_quantity",
+         "pile_w"),
+        ("hll", HLLSpec(p=12), "l_orderkey", None),
+        ("hll", HLLSpec(p=12), "l_shipdate", None),
+        ("hll", HLLSpec(p=12), "l_returnflag", None),
+        ("cms", CMSSpec(depth=3, width=512), "l_partkey", None),
+        ("cms_piles", CMSSpec(depth=3, width=512), "l_partkey", "pile_w"),
+        ("bloom", BloomSpec(m_bits=1 << 14, k=3), "l_orderkey", None),
+        ("bloom", BloomSpec(m_bits=1 << 14, k=3), "l_shipdate", None),
+        ("kll", KLLSpec(k=64), "l_extendedprice", None),
+        ("kll", KLLSpec(k=64), "x_bad", None),
+        ("minhash", MinHashSpec(k=32), "l_partkey", None),
+        ("bottomk", BottomKSpec(k=16), "l_orderkey", None),
+        ("bottomk", BottomKSpec(k=16), "l_shipdate", None),
+        ("wbottomk", WeightedBottomKSpec(k=16), "l_orderkey", "race"),
+    ]
+
+
+def main(sf_dir: str, out: str) -> None:
+    spark = (
+        SparkSession.builder.master("local[4]")
+        .config("spark.sql.shuffle.partitions", "8")
+        .config("spark.sql.session.timeZone", "America/Los_Angeles")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+        "*",
+        # NULLs and NaNs for the 'drop' t-digest and KLL masking
+        F.when(F.col("l_linenumber") == 3, F.lit(None).cast("double"))
+        .when(F.col("l_linenumber") == 5, F.lit(float("nan")))
+        .otherwise(F.col("l_extendedprice")).alias("x_bad"),
+        (F.abs(F.col("l_discount")) + F.col("l_orderkey") * 1e-9)
+        .alias("race"),
+        (F.col("l_linenumber") % 3 + 1).cast("double").alias("pile_w"),
+    )
+    res = {}
+    with tempfile.TemporaryDirectory() as tmp:
+        for keys in KEY_SETS:
+            kn = "+".join(keys) if keys else "global"
+            for name, spec, col, w in cases():
+                for surface in ("agg", "ckpt"):
+                    case = f"{surface}/{name}/{kn}/{col}"
+                    try:
+                        if surface == "agg":
+                            df = sketch_agg(li, keys, col, spec,
+                                            weight_col=w, out_col="b")
+                        else:
+                            df = checkpointed_sketch_agg(
+                                li, keys, col, spec,
+                                os.path.join(tmp, case.replace("/", "_")),
+                                n_shards=8, weight_col=w, out_col="b",
+                                resume=False,
+                            )
+                        rows = sorted(
+                            [repr(tuple(r[k] for k in keys or [])),
+                             hashlib.sha256(bytes(r["b"])).hexdigest()]
+                            for r in df.collect()
+                        )
+                    except Exception as e:  # recorded, not fatal
+                        rows = [f"ERROR {type(e).__name__}"]
+                    res[case] = rows
+                    print(case, len(rows), hashlib.sha256(
+                        repr(rows).encode()).hexdigest()[:12], flush=True)
+    with open(out, "w") as f:
+        json.dump(res, f, indent=0)
+    spark.stop()
+
+
+if __name__ == "__main__":
+    main(*sys.argv[1:3])
