@@ -34,13 +34,17 @@ Design points for the 100 TB / 1000-executor shape:
 
 from __future__ import annotations
 
-from typing import Callable, Dict, Iterator, List, Optional, Sequence, Tuple
+from typing import (
+    Callable, Dict, Iterator, List, NamedTuple, Optional, Sequence, Tuple,
+)
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import BinaryType, StructField, StructType
+from pyspark.sql.types import (
+    BinaryType, DoubleType, FloatType, StructField, StructType,
+)
 
 from gr_tdigest_spark import validation
 from gr_tdigest_spark.sketches import wire as td_wire
@@ -50,18 +54,6 @@ __all__ = ["tdigest_agg", "sketch_agg", "SketchSpec", "TDigestSpec"]
 
 # Rows buffered per partition before a vectorized flush.
 _FLUSH_ROWS = 1 << 20
-
-
-def _keyed_blob_frame(
-    keys, blobs, key_cols: List[str], out_col: str
-) -> pd.DataFrame:
-    """Columnar frame construction — per-row dicts cost ~10µs/row at
-    100k+ keys."""
-    data = {}
-    for ci, name in enumerate(key_cols):
-        data[name] = [k[ci] for k in keys]
-    data[out_col] = list(blobs)
-    return pd.DataFrame(data, columns=key_cols + [out_col])
 
 
 def _canon_key(v):
@@ -505,10 +497,13 @@ def _project_input(
 def _encode_batch_keys(batch, key_cols: List[str]):
     """Dictionary-encode the key columns of an Arrow batch WITHOUT
     materializing Python objects per row: returns (local_codes int64,
-    local_key_tuples). Nulls get their own dictionary slot."""
+    local_key_tuples). Nulls get their own dictionary slot; no key
+    columns is the one global key ``()``."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
+    if not key_cols:
+        return np.zeros(batch.num_rows, dtype=np.int64), [()]
     per_col_idx = []
     per_col_vocab = []
     for name in key_cols:
@@ -561,96 +556,121 @@ def _value_numpy(col) -> np.ndarray:
     return s.to_numpy()
 
 
+class _PartitionBuild:
+    """One partition's partial build for a spec: key columns are
+    dictionary-encoded straight from each Arrow batch into
+    partition-wide group ids (no per-row Python objects), values go
+    from Arrow buffers to numpy (``_value_numpy``), and every
+    ``flush_rows`` buffered rows the spec's columnar
+    ``build_from_codes`` folds into per-key states."""
+
+    def __init__(self, spec: SketchSpec, key_cols: List[str],
+                 value_col: str, weight_col: Optional[str],
+                 flush_rows: int = _FLUSH_ROWS):
+        self.spec, self.key_cols = spec, key_cols
+        self.value_col, self.weight_col = value_col, weight_col
+        self.flush_rows = flush_rows
+        self.gid_of: Dict[tuple, int] = {}
+        self.keys_by_gid: List[tuple] = []
+        self.states: Dict[tuple, object] = {}
+        self._codes: List[np.ndarray] = []
+        self._vals: List[np.ndarray] = []
+        self._ws: List[np.ndarray] = []
+        self._buffered = 0
+        self._spilled = False  # True once any flush built states
+
+    def add(self, batch) -> np.ndarray:
+        """Buffer one Arrow batch; returns its rows' group ids."""
+        local_codes, local_keys = _encode_batch_keys(batch, self.key_cols)
+        lookup = np.empty(len(local_keys), dtype=np.int64)
+        for li, key in enumerate(local_keys):
+            gid = self.gid_of.get(key)
+            if gid is None:
+                gid = self.gid_of[key] = len(self.keys_by_gid)
+                self.keys_by_gid.append(key)
+            lookup[li] = gid
+        codes = lookup[local_codes]
+        self._codes.append(codes)
+        self._vals.append(_value_numpy(batch.column(self.value_col)))
+        if self.weight_col:
+            self._ws.append(_value_numpy(batch.column(self.weight_col)))
+        self._buffered += len(codes)
+        if self._buffered >= self.flush_rows:
+            self._flush()
+        return codes
+
+    def _buffer(self) -> tuple:
+        return (
+            np.concatenate(self._codes), self.keys_by_gid,
+            np.concatenate(self._vals),
+            np.concatenate(self._ws) if self._ws else None,
+        )
+
+    def _flush(self) -> None:
+        if not self._codes:
+            return
+        self._spilled = True
+        for key, st in self.spec.build_from_codes(*self._buffer()).items():
+            prev = self.states.get(key)
+            self.states[key] = st if prev is None else (
+                self.spec.merge_states(prev, st)
+            )
+        self._codes, self._vals, self._ws = [], [], []
+        self._buffered = 0
+
+    def final_states(self) -> Dict[tuple, object]:
+        """``{key: state}`` of the partition's non-empty groups."""
+        self._flush()
+        return self.states
+
+    def blobs(self) -> Tuple[list, list]:
+        """``(keys, blobs)`` of the partition's non-empty groups."""
+        if not self._spilled and self._codes:
+            # single-flush partition (the common case: flush_rows is 1M
+            # and partitions are sized ~rows/2·cores): blobs straight
+            # from the columnar core — for t-digest, from the coalesced
+            # run arrays with no per-key TDigest objects
+            return self.spec.build_blobs_from_codes(*self._buffer())
+        states = self.final_states()
+        return list(states), [self.spec.state_to_blob(s)
+                              for s in states.values()]
+
+
+def _rows_batch(keys: list, tail: list, arrow_schema):
+    """Arrow batch of the key tuples' columns followed by the ``tail``
+    columns (lists), typed by ``arrow_schema``."""
+    import pyarrow as pa
+
+    n_keys = len(arrow_schema) - len(tail)
+    cols = [[key[i] for key in keys] for i in range(n_keys)] + tail
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+
+
 def _partial_builder_arrow(
     spec: SketchSpec,
     key_cols: List[str],
     value_col: str,
     weight_col: Optional[str],
-    out_col: str,
     out_schema: StructType,
     flush_rows: int = _FLUSH_ROWS,
 ):
-    """mapInArrow partial builder for every spec: key columns stay
-    dictionary-encoded end to end (no per-row Python objects), values
-    go from Arrow buffers to numpy (``_value_numpy``) and into the
-    spec's columnar ``build_from_codes``."""
-    import pyarrow as pa
+    """mapInArrow partial builder for every spec: one ``(keys, blob)``
+    row per non-empty group of the partition."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     arrow_schema = to_arrow_schema(out_schema)
 
     def build(batches):
-        gid_of: Dict[tuple, int] = {}
-        keys_by_gid: List[tuple] = []
-        states: Dict[tuple, object] = {}
-        buf_codes: List[np.ndarray] = []
-        buf_vals: List[np.ndarray] = []
-        buf_ws: List[np.ndarray] = []
-        buffered = 0
-        spilled = False  # True once any intermediate flush built states
-
-        def flush():
-            nonlocal buffered, spilled
-            if not buf_codes:
-                return
-            spilled = True
-            codes = np.concatenate(buf_codes)
-            vals = np.concatenate(buf_vals)
-            ws = np.concatenate(buf_ws) if buf_ws else None
-            built = spec.build_from_codes(codes, keys_by_gid, vals, ws)
-            for key, st in built.items():
-                prev = states.get(key)
-                states[key] = st if prev is None else spec.merge_states(
-                    prev, st
-                )
-            buf_codes.clear()
-            buf_vals.clear()
-            buf_ws.clear()
-            buffered = 0
-
+        part = _PartitionBuild(spec, key_cols, value_col, weight_col,
+                               flush_rows)
         for batch in batches:
-            vals = _value_numpy(batch.column(value_col))
-            if key_cols:
-                local_codes, local_keys = _encode_batch_keys(batch, key_cols)
-                lookup = np.empty(len(local_keys), dtype=np.int64)
-                for li, key in enumerate(local_keys):
-                    gid = gid_of.get(key)
-                    if gid is None:
-                        gid = gid_of[key] = len(keys_by_gid)
-                        keys_by_gid.append(key)
-                    lookup[li] = gid
-                buf_codes.append(lookup[local_codes])
-            else:
-                if not keys_by_gid:
-                    gid_of[()] = 0
-                    keys_by_gid.append(())
-                buf_codes.append(np.zeros(len(vals), dtype=np.int64))
-            buf_vals.append(vals)
-            if weight_col:
-                buf_ws.append(_value_numpy(batch.column(weight_col)))
-            buffered += len(vals)
-            if buffered >= flush_rows:
-                flush()
-        if not spilled and buf_codes:
-            # single-flush partition (the common case: flush_rows is 1M
-            # and partitions are sized ~rows/2·cores): blobs straight
-            # from the columnar core — for t-digest, from the coalesced
-            # run arrays with no per-key TDigest objects
-            keys_out, blobs = spec.build_blobs_from_codes(
-                np.concatenate(buf_codes), keys_by_gid,
-                np.concatenate(buf_vals),
-                np.concatenate(buf_ws) if buf_ws else None,
-            )
-        else:
-            flush()
-            keys_out = list(states)
-            blobs = [spec.state_to_blob(st) for st in states.values()]
-        if not keys_out:
-            return
-        pdf = _keyed_blob_frame(keys_out, blobs, key_cols, out_col)
-        yield pa.RecordBatch.from_pandas(
-            pdf, schema=arrow_schema, preserve_index=False
-        )
+            part.add(batch)
+        keys, blobs = part.blobs()
+        if keys:
+            yield _rows_batch(keys, [blobs], arrow_schema)
 
     return build
 
@@ -701,25 +721,6 @@ def _conf_bytes(spark, key: str, default: int) -> int:
             f"{key} must be a byte count (e.g. 67108864 or '64m'), "
             f"got {raw!r}"
         )
-
-
-def _rebalance_coarse_scan(src: DataFrame, by_cols: List[str]) -> DataFrame:
-    """Shared small-input rebalance gate for Python passes outside
-    sketch_agg (e.g. cms_topk's candidate tracker): hash-repartition an
-    exchange-free input that has fewer partitions than task slots and a
-    small Catalyst size estimate. One gate, one conf
-    (_REBALANCE_CONF), so the disable/threshold semantics cannot
-    drift between call sites."""
-    spark = src.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    n_parts, est = _probe_input(src)
-    if n_parts is None or n_parts >= target:
-        return src
-    thr = _conf_bytes(spark, _REBALANCE_CONF,
-                      _REBALANCE_MB_PER_SLOT * (1 << 20) * target)
-    if thr > 0 and est is not None and 0 < est <= thr:
-        return src.repartition(_rebalance_parts(est, target), *by_cols)
-    return src
 
 
 def _rebalance_parts(est: int, target: int) -> int:
@@ -868,11 +869,9 @@ def _canon_float_keys(df: DataFrame, key_cols: List[str]) -> DataFrame:
     without it a NaN key and a NULL key would land in different
     partitions and the single-phase plan would emit two rows for the
     one canonical group the two-phase merger produces."""
-    from pyspark.sql.types import DoubleType as _D, FloatType as _F
-
     for c in key_cols:
         dt = df.schema[c].dataType
-        if isinstance(dt, (_F, _D)):
+        if isinstance(dt, (FloatType, DoubleType)):
             col = F.col(c)
             df = df.withColumn(
                 c,
@@ -881,6 +880,94 @@ def _canon_float_keys(df: DataFrame, key_cols: List[str]) -> DataFrame:
                 .otherwise(col),
             )
     return df
+
+
+class AggPlan(NamedTuple):
+    """How the partial stage's input is laid out: ``kind`` is
+    'by_key' (hash-repartition by the keys into ``n_parts``; every
+    group is local to one partition, so the plan is single-phase),
+    'spread' (hash-spread repartition into ``n_parts``) or 'coalesce'
+    (merge down to at most ``n_parts``, no shuffle)."""
+    kind: str
+    n_parts: int
+
+
+def choose_agg_plan(*, n_parts: Optional[int], est: Optional[int],
+                    slots: int, max_bytes: int, keyed: bool,
+                    float_overlap: bool, salted: bool,
+                    enough_keys: Callable[[], bool]) -> AggPlan:
+    """The rebalance gate of every partial build, from plain facts.
+
+    The partial stage runs at ~1 partition per core: its cost is a
+    fixed per-(flush, group) term, so many small partitions anti-scale.
+    coalesce() cannot SPLIT a too-coarse input, though, and a
+    single-row-group parquet file would push the whole stage through
+    one Python task, so a scan with fewer partitions than ``slots`` is
+    repartitioned right after the read.
+    ``n_parts`` is None for streaming or already-shuffled inputs;
+    ``max_bytes`` 0 disables the rebalance; ``enough_keys`` is lazy,
+    since it costs a sampled probe job.
+
+    By key (single-phase: no blob shuffle, no merge stage) moves raw
+    rows, so it needs a small input, and above 24 MB ≥ 2·slots keys,
+    since its parallelism is capped at the key count. A tiny keyless
+    input keeps its serial task: the added exchange + AQE stage
+    (~0.4 s) costs more than the build. A big input is spread only
+    when that buys ≥ 4× parallelism.
+    """
+    if salted or n_parts is None or n_parts >= slots or max_bytes <= 0:
+        return AggPlan("coalesce", 2 * slots)
+    small = est is not None and est <= max_bytes
+    # a float key doubling as the value would have its -0.0/NaN
+    # canonicalization leak into the aggregated VALUES on the by-key
+    # path — such (contrived) aggregates stay two-phase
+    if keyed and small and not float_overlap and (
+            est <= _SINGLE_PHASE_SMALL or enough_keys()):
+        return AggPlan("by_key", _rebalance_parts(est, slots))
+    if not keyed and est is not None and est <= _GLOBAL_REBALANCE_FLOOR:
+        return AggPlan("coalesce", 2 * slots)
+    if small:
+        return AggPlan("spread", _rebalance_parts(est, slots))
+    if n_parts * 4 <= slots:
+        return AggPlan("spread", 2 * slots)
+    return AggPlan("coalesce", 2 * slots)
+
+
+def _rebalance_input(
+    src: DataFrame,
+    key_cols: List[str],
+    value_col: str,
+    weight_col: Optional[str] = None,
+    salted: bool = False,
+) -> Tuple[DataFrame, bool]:
+    """Apply ``choose_agg_plan`` to a projected input: returns the
+    re-laid-out input and whether the plan is single-phase. Streaming
+    inputs take the classic path untouched (.rdd/stats are batch-only
+    introspection)."""
+    spark = src.sparkSession
+    slots = spark.sparkContext.defaultParallelism
+    n_parts, est = (None, None) if salted else _probe_input(src)
+    plan = choose_agg_plan(
+        n_parts=n_parts, est=est, slots=slots,
+        max_bytes=_conf_bytes(spark, _REBALANCE_CONF,
+                              _REBALANCE_MB_PER_SLOT * (1 << 20) * slots),
+        keyed=bool(key_cols),
+        float_overlap=any(
+            c in (value_col, weight_col)
+            and isinstance(src.schema[c].dataType, (FloatType, DoubleType))
+            for c in key_cols
+        ),
+        salted=salted,
+        enough_keys=lambda: _enough_keys_for_by_key(src, key_cols, est,
+                                                    slots),
+    )
+    if plan.kind == "by_key":
+        src = _canon_float_keys(src, key_cols)
+        return src.repartition(plan.n_parts, *key_cols), True
+    if plan.kind == "spread":
+        return src.repartition(plan.n_parts, _spread_expr(
+            src, key_cols, value_col, weight_col)), False
+    return src.coalesce(plan.n_parts), False
 
 
 def _partition_merger(
@@ -925,8 +1012,12 @@ def _partition_merger(
             else:
                 states = [spec.blob_to_state(b) for b in bl]
                 out_blobs.append(spec.state_to_blob(spec.merge_many(states)))
-        yield _keyed_blob_frame(
-            list(blobs_by_key.keys()), out_blobs, key_cols, out_col
+        # columnar: per-row dicts cost ~10 µs/row at 100k+ keys
+        keys = list(blobs_by_key)
+        yield pd.DataFrame(
+            {**{c: [k[i] for k in keys] for i, c in enumerate(key_cols)},
+             out_col: out_blobs},
+            columns=key_cols + [out_col],
         )
 
     return merge
@@ -950,90 +1041,12 @@ def sketch_agg(
     key_cols = list(keys) if keys else []
     out_col = out_col or spec.name
     src = _project_input(df, key_cols, value_col, weight_col, spec)
-
-    # Partial-build cost is dominated by a fixed per-(flush, group) term
-    # (pile coalescing + k-limit cap search), so many small partitions
-    # anti-scale. Run the partial stage at ~1 partition per core: fewer,
-    # bigger flushes amortize the fixed term; the 1M-row flush threshold
-    # bounds memory.
-    #
-    # coalesce() cannot SPLIT a too-coarse input — and a single-row-group
-    # parquet file (or any driver-synthesized DataFrame with fewer
-    # partitions than cores) serializes the whole partial stage through
-    # one Python task. When the scan has fewer partitions than task
-    # slots, rebalance it (guide §2.5 input skew: "repartition
-    # immediately after the read"):
-    #
-    # - keyed + small input (≤ 64 MB/slot by Catalyst's estimate, conf
-    #   below; above 24 MB a sampled key-cardinality probe must also
-    #   find ≥ 2·slots distinct keys, since by-key parallelism is
-    #   capped at the key count): hash-repartition the raw rows BY THE
-    #   KEYS and run SINGLE-PHASE — every group is completely local to
-    #   one partition, so the partials are final and the blob shuffle
-    #   + merge stage disappear (one Exchange total, one Python
-    #   stage). The shuffle moves raw rows, which is exactly why it is
-    #   gated on the input being small; at scale the sketch-sized
-    #   two-phase shuffle wins.
-    # - otherwise: deterministic hash-spread repartition
-    #   (xxhash64(keys…, value) — NOT round-robin, whose keyless form
-    #   sorts the map side serially), classic two-phase; only sketch
-    #   blobs reshuffle after the partials.
-    #
-    # Streaming inputs take the classic path untouched (.rdd/stats are
-    # batch-only introspection).
-    target = df.sparkSession.sparkContext.defaultParallelism
-    single_phase = False
-    has_salt = bool(salt_buckets and salt_buckets > 1)
     # salted aggregates are the caller's explicit extreme-skew plan —
-    # leave their shape alone (salt hop + de-salt hop, pinned)
-    n_parts, est = (None, None) if has_salt else _probe_input(src)
-    if n_parts is not None and n_parts < target:
-        thr = _conf_bytes(df.sparkSession, _REBALANCE_CONF,
-                          _REBALANCE_MB_PER_SLOT * (1 << 20) * target)
-        if thr <= 0:
-            est = None
-        # a float/double key column doubling as the value (or weight)
-        # column would have its -0.0/NaN canonicalization leak into the
-        # aggregated VALUES on the single-phase path — keep such
-        # (contrived) aggregates on the two-phase plan, whose semantics
-        # are the historical ones
-        from pyspark.sql.types import DoubleType as _D, FloatType as _F
-        float_overlap = any(
-            c in (value_col, weight_col)
-            and isinstance(src.schema[c].dataType, (_F, _D))
-            for c in key_cols
-        )
-        if key_cols and not float_overlap and est is not None \
-                and est <= thr \
-                and (est <= _SINGLE_PHASE_SMALL
-                     or _enough_keys_for_by_key(src, key_cols, est,
-                                                target)):
-            src = _canon_float_keys(src, key_cols)
-            src = src.repartition(_rebalance_parts(est, target), *key_cols)
-            single_phase = True
-        elif not key_cols and est is not None \
-                and est <= _GLOBAL_REBALANCE_FLOOR:
-            # keyless and tiny: the extra exchange + AQE stage costs
-            # more than the serial build it would parallelize
-            # (measured: a 600 k-row global build is ~0.35 s serial;
-            # the added hop is ~0.4 s)
-            src = src.coalesce(2 * target)
-        elif thr > 0 and est is not None and est <= thr:
-            src = src.repartition(_rebalance_parts(est, target),
-                                  _spread_expr(src, key_cols, value_col,
-                                               weight_col))
-        elif thr > 0 and n_parts * 4 <= target:
-            # big (or unestimable) input in FAR too few partitions: the
-            # raw-row shuffle buys ≥ 4× parallelism. A marginally
-            # coarse scan (e.g. 30 partitions on 32 slots) is left
-            # alone — seconds of shuffle for a few % of parallelism
-            src = src.repartition(2 * target,
-                                  _spread_expr(src, key_cols, value_col,
-                                               weight_col))
-        else:
-            src = src.coalesce(2 * target)
-    else:
-        src = src.coalesce(2 * target)
+    # their shape (salt hop + de-salt hop) is left alone
+    src, single_phase = _rebalance_input(
+        src, key_cols, value_col, weight_col,
+        salted=bool(salt_buckets and salt_buckets > 1),
+    )
 
     out_fields = [src.schema[k] for k in key_cols] + [
         StructField(out_col, BinaryType(), True)
@@ -1042,7 +1055,7 @@ def sketch_agg(
 
     partials = src.mapInArrow(
         _partial_builder_arrow(
-            spec, key_cols, value_col, weight_col, out_col, out_schema
+            spec, key_cols, value_col, weight_col, out_schema
         ),
         schema=out_schema,
     )

@@ -8,6 +8,7 @@ aggregates.
 from __future__ import annotations
 
 from dataclasses import replace
+from functools import reduce
 from typing import Optional, Sequence
 
 import numpy as np
@@ -17,16 +18,22 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
+    BinaryType,
     BooleanType,
     DoubleType,
     LongType,
     StringType,
+    StructField,
+    StructType,
 )
 
 from gr_tdigest_spark.functions import (
     _COMPANION_PROBES, _PROBES, _as_str, _merge_udf, _register,
 )
-from gr_tdigest_spark.operators.agg import SketchSpec, sketch_agg
+from gr_tdigest_spark.operators.agg import (
+    SketchSpec, _encode_batch_keys, _PartitionBuild, _project_input,
+    _rebalance_input, _rows_batch, _value_numpy, sketch_agg,
+)
 from gr_tdigest_spark.sketches.bloom import BloomFilter
 from gr_tdigest_spark.sketches.bottomk import BottomK, WeightedBottomK
 from gr_tdigest_spark.sketches.cms import CMS
@@ -795,62 +802,146 @@ def bottomk_sample(col, dtype: str = "string") -> Column:
 # distributed heavy-hitter top-k
 # ------------------------------------------------------------------ #
 
-def _candidate_tracker(key_cols, col, m: int, cap_factor: int = 8):
-    """mapInPandas per-partition candidate tracker with SpaceSaving
-    semantics: at most ``m·cap_factor`` counted values per group; when
-    the cap is exceeded the smallest are evicted and the group's
-    eviction FLOOR rises to the largest evicted count, and any value
-    (re-)entering afterwards starts at ``floor + c``. That preserves
-    the SpaceSaving overestimate invariant — a stored count is always
-    ≥ the value's true count within the partition — so a value can
-    never be silently forgotten by eviction and re-arrival (r2 advice):
-    every value whose true partition count exceeds the final floor is
-    present at the end, and the local top-m emission therefore contains
-    every true partition heavy hitter above that bound. Stored counts
-    are candidate-discovery artifacts only; the CMS re-estimate
-    downstream supplies the reported counts."""
-    cap = m * cap_factor
+class _SpaceSaving:
+    """SpaceSaving candidate tracker for one key: at most
+    ``m·cap_factor`` counted values; past the cap the smallest are
+    evicted, the eviction FLOOR rises to the largest evicted count, and
+    a value (re-)entering afterwards starts at ``floor + c``. Stored
+    counts therefore never fall below true counts, so eviction and
+    re-arrival cannot forget a value: every value whose true count
+    exceeds the final floor is kept, and the top-m holds every heavy
+    hitter above it. Ties rank by value, so candidates do not depend on
+    row order. The reported counts come from the CMS, not from here."""
 
-    def run(batches):
-        counts: dict = {}  # key_tuple -> {value: count}
-        floors: dict = {}  # key_tuple -> max evicted count
+    def __init__(self, m: int, cap_factor: int = 8):
+        self.m, self.cap = m, m * cap_factor
+        self.counts: dict = {}
+        self.floor = 0
 
-        def bump(key, vc_items):
-            d = counts.setdefault(key, {})
-            f = floors.get(key, 0)
-            for v, c in vc_items:
-                prev = d.get(v)
-                d[v] = (f + int(c)) if prev is None else (prev + int(c))
-            if len(d) > cap:
-                ranked = sorted(d.items(), key=lambda t: -t[1])
-                floors[key] = max(f, ranked[cap][1])
-                counts[key] = dict(ranked[:cap])
+    def _ranked(self) -> list:
+        return sorted(self.counts.items(), key=lambda t: (-t[1], t[0]))
 
-        for pdf in batches:
-            sub = pdf.dropna(subset=[col])
-            if not len(sub):
-                continue
-            if key_cols:
-                sizes = sub.groupby(
-                    key_cols + [col], sort=False, dropna=False
-                ).size()
-                per_key: dict = {}
-                for idx, c in sizes.items():
-                    key, v = tuple(idx[:-1]), idx[-1]
-                    per_key.setdefault(key, []).append((v, c))
-                for key, items in per_key.items():
-                    bump(key, items)
-            else:
-                vc = sub[col].value_counts()
-                bump((), list(vc.items()))
-        rows = []
-        for key, d in counts.items():
-            top = sorted(d.items(), key=lambda t: -t[1])[:m]
-            rows.extend(key + (v,) for v, _ in top)
-        if rows:
-            yield pd.DataFrame(rows, columns=(key_cols or []) + [col])
+    def add(self, values, counts) -> None:
+        """One batch's exact (value, count) pairs."""
+        d, f = self.counts, self.floor
+        for v, c in zip(values, counts):
+            d[v] = d.get(v, f) + int(c)
+        if len(d) > self.cap:
+            ranked = self._ranked()
+            self.floor = max(f, ranked[self.cap][1])
+            self.counts = dict(ranked[:self.cap])
 
-    return run
+    def top(self) -> list:
+        return [v for v, _ in self._ranked()[:self.m]]
+
+
+def _track_batch(trackers: dict, m: int, key_tuples: list,
+                 codes: np.ndarray, values, cap_factor: int = 8) -> None:
+    """Feed one Arrow value column (row keys ``key_tuples[codes]``; no
+    nulls, the input projection filters them in the JVM) into the
+    per-key trackers: exact (key, value) counts from one ``np.unique``,
+    then one ``add`` per key. NaN values are skipped, as in the CMS."""
+    enc = values.dictionary_encode()
+    vocab = enc.dictionary.to_pylist()
+    vidx = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+    keep = _missing_mask(_value_numpy(enc.dictionary))
+    if keep is not None:
+        rows = keep[vidx]
+        codes, vidx = codes[rows], vidx[rows]
+    if not vidx.size:
+        return
+    pairs, counts = np.unique(codes * len(vocab) + vidx, return_counts=True)
+    gcodes, vcodes = pairs // len(vocab), pairs % len(vocab)
+    gstarts, bounds = _group_bounds(gcodes)
+    for lo, hi in zip(gstarts, bounds[1:]):
+        key = key_tuples[gcodes[lo]]
+        if key not in trackers:
+            trackers[key] = _SpaceSaving(m, cap_factor)
+        trackers[key].add([vocab[j] for j in vcodes[lo:hi]], counts[lo:hi])
+
+
+def _topk_batch(groups, k: int, vtype, arrow_schema):
+    """Top-k rows of ``(key, candidates, CMS state)`` groups, taken one
+    at a time: the candidates' estimates against the key's own CMS,
+    ranked by (estimate desc, value asc). ``vtype`` is the Arrow type
+    the CMS hashed (hashing is dtype-aware)."""
+    import pyarrow as pa
+
+    keys, vals, ests = [], [], []
+    for key, cands, state in groups:
+        cms = state.to_dense() if hasattr(state, "to_dense") else state
+        est = cms.estimate(_value_numpy(pa.array(cands, type=vtype)))
+        ranked = sorted(zip(est.tolist(), cands),
+                        key=lambda t: (-t[0], t[1]))[:k]
+        for e, v in ranked:
+            keys.append(key)
+            vals.append(v)
+            ests.append(e)
+    return _rows_batch(keys, [vals, ests], arrow_schema)
+
+
+def _topk_partials(spec, key_cols, col, m, k, out_schema):
+    """mapInArrow over raw rows: each key's CMS partial (the
+    ``sketch_agg`` partial build) and SpaceSaving candidates in one
+    pass. With ``k`` (single-phase: every key is complete in its
+    partition) it emits the top-k rows, else one ``(keys, cms blob,
+    candidates)`` partial per key."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(out_schema)
+
+    def build(batches):
+        part = _PartitionBuild(spec, key_cols, col, None)
+        trackers: dict = {}
+        for batch in batches:
+            codes = part.add(batch)
+            vtype = batch.column(col).type
+            _track_batch(trackers, m, part.keys_by_gid, codes,
+                         batch.column(col))
+        states = part.final_states()
+        if not states:
+            return
+        if k is not None:
+            yield _topk_batch(((key, trackers[key].top(), st)
+                               for key, st in states.items()),
+                              k, vtype, arrow_schema)
+        else:
+            yield _rows_batch(list(states), [
+                [spec.state_to_blob(st) for st in states.values()],
+                [trackers[key].top() for key in states],
+            ], arrow_schema)
+
+    return build
+
+
+def _topk_merger(spec, key_cols, k, out_schema):
+    """mapInArrow over key-partitioned partials: per key, merge the CMS
+    blobs, union the candidates, and emit the top-k rows."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(out_schema)
+
+    def merge(batches):
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
+            return
+        batch = pa.Table.from_batches(batches).combine_chunks().to_batches()[0]
+        codes, key_tuples = _encode_batch_keys(batch, key_cols)
+        n = len(key_cols)
+        blobs, cands = batch.column(n), batch.column(n + 1)
+        rows_of: dict = {}
+        for r, c in enumerate(codes.tolist()):
+            rows_of.setdefault(c, []).append(r)
+        groups = ((
+            key_tuples[c],
+            list(set().union(*(cands[r].as_py() for r in rows))),
+            reduce(spec.merge_states,
+                   (spec.blob_to_state(blobs[r].as_py()) for r in rows)),
+        ) for c, rows in rows_of.items())
+        yield _topk_batch(groups, k, cands.type.value_type, arrow_schema)
+
+    return merge
 
 
 def cms_topk(
@@ -863,161 +954,61 @@ def cms_topk(
     width: int = 1 << 16,
     seed: int = 7,
     out_col: str = "est_count",
-    strategy: str = "broadcast",
 ) -> DataFrame:
     """Heavy-hitter top-k per group — fully distributed, no driver
     round-trip (the reference exposes CMS estimates only; the north_rule
     asks for heavy-hitter *tools*, which needs candidate discovery too).
 
-    Plan — only sketch-sized data ever shuffles or broadcasts:
+    Plan, on the ``sketch_agg`` projection, rebalance gate and partial
+    build: one mapInArrow pass builds, per (partition, key), the CMS
+    partial and the SpaceSaving top-m candidates (≤ m·8 counted values
+    per key). When the gate repartitions a small input by key
+    (single-phase), that pass also estimates the candidates against the
+    key's CMS and emits the top-k rows. Otherwise the ``(keys, cms
+    blob, candidates)`` partials repartition by key (one partition when
+    global) and one merge stage merges the CMS, unions the candidates
+    and emits the top-k. Nothing reaches the driver or is broadcast,
+    and building the plan runs no job (beyond the gate's key-count
+    probe on mid-size inputs). Rows per key come by estimate
+    descending, then value ascending.
 
-    1. one pass emits each partition's exact local top-m candidates
-       (bounded-memory SpaceSaving-style tracker, ≤ m·partitions rows)
-    2. ``cms_agg`` builds the global/per-group CMS (two-phase merge)
-    3. the sketch table (one row per group) ships once per executor as
-       a Spark broadcast variable; every deduped candidate re-estimates
-       against its group's sketch (one decode per blob per batch) —
-       never a blob-per-row join
-    4. top-k by (estimate desc, value) — global case compiles to
-       TakeOrderedAndProject, grouped case to a window rank over the
-       candidate set (≤ m·partitions rows, never the raw data)
-
-    Completeness: a key with true share > 1/m of some partition appears
-    in that partition's top-m; with Zipf-skewed heavy hitters the true
-    top-k are heavy in most partitions. Estimates are CMS upper bounds
-    (ε = e/width, δ = e^−depth).
-
-    Memory bound: with ``strategy='broadcast'`` (default) the sketch
-    table is collected and broadcast, i.e. n_groups × depth × width ×
-    8 bytes on the driver and each executor — size ``width`` (or
-    pre-partition the group space) accordingly; heavy-hitter queries
-    are per-group, so n_groups is typically small (the 10^12-row
-    dimension is the VALUE space, which never leaves the sketch).
-
-    ``strategy='cogroup'`` is the fallback when n_groups × sketch size
-    exceeds driver memory: candidates ⋈ sketches via cogroup (same
-    shape as with_group_cdf's), each blob crossing the wire once per
-    group with no driver hop. Grouped queries only — the global
-    (keys=None) sketch table is one row, where broadcast always wins.
+    Completeness: a value with true share > 1/m of a key's rows in some
+    partition is among that partition's top-m candidates; Zipf-skewed
+    heavy hitters are heavy in most partitions. Estimates are CMS upper
+    bounds (ε = e/width, δ = e^−depth). A task estimates one key at a
+    time, so it holds one dense depth × width × 8-byte table whatever
+    the number of keys. ``m`` defaults to max(4k, 64); ``k >= 1`` and
+    ``m >= k`` are required.
     """
-    from pyspark.sql.types import StructField, StructType
-
-    if strategy not in ("broadcast", "cogroup"):
-        raise ValueError("strategy must be 'broadcast' or 'cogroup'")
+    m = max(4 * k, 64) if m is None else m
+    if not (k >= 1 and m >= k):
+        raise ValueError(f"cms_topk needs k >= 1 and m >= k, got k={k}, m={m}")
     key_cols = list(keys) if keys else []
-    m = m or max(4 * k, 64)
-    src = df.select(*dict.fromkeys(key_cols + [col]))
-    # a one-row-group scan would serialize the Python candidate pass
-    # through one task (guide §2.5 input skew); rebalance small coarse
-    # inputs by (keys, value) — collocating a value's copies makes each
-    # partition's local count the value's TRUE count, so candidate
-    # completeness only improves. Same scale-adaptive gate as
-    # sketch_agg: big inputs with healthy scan parallelism never pay
-    # the raw-row shuffle.
-    from gr_tdigest_spark.operators.agg import _rebalance_coarse_scan
-
-    src = _rebalance_coarse_scan(src, list(dict.fromkeys(key_cols + [col])))
-    cand_schema = StructType(
-        [src.schema[c] for c in key_cols] + [src.schema[col]]
+    spec = CMSSpec(depth=depth, width=width, seed=seed)
+    src = _project_input(df, key_cols, col, None, spec)
+    src, single_phase = _rebalance_input(src, key_cols, col)
+    key_fields = [src.schema[c] for c in key_cols]
+    out_schema = StructType(key_fields + [
+        src.schema[col], StructField(out_col, LongType(), True),
+    ])
+    if single_phase:
+        return src.mapInArrow(
+            _topk_partials(spec, key_cols, col, m, k, out_schema),
+            schema=out_schema,
+        )
+    part_schema = StructType(key_fields + [
+        StructField("__cms", BinaryType(), True),
+        StructField("__cands", ArrayType(src.schema[col].dataType), True),
+    ])
+    partials = src.mapInArrow(
+        _topk_partials(spec, key_cols, col, m, None, part_schema),
+        schema=part_schema,
     )
-    cand = src.mapInPandas(
-        _candidate_tracker(key_cols, col, m), schema=cand_schema
-    ).distinct()
-
-    sketch = cms_agg(df, key_cols or None, col, depth=depth, width=width,
-                     seed=seed)
-
-    if strategy == "cogroup" and key_cols:
-        est_schema = StructType(
-            [cand.schema[c] for c in key_cols]
-            + [cand.schema[col], StructField(out_col, LongType(), True)]
-        )
-
-        def attach(c_pdf: pd.DataFrame, s_pdf: pd.DataFrame) -> pd.DataFrame:
-            res = c_pdf.copy()
-            if len(s_pdf) and len(c_pdf):
-                sk = CMS.from_bytes(bytes(s_pdf["cms"].iloc[0]))
-                res[out_col] = sk.estimate(
-                    c_pdf[col].to_numpy()
-                ).astype(np.int64)
-            else:
-                res[out_col] = np.int64(0)
-            return res
-
-        est = (
-            cand.groupBy(*key_cols)
-            .cogroup(sketch.groupBy(*key_cols))
-            .applyInPandas(attach, schema=est_schema)
-        )
-        return _rank_topk(est, key_cols, col, out_col, k)
-
-    # the CMS blob is ~depth·width·8 bytes (MBs at useful widths) — a
-    # broadcast JOIN would ship it once per candidate row through Arrow.
-    # Ship the tiny sketch TABLE once per executor as a Spark broadcast
-    # variable instead; candidates carry only (keys, value).
-    # (Tried and rejected: overlapping the sketch collect with an
-    # eager persist of the candidate table — caching the candidate
-    # subtree loses AQE shuffle coalescing inside the cached plan, and
-    # the 32-task un-coalesced Python stages cost more than the ~0.2 s
-    # of job overlap bought back: q10 1.05 s → 2.0 s measured.)
-    from gr_tdigest_spark.operators.agg import _canon_key_tuple
-
-    sk_map = {
-        _canon_key_tuple(tuple(r[k] for k in key_cols)): bytes(r["cms"])
-        for r in sketch.collect()
-    }
-    bc = df.sparkSession.sparkContext.broadcast(sk_map)
-
-    @F.pandas_udf(LongType())
-    def _est(*cols: pd.Series) -> pd.Series:
-        vals = cols[-1]
-        out = np.zeros(len(vals), dtype=np.int64)
-        if not len(vals):
-            return pd.Series(out)
-        arr = vals.to_numpy()
-        if key_cols:
-            if len(cols) == 2:
-                codes, uniq = pd.factorize(cols[0], use_na_sentinel=False)
-                ktups = [_canon_key_tuple((u,)) for u in uniq]
-            else:
-                codes, uniq = pd.factorize(
-                    pd.MultiIndex.from_arrays(list(cols[:-1])),
-                    use_na_sentinel=False,
-                )
-                ktups = [_canon_key_tuple(u) for u in uniq]
-        else:
-            codes = np.zeros(len(vals), dtype=np.int64)
-            ktups = [()]
-        mp = bc.value
-        for gi, kt in enumerate(ktups):
-            blob = mp.get(kt)
-            if blob is None:
-                continue
-            idx = np.flatnonzero(codes == gi)
-            out[idx] = CMS.from_bytes(blob).estimate(arr[idx])
-        return pd.Series(out)
-
-    est = cand.select(
-        *key_cols, col, _est(*key_cols, col).alias(out_col)
+    partials = (partials.repartition(*key_cols) if key_cols
+                else partials.repartition(1))
+    return partials.mapInArrow(
+        _topk_merger(spec, key_cols, k, out_schema), schema=out_schema,
     )
-    return _rank_topk(est, key_cols, col, out_col, k)
-
-
-def _rank_topk(est, key_cols, col, out_col, k):
-    """top-k by (estimate desc, value): TakeOrderedAndProject globally,
-    window rank over the (sketch-sized) candidate set per group."""
-    from pyspark.sql.window import Window
-
-    if key_cols:
-        w = Window.partitionBy(*key_cols).orderBy(
-            F.desc(out_col), F.col(col)
-        )
-        return (
-            est.withColumn("__rk", F.row_number().over(w))
-            .where(F.col("__rk") <= k)
-            .drop("__rk")
-        )
-    return est.orderBy(F.desc(out_col), F.col(col)).limit(k)
 
 
 def bloom_filter_rows(
@@ -1039,10 +1030,13 @@ def bloom_filter_rows(
     "new keys only" ingestion). Hashing is dtype-aware: a NULLABLE
     integer key column crosses the Arrow boundary as float64, so pass
     ``key_dtype="int64"`` (or pre-filter nulls) to probe with the
-    ingested dtype.
+    ingested dtype. A Bloom table with no rows (built over empty input)
+    is the empty filter: no row passes, ``negate=True`` keeps all.
     """
-    blob = bytes(bloom_df.select(blob_col).first()[0])
-    bc = df.sparkSession.sparkContext.broadcast(blob)
+    row = bloom_df.select(blob_col).first()
+    if row is None:
+        return df if negate else df.where(F.lit(False))
+    bc = df.sparkSession.sparkContext.broadcast(bytes(row[0]))
 
     @F.pandas_udf(BooleanType())
     def _member(keys: pd.Series) -> pd.Series:

@@ -41,7 +41,8 @@ from pyspark.sql.types import (
 )
 
 from gr_tdigest_spark.operators.agg import (
-    SketchSpec, _partial_builder_arrow, _partition_merger, _project_input,
+    SketchSpec, _PartitionBuild, _partition_merger, _project_input,
+    _rows_batch,
 )
 from gr_tdigest_spark.sources.tables import (
     drop_table, is_table_ref, read_table, write_table,
@@ -124,20 +125,14 @@ def build_partials_checkpointed(
         src = src.where(~F.col("shard_id").isin(sorted(done)))
     src = src.repartition(n_shards, "shard_id")
 
-    part_schema = StructType(
+    out_schema = StructType(
         [StructField("shard_id", IntegerType(), False)]
         + [src.schema[k] for k in key_cols]
-        + [StructField(out_col, BinaryType(), True)]
-    )
-    out_schema = StructType(part_schema.fields + [
-        StructField("rows_ingested", LongType(), False),
-        StructField("n_keys", LongType(), False),
-        StructField("wall_ms", DoubleType(), False),
-        StructField("attempt", StringType(), False),
-    ])
-    build_partials = _partial_builder_arrow(
-        spec, ["shard_id"] + key_cols, value_col, weight_col, out_col,
-        part_schema,
+        + [StructField(out_col, BinaryType(), True),
+           StructField("rows_ingested", LongType(), False),
+           StructField("n_keys", LongType(), False),
+           StructField("wall_ms", DoubleType(), False),
+           StructField("attempt", StringType(), False)]
     )
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -146,30 +141,24 @@ def build_partials_checkpointed(
     def build(batches):
         """Partials of every shard in the partition, plus per-shard
         lineage: rows ingested, keys built, wall time, attempt id."""
-        import pyarrow as pa
-
         t0 = time.perf_counter()
+        part = _PartitionBuild(spec, ["shard_id"] + key_cols, value_col,
+                               weight_col)
         rows = np.zeros(n_shards, dtype=np.int64)
-
-        def counted():
-            for batch in batches:
-                np.add(rows, np.bincount(
-                    batch.column("shard_id").to_numpy(), minlength=n_shards
-                ), out=rows)
-                yield batch
-
-        for part in build_partials(counted()):
-            sid = part.column("shard_id").to_numpy()
-            n_keys = np.bincount(sid, minlength=n_shards)
-            wall = (time.perf_counter() - t0) * 1000.0
-            yield pa.RecordBatch.from_arrays(
-                part.columns + [
-                    pa.array(rows[sid]), pa.array(n_keys[sid]),
-                    pa.array(np.full(sid.size, wall)),
-                    pa.array([attempt] * sid.size, pa.string()),
-                ],
-                schema=arrow_schema,
-            )
+        for batch in batches:
+            part.add(batch)
+            rows += np.bincount(batch.column("shard_id").to_numpy(),
+                                minlength=n_shards)
+        keys, blobs = part.blobs()
+        if not keys:
+            return
+        sid = np.array([key[0] for key in keys])
+        n_keys = np.bincount(sid, minlength=n_shards)
+        wall = (time.perf_counter() - t0) * 1000.0
+        yield _rows_batch(keys, [
+            blobs, rows[sid].tolist(), n_keys[sid].tolist(),
+            [wall] * sid.size, [attempt] * sid.size,
+        ], arrow_schema)
 
     partials = src.mapInArrow(build, schema=out_schema)
     write_table(partials, _partials_path(ckpt_dir), mode="append")

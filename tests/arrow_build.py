@@ -41,7 +41,7 @@ def build_blobs(spec, pdf, key_cols, value_col, weight_col=None, **kw):
         [types[k] for k in key_cols] + [StructField("b", BinaryType())]
     )
     build = _partial_builder_arrow(
-        spec, key_cols, value_col, weight_col, "b", schema, **kw
+        spec, key_cols, value_col, weight_col, schema, **kw
     )
     out = {}
     for part in build(iter([batch])):

@@ -287,8 +287,8 @@ class TestCmsTopK:
         """The per-partition tracker never holds more than m*cap_factor
         values per group, yet still emits a partition-heavy value."""
         import numpy as np
-        import pandas as pd
-        from gr_tdigest_spark.operators.companions import _candidate_tracker
+        import pyarrow as pa
+        from gr_tdigest_spark.operators.companions import _track_batch
 
         rng = np.random.default_rng(3)
         # one dominant value + a long uniform tail
@@ -296,13 +296,28 @@ class TestCmsTopK:
             np.full(5000, 42), rng.integers(1000, 9000, 20000)
         ])
         rng.shuffle(v)
-        pdfs = [
-            pd.DataFrame({"v": v[i::4]}) for i in range(4)
-        ]
-        out = list(_candidate_tracker([], "v", m=8, cap_factor=4)(iter(pdfs)))
-        cand = set(out[0]["v"].tolist())
+        trackers = {}
+        for i in range(4):
+            batch = pa.array(v[i::4])
+            _track_batch(trackers, 8, [()], np.zeros(len(batch), np.int64),
+                         batch, cap_factor=4)
+        cand = set(trackers[()].top())
         assert 42 in cand
         assert len(cand) <= 8
+
+    @pytest.mark.parametrize("keys", [["g"], None], ids=["grouped", "global"])
+    @pytest.mark.parametrize("k,m", [(10, 3), (0, None), (-1, None)])
+    def test_invalid_k_m_raise(self, spark, keys, k, m):
+        """k < 1 or m < k is rejected before any plan is built (a
+        top-10 from 3 candidates per partition would return a count of
+        rows that depends on the partition layout)."""
+        from gr_tdigest_spark.operators.companions import cms_topk
+
+        df = spark.createDataFrame(
+            [(g, v) for g in "ab" for v in range(40)], "g string, v long"
+        )
+        with pytest.raises(ValueError, match="k >= 1 and m >= k"):
+            cms_topk(df, keys, "v", k=k, m=m)
 
 
 class TestBloomSemiFilter:
@@ -337,27 +352,27 @@ class TestBloomSemiFilter:
         n_out = bloom_filter_rows(li, "l_orderkey", bl, negate=True).count()
         assert n_in + n_out == li.count()
 
+    def test_empty_filter(self, spark, sf_dir):
+        """A Bloom table over empty input has no rows: it is the empty
+        filter — no row passes, and negate keeps every row."""
+        from pyspark.sql import functions as F
+        from gr_tdigest_spark.operators.companions import (
+            bloom_agg, bloom_filter_rows,
+        )
+
+        orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+        none = orders.where(F.col("o_totalprice") < 0)
+        bl = bloom_agg(none, None, "o_orderkey", m_bits=1 << 10)
+        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        assert bloom_filter_rows(li, "l_orderkey", bl).count() == 0
+        assert bloom_filter_rows(
+            li, "l_orderkey", bl, negate=True
+        ).count() == li.count()
+
 
 class TestCmsTopKCogroup:
-    """strategy='cogroup' (driver-memory-free fallback) must agree with
-    the default broadcast path row for row."""
-
-    def test_cogroup_equals_broadcast(self, spark, sf_dir):
-        from gr_tdigest_spark.operators.companions import cms_topk
-
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        kw = dict(k=4, m=64, width=1 << 14)
-        bc = sorted(
-            tuple(r)
-            for r in cms_topk(ev, ["event_type"], "user_id", **kw).collect()
-        )
-        cg = sorted(
-            tuple(r)
-            for r in cms_topk(
-                ev, ["event_type"], "user_id", strategy="cogroup", **kw
-            ).collect()
-        )
-        assert bc == cg and len(bc) > 0
+    """Grouped top-k under near-uniform counts, with m above the
+    per-group cardinality, equals the exact per-group top-k."""
 
     def test_cogroup_grouped_matches_exact(self, spark, sf_dir):
         from pyspark.sql import functions as F
@@ -369,7 +384,6 @@ class TestCmsTopKCogroup:
             (r["event_type"], r["user_id"])
             for r in cms_topk(
                 ev, ["event_type"], "user_id", k=3, m=512, width=1 << 16,
-                strategy="cogroup",
             ).select("event_type", "user_id").collect()
         ]
         exp = [
@@ -389,14 +403,6 @@ class TestCmsTopKCogroup:
             .collect()
         ]
         assert sorted(got) == sorted(exp)
-
-    def test_invalid_strategy_raises(self, spark, sf_dir):
-        import pytest
-        from gr_tdigest_spark.operators.companions import cms_topk
-
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        with pytest.raises(ValueError, match="strategy"):
-            cms_topk(ev, ["event_type"], "user_id", k=3, strategy="nope")
 
 
 class TestHLLIntersect:
@@ -459,13 +465,16 @@ class TestCandidateTrackerSpaceSaving:
 
     @staticmethod
     def _drive(batches, m, cap_factor):
-        import pandas as pd
-        from gr_tdigest_spark.operators.companions import _candidate_tracker
+        import numpy as np
+        import pyarrow as pa
+        from gr_tdigest_spark.operators.companions import _track_batch
 
-        run = _candidate_tracker([], "v", m, cap_factor=cap_factor)
-        out = list(run(pd.DataFrame({"v": b}) for b in batches))
-        assert len(out) <= 1
-        return set(out[0]["v"]) if out else set()
+        trackers = {}
+        for b in batches:
+            _track_batch(trackers, m, [()], np.zeros(len(b), np.int64),
+                         pa.array(b), cap_factor=cap_factor)
+        assert len(trackers) <= 1
+        return set(trackers[()].top()) if trackers else set()
 
     def test_reentry_starts_at_floor(self):
         # cap = 4·1 = 4. Batch 1 evicts X at count 6 (floor → 6);
@@ -495,6 +504,35 @@ class TestCandidateTrackerSpaceSaving:
         emitted = self._drive(batches, m=8, cap_factor=8)
         assert "HH" in emitted
         assert true["HH"] == 400
+
+    def test_ties_rank_by_value(self):
+        """Equal counts rank by value, so the candidates do not depend
+        on the order the rows arrive in."""
+        for batch in (["c", "b", "a", "c"], ["a", "c", "b", "c"]):
+            assert self._drive([batch], m=2, cap_factor=1) == {"c", "a"}
+
+    def test_grouped_counts_match_reference(self):
+        """Below the cap, the per-key stored counts are the exact
+        per-(key, value) counts over all batches, NaN skipped."""
+        import collections
+        import numpy as np
+        import pyarrow as pa
+        from gr_tdigest_spark.operators.companions import _track_batch
+
+        rng = np.random.default_rng(5)
+        keys = [("a",), ("b",), ("c",)]
+        trackers, ref = {}, collections.Counter()
+        for _ in range(6):
+            codes = rng.integers(0, 3, 400)
+            vals = rng.integers(0, 30, 400).astype(float)
+            vals[rng.random(400) < 0.1] = np.nan
+            _track_batch(trackers, 64, keys, codes, pa.array(vals))
+            ref.update((keys[c], v) for c, v in zip(codes, vals) if v == v)
+        got = collections.Counter({
+            (key, v): c for key, t in trackers.items()
+            for v, c in t.counts.items()
+        })
+        assert got == ref
 
 
 class TestCompanionPreAggregate:

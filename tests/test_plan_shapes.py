@@ -131,6 +131,46 @@ class TestQueryPlans:
         assert "LeftSemi" in plan
 
 
+class TestCmsTopKPlans:
+    """cms_topk is one sketch-sized plan: building it runs no Spark job,
+    the single-phase plan has one Python map node and the two-phase
+    plan two, and neither broadcasts nor evaluates a per-row UDF."""
+
+    @staticmethod
+    def _python_maps(spark, build) -> int:
+        jobs = spark.sparkContext.statusTracker()
+        before = set(jobs.getJobIdsForGroup(None))
+        df = build()
+        assert set(jobs.getJobIdsForGroup(None)) == before
+        plan = _plan(df)
+        assert "BroadcastExchange" not in plan
+        assert "ArrowEvalPython" not in plan
+        return len(re.findall(r"\bMapIn(?:Arrow|Pandas)\b", plan))
+
+    def test_single_phase_one_python_stage(self, spark, sf_dir):
+        from gr_tdigest_spark.operators.companions import cms_topk
+
+        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+        n = self._python_maps(
+            spark, lambda: cms_topk(ev, ["event_type"], "user_id", k=3))
+        assert n == 1
+
+    @pytest.mark.parametrize("keys", [None, ["event_type"]],
+                             ids=["global", "grouped"])
+    def test_two_phase_two_python_stages(self, spark, sf_dir, keys):
+        from gr_tdigest_spark.operators.companions import cms_topk
+
+        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+        # a disabled rebalance keeps a grouped input off the by-key plan
+        spark.conf.set("spark.gr_tdigest.agg.rebalance.maxBytes", "0")
+        try:
+            n = self._python_maps(
+                spark, lambda: cms_topk(ev, keys, "user_id", k=3))
+        finally:
+            spark.conf.unset("spark.gr_tdigest.agg.rebalance.maxBytes")
+        assert n == 2
+
+
 class TestAQESkewJoin:
     def test_skewed_join_is_split_by_aqe(self, spark):
         """north_rule: 'AQE skew handling made explicit for hot

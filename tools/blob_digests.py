@@ -6,7 +6,9 @@ CMS, weighted CMS piles, Bloom, KLL, MinHash, bottom-k, weighted
 bottom-k) over a fixture's lineitem table with three key sets (two
 string columns, one high-cardinality long, global) through
 ``sketch_agg`` and ``checkpointed_sketch_agg``, and writes, per case,
-the sorted (key, sha256(blob)) list as JSON. A case that raises is
+the sorted (key, sha256(blob)) list as JSON. ``cms_topk`` cases (global,
+grouped with a small ``m``, grouped by a float key) record their
+(keys, value, est_count) rows in output order. A case that raises is
 recorded as ``["ERROR <type>"]``. Run it from the root of each checkout
 and diff the outputs:
 
@@ -32,13 +34,20 @@ from gr_tdigest_spark.operators.agg import (  # noqa: E402
 )
 from gr_tdigest_spark.operators.companions import (  # noqa: E402
     BloomSpec, BottomKSpec, CMSSpec, HLLSpec, KLLSpec, MinHashSpec,
-    WeightedBottomKSpec,
+    WeightedBottomKSpec, cms_topk,
 )
 from gr_tdigest_spark.sources.checkpoint import (  # noqa: E402
     checkpointed_sketch_agg,
 )
 
 KEY_SETS = (["l_returnflag", "l_linestatus"], ["l_suppkey"], None)
+
+# (keys, value column, k, m) per cms_topk case
+TOPK_CASES = (
+    (None, "l_returnflag", 3, None),
+    (["l_returnflag", "l_linestatus"], "l_suppkey", 5, 8),
+    (["l_discount"], "l_suppkey", 3, None),
+)
 
 
 def cases():
@@ -112,6 +121,20 @@ def main(sf_dir: str, out: str) -> None:
                     res[case] = rows
                     print(case, len(rows), hashlib.sha256(
                         repr(rows).encode()).hexdigest()[:12], flush=True)
+    for keys, col, k, m in TOPK_CASES:
+        kn = "+".join(keys) if keys else "global"
+        case = f"topk/{kn}/{col}/k={k}/m={m}"
+        try:
+            got = [tuple(r) for r in cms_topk(
+                li, keys, col, k=k, m=m).collect()]
+            # groups come out in partition order, each in rank order
+            got.sort(key=lambda r: repr(r[:len(keys or [])]))
+            rows = [repr(r) for r in got]
+        except Exception as e:  # recorded, not fatal
+            rows = [f"ERROR {type(e).__name__}"]
+        res[case] = rows
+        print(case, len(rows), hashlib.sha256(
+            repr(rows).encode()).hexdigest()[:12], flush=True)
     with open(out, "w") as f:
         json.dump(res, f, indent=0)
     spark.stop()
