@@ -21,8 +21,9 @@ register the same UDFs under the rows' SQL names, so the two surfaces
 share one definition. NULL policy, one per family: t-digest probes raise
 ``null TDIG blob`` (reference polars_expr.rs:376-383); companion probes
 return NULL, except ``cms_estimate_col`` (0) and ``bloom_contains``
-(false). Merges skip NULL blobs; a t-digest merge of no digest is the
-canonical empty digest, a companion merge of no sketch is NULL.
+(false). Merges (``SketchSpec.merge_blobs``) skip NULL blobs and return
+one blob as is; a t-digest merge of no digest is the canonical empty
+digest, a companion merge of no sketch is NULL.
 
 The TDIG v3 blob is the canonical in-DataFrame digest representation
 (~17 KB at max_size=1000, shuffle- and store-friendly). Digest-level
@@ -186,18 +187,12 @@ def _register(spark, rows) -> None:
 
 
 def _merge_udf(spec):
-    """Grouped-aggregate merge of one sketch family's blob column,
-    through ``spec.merge_many``. NULL blobs are skipped; a group with no
-    blob merges to the canonical empty digest (t-digest) or NULL."""
+    """Grouped-aggregate merge of one sketch family's blob column:
+    ``spec.merge_blobs`` of each group's blobs."""
 
     @F.pandas_udf(BinaryType())
     def merge(blobs: pd.Series) -> Optional[bytes]:
-        states = [
-            spec.blob_to_state(bytes(b)) for b in blobs if b is not None
-        ]
-        if not states and not isinstance(spec, TDigestSpec):
-            return None
-        return spec.state_to_blob(spec.merge_many(states))
+        return spec.merge_blobs(blobs)
 
     return merge
 
@@ -474,16 +469,19 @@ def tdigest_to_version(col, version: int) -> Column:
 
 def register_sql(spark) -> None:
     """Register the t-digest rows of the probe table that have a SQL
-    name — ``tdigest_quantile/cdf/median/count/min/max/sum`` — for
+    name — ``tdigest_quantile/cdf/median/count/min/max/sum`` — and the
+    ``merge_tdigests`` aggregate as ``tdigest_merge``, for
     ``spark.sql`` use, the SQL-string analogue of the reference's
     CLI/JNI layers:
 
         SELECT g, tdigest_quantile(td, 0.5) FROM digests
+        SELECT g, tdigest_merge(td) FROM digests GROUP BY g
 
     Probe arguments are per-row columns/literals here; the DataFrame
     functions validate the same arguments as constants at plan time and
     call the same UDFs."""
     _register(spark, _TDIGEST_PROBES)
+    spark.udf.register("tdigest_merge", _merge_udf(TDigestSpec()))
 
 
 # digest struct schema — unlike the reference's Polars codec
@@ -564,6 +562,7 @@ def merge_tdigests(col) -> Column:
     ``merge_tdigests(...).over(g)`` rollup (polars_expr.rs:147-156,
     __init__.py:643-656). Use in ``df.groupBy(g).agg(merge_tdigests("td"))``
     to re-aggregate e.g. day digests into month digests without
-    rescanning raw data. NULL blobs are skipped; a group of only NULL
-    or empty digests yields an empty digest."""
+    rescanning raw data. NULL blobs are skipped, a lone digest comes
+    back byte for byte, and only NULL or empty digests give an empty
+    digest."""
     return _merge_udf(TDigestSpec())(col)

@@ -9,7 +9,7 @@ classic ``partial → shuffle → final merge`` plan is built explicitly:
       .mapInArrow(build_partials)        # map-side combine: one sketch
                                          #   per (task-partition, key)
       .repartition(*keys)                # shuffles ~KB sketches, not rows
-      .mapInPandas(merge_partials)       # hash-merge per partition —
+      .mapInArrow(merge_partials)        # hash-merge per partition —
                                          #   ONE python call per batch,
                                          #   not one per group
 
@@ -23,10 +23,12 @@ Design points for the 100 TB / 1000-executor shape:
   builds every group of a flush at once — one hash/sort/reduceat pass,
   no per-group numpy dispatch. That is the per-conversation case: many
   small groups.
-- The final merge is partition-wise (mapInPandas over hash-partitioned
-  partials), so per-group scheduling overhead is gone; an optional
-  ``salt_buckets`` level adds a treeAggregate-style intermediate merge
-  for extreme skew (north_rule: skew handled explicitly).
+- The final merge is partition-wise (``_merge_partials``: mapInArrow
+  over hash-partitioned partials), so per-group scheduling overhead is
+  gone; an optional ``salt_buckets`` level adds a treeAggregate-style
+  intermediate merge for extreme skew (north_rule: skew handled
+  explicitly). The same merge stage, and ``SketchSpec.merge_blobs``,
+  serve the checkpoint and ``merge_sketch_tables``.
 - Filters/column pruning stay in Catalyst: only keys+value are selected
   before the first Python stage, so parquet scans read just those
   columns.
@@ -34,8 +36,9 @@ Design points for the 100 TB / 1000-executor shape:
 
 from __future__ import annotations
 
+from datetime import timezone
 from typing import (
-    Callable, Dict, Iterator, List, NamedTuple, Optional, Sequence, Tuple,
+    Callable, Dict, List, NamedTuple, Optional, Sequence, Tuple,
 )
 
 import numpy as np
@@ -57,15 +60,11 @@ _FLUSH_ROWS = 1 << 20
 
 
 def _canon_key(v):
-    """Canonicalize one group-key scalar for dict identity.
-
-    Spark NULLs in numeric key columns cross the Arrow/pandas boundary as
-    float NaN, and NaN never compares equal to itself (Python ≥3.10 even
-    hashes NaN by identity) — so NaN-bearing key tuples would keep one
-    dict entry per partial instead of merging. Map every missing-ish
-    scalar (None / NaN / NaT) to None. Note: this conflates SQL NULL with
-    a literal float('nan') key — pandas cannot distinguish them anyway.
-    """
+    """Canonicalize one group-key scalar for dict identity: every
+    missing-ish scalar (None / NaN / NaT) is None. NaN never equals
+    itself (Python ≥3.10 even hashes it by identity), so NaN keys would
+    never merge; a NaN key and a NULL key are one group on every
+    surface, as ``_canon_float_keys`` makes them in the JVM."""
     if v is None:
         return None
     try:
@@ -119,6 +118,19 @@ class SketchSpec:
 
     def blob_to_state(self, blob: bytes):
         raise NotImplementedError
+
+    def empty_blob(self) -> Optional[bytes]:
+        """The merge of no sketch."""
+        return None
+
+    def merge_blobs(self, blobs) -> Optional[bytes]:
+        """How one key merges, on every surface: NULL blobs are skipped,
+        a single blob comes back as is, none gives ``empty_blob()``."""
+        blobs = [bytes(b) for b in blobs if b is not None]
+        if len(blobs) <= 1:
+            return blobs[0] if blobs else self.empty_blob()
+        return self.state_to_blob(self.merge_many(
+            [self.blob_to_state(b) for b in blobs]))
 
     def clean_values(
         self, values: np.ndarray, weights: Optional[np.ndarray]
@@ -256,6 +268,9 @@ class TDigestSpec(SketchSpec):
 
     def blob_to_state(self, blob: bytes) -> TDigest:
         return td_wire.decode(blob)
+
+    def empty_blob(self) -> bytes:
+        return self.state_to_blob(self._empty())
 
     def _pile_digest(
         self, means: np.ndarray, weights: np.ndarray,
@@ -545,7 +560,7 @@ def _value_numpy(col) -> np.ndarray:
     binary and decimals are Arrow's own ``to_numpy``; temporal types
     are not: dates become ``datetime.date`` objects and timestamps
     naive ``datetime64[ns]`` wall-clock times in the column's (session)
-    time zone, exactly as ``mapInPandas`` hands them over."""
+    time zone, exactly as a pandas UDF receives them."""
     import pyarrow as pa
 
     if not pa.types.is_temporal(col.type):
@@ -556,22 +571,41 @@ def _value_numpy(col) -> np.ndarray:
     return s.to_numpy()
 
 
+class _KeyIds:
+    """Partition-wide ids, in first-seen order, of the canonical key
+    tuples ``keys``: each batch's local codes (``_encode_batch_keys``,
+    no per-row Python objects) mapped through ``id_of``."""
+
+    def __init__(self, key_cols: List[str]):
+        self.key_cols = key_cols
+        self.id_of: Dict[tuple, int] = {}
+        self.keys: List[tuple] = []
+
+    def codes(self, batch) -> np.ndarray:
+        """The batch's rows' key ids."""
+        local_codes, local_keys = _encode_batch_keys(batch, self.key_cols)
+        for key in local_keys:
+            if key not in self.id_of:
+                self.id_of[key] = len(self.keys)
+                self.keys.append(key)
+        lookup = np.array([self.id_of[k] for k in local_keys], dtype=np.int64)
+        return lookup[local_codes]
+
+
 class _PartitionBuild:
-    """One partition's partial build for a spec: key columns are
-    dictionary-encoded straight from each Arrow batch into
-    partition-wide group ids (no per-row Python objects), values go
-    from Arrow buffers to numpy (``_value_numpy``), and every
-    ``flush_rows`` buffered rows the spec's columnar
-    ``build_from_codes`` folds into per-key states."""
+    """One partition's partial build for a spec: rows get
+    partition-wide group ids (``_KeyIds``), values go from Arrow
+    buffers to numpy (``_value_numpy``), and every ``flush_rows``
+    buffered rows the spec's columnar ``build_from_codes`` folds into
+    per-key states."""
 
     def __init__(self, spec: SketchSpec, key_cols: List[str],
                  value_col: str, weight_col: Optional[str],
                  flush_rows: int = _FLUSH_ROWS):
-        self.spec, self.key_cols = spec, key_cols
+        self.spec = spec
         self.value_col, self.weight_col = value_col, weight_col
         self.flush_rows = flush_rows
-        self.gid_of: Dict[tuple, int] = {}
-        self.keys_by_gid: List[tuple] = []
+        self.ids = _KeyIds(key_cols)
         self.states: Dict[tuple, object] = {}
         self._codes: List[np.ndarray] = []
         self._vals: List[np.ndarray] = []
@@ -581,15 +615,7 @@ class _PartitionBuild:
 
     def add(self, batch) -> np.ndarray:
         """Buffer one Arrow batch; returns its rows' group ids."""
-        local_codes, local_keys = _encode_batch_keys(batch, self.key_cols)
-        lookup = np.empty(len(local_keys), dtype=np.int64)
-        for li, key in enumerate(local_keys):
-            gid = self.gid_of.get(key)
-            if gid is None:
-                gid = self.gid_of[key] = len(self.keys_by_gid)
-                self.keys_by_gid.append(key)
-            lookup[li] = gid
-        codes = lookup[local_codes]
+        codes = self.ids.codes(batch)
         self._codes.append(codes)
         self._vals.append(_value_numpy(batch.column(self.value_col)))
         if self.weight_col:
@@ -601,7 +627,7 @@ class _PartitionBuild:
 
     def _buffer(self) -> tuple:
         return (
-            np.concatenate(self._codes), self.keys_by_gid,
+            np.concatenate(self._codes), self.ids.keys,
             np.concatenate(self._vals),
             np.concatenate(self._ws) if self._ws else None,
         )
@@ -636,6 +662,24 @@ class _PartitionBuild:
                               for s in states.values()]
 
 
+def _utc(v):
+    if isinstance(v, list):
+        return [_utc(x) for x in v]
+    return v.astimezone(timezone.utc) if getattr(v, "tzinfo", None) else v
+
+
+def _arrow_array(values: list, typ):
+    """``pa.array(values, type=typ)`` for values out of ``to_pylist``,
+    zoned timestamps (also in lists) as UTC: pyarrow takes the wall
+    clock of the pytz datetimes ``to_pylist`` yields for the instant."""
+    import pyarrow as pa
+
+    inner = typ.value_type if pa.types.is_list(typ) else typ
+    if pa.types.is_timestamp(inner) and inner.tz is not None:
+        values = _utc(values)
+    return pa.array(values, type=typ)
+
+
 def _rows_batch(keys: list, tail: list, arrow_schema):
     """Arrow batch of the key tuples' columns followed by the ``tail``
     columns (lists), typed by ``arrow_schema``."""
@@ -644,7 +688,7 @@ def _rows_batch(keys: list, tail: list, arrow_schema):
     n_keys = len(arrow_schema) - len(tail)
     cols = [[key[i] for key in keys] for i in range(n_keys)] + tail
     return pa.RecordBatch.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        [_arrow_array(c, f.type) for c, f in zip(cols, arrow_schema)],
         schema=arrow_schema,
     )
 
@@ -970,57 +1014,50 @@ def _rebalance_input(
     return src.coalesce(plan.n_parts), False
 
 
-def _partition_merger(
-    spec: SketchSpec, key_cols: List[str], out_col: str
-) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
-    """Partition-wise hash merge: one python call per Arrow batch.
-    Requires partials hash-partitioned by the keys."""
+def _merge_partials(df: DataFrame, spec: SketchSpec, key_cols: List[str],
+                    out_col: str) -> DataFrame:
+    """The merge stage of every blob table: the ``(keys, out_col)`` rows
+    of ``df`` by canonical key (one partition when global) into one
+    mapInArrow merger, one ``spec.merge_blobs`` row per key. A key's
+    lone non-NULL row, the common case on key-clustered input, passes
+    through as Arrow."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    def merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # a key with a single partial passes through untouched (merge of
-        # one digest is the identity — no decode/re-encode); that is the
-        # common case when input data is clustered by the key, so detect
-        # it VECTORIZED (pandas duplicated; NaN==NaN and None==None in
-        # duplicated, and Arrow conversion keeps each column's missing
-        # marker uniform — None for object, NaN for float — so this
-        # agrees with the canonicalized dict keys) and spend Python only
-        # on the genuinely multi-partial keys
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pdfs[0] if len(pdfs) == 1 else pd.concat(
-            pdfs, ignore_index=True
-        )
-        if key_cols:
-            dup = pdf.duplicated(subset=key_cols, keep=False)
-            singles = pdf.loc[~dup, key_cols + [out_col]]
-            if len(singles):
-                yield singles
-            pdf = pdf.loc[dup]
-        if not len(pdf):
-            return
-        blobs_by_key: Dict[tuple, list] = {}
-        keys_np = [pdf[k].to_numpy() for k in key_cols]
-        blobs = pdf[out_col].to_numpy()
-        for i in range(len(pdf)):
-            key = _canon_key_tuple(k[i] for k in keys_np)
-            blobs_by_key.setdefault(key, []).append(bytes(blobs[i]))
-        out_blobs = []
-        for bl in blobs_by_key.values():
-            if len(bl) == 1:
-                out_blobs.append(bl[0])
-            else:
-                states = [spec.blob_to_state(b) for b in bl]
-                out_blobs.append(spec.state_to_blob(spec.merge_many(states)))
-        # columnar: per-row dicts cost ~10 µs/row at 100k+ keys
-        keys = list(blobs_by_key)
-        yield pd.DataFrame(
-            {**{c: [k[i] for k in keys] for i, c in enumerate(key_cols)},
-             out_col: out_blobs},
-            columns=key_cols + [out_col],
-        )
+    df = _canon_float_keys(df.select(*key_cols, out_col), key_cols)
+    df = df.repartition(*key_cols) if key_cols else df.repartition(1)
+    schema = StructType([df.schema[k] for k in key_cols]
+                        + [StructField(out_col, BinaryType(), True)])
+    arrow_schema = to_arrow_schema(schema)
 
-    return merge
+    def merge(batches):
+        ids = _KeyIds(key_cols)
+        held = [(batch, ids.codes(batch)) for batch in batches]
+        if not held:
+            return
+        single = np.bincount(np.concatenate([c for _, c in held]),
+                             minlength=len(ids.keys)) == 1
+        blobs_of: Dict[int, list] = {}
+        for batch, codes in held:
+            blobs = batch.column(len(key_cols))
+            through = single[codes] & blobs.is_valid().to_numpy(
+                zero_copy_only=False)
+            if through.any():
+                # Spark may hand in a key as NOT NULL or zoned, and one
+                # output stream's batches must share the declared schema
+                yield batch.filter(pa.array(through)).cast(arrow_schema)
+            rest = np.flatnonzero(~through)
+            for kid, blob in zip(codes[rest].tolist(),
+                                 blobs.take(pa.array(rest)).to_pylist()):
+                blobs_of.setdefault(kid, []).append(blob)
+        if blobs_of:
+            yield _rows_batch(
+                [ids.keys[kid] for kid in blobs_of],
+                [[spec.merge_blobs(b) for b in blobs_of.values()]],
+                arrow_schema,
+            )
+
+    return df.mapInArrow(merge, schema=schema)
 
 
 def sketch_agg(
@@ -1066,35 +1103,13 @@ def sketch_agg(
         # locally in the builder's states dict), so the partials ARE the
         # result — no blob shuffle, no merge stage.
         return partials
-
-    if not key_cols:
-        merged = partials.repartition(1).mapInPandas(
-            _partition_merger(spec, [], out_col), schema=out_schema
-        )
-        return merged
-
-    if salt_buckets and salt_buckets > 1:
+    if key_cols and salt_buckets and salt_buckets > 1:
         salted = partials.withColumn(
             "__salt", F.pmod(F.crc32(F.col(out_col)), F.lit(salt_buckets))
         )
-        mid_schema = StructType(
-            list(out_schema.fields[:-1])
-            + [StructField("__salt", salted.schema["__salt"].dataType, True)]
-            + [out_schema.fields[-1]]
-        )
-        salted = salted.select(*key_cols, "__salt", out_col)
-        partials = (
-            salted.repartition(*key_cols, "__salt")
-            .mapInPandas(
-                _partition_merger(spec, key_cols + ["__salt"], out_col),
-                schema=mid_schema,
-            )
-            .drop("__salt")
-        )
-
-    return partials.repartition(*key_cols).mapInPandas(
-        _partition_merger(spec, key_cols, out_col), schema=out_schema
-    )
+        partials = _merge_partials(salted, spec, key_cols + ["__salt"],
+                                   out_col).drop("__salt")
+    return _merge_partials(partials, spec, key_cols, out_col)
 
 
 def tdigest_agg(

@@ -8,7 +8,6 @@ aggregates.
 from __future__ import annotations
 
 from dataclasses import replace
-from functools import reduce
 from typing import Optional, Sequence
 
 import numpy as np
@@ -31,7 +30,7 @@ from gr_tdigest_spark.functions import (
     _COMPANION_PROBES, _PROBES, _as_str, _merge_udf, _register,
 )
 from gr_tdigest_spark.operators.agg import (
-    SketchSpec, _encode_batch_keys, _PartitionBuild, _project_input,
+    SketchSpec, _arrow_array, _KeyIds, _PartitionBuild, _project_input,
     _rebalance_input, _rows_batch, _value_numpy, sketch_agg,
 )
 from gr_tdigest_spark.sketches.bloom import BloomFilter
@@ -682,9 +681,10 @@ def merge_sketches(col, spec: SketchSpec) -> Column:
     for OLAP-style subtotals: facts are read once at the finest grain;
     the cube is computed entirely on sketch-sized rows.
 
-    NULL blobs are skipped; an all-NULL (or empty) group yields NULL
-    (the canonical empty digest for a ``TDigestSpec``, as in
-    ``merge_tdigests``). Merge-compatibility is enforced by the kernels
+    Each group is ``spec.merge_blobs`` of its blobs: NULL blobs are
+    skipped, a single blob comes back as is, and an all-NULL (or empty)
+    group yields NULL (the canonical empty digest for a ``TDigestSpec``).
+    Merge-compatibility is enforced by the kernels
     (mismatched configs raise, same contract as every other surface)."""
     return _merge_udf(spec)(col)
 
@@ -865,12 +865,10 @@ def _topk_batch(groups, k: int, vtype, arrow_schema):
     at a time: the candidates' estimates against the key's own CMS,
     ranked by (estimate desc, value asc). ``vtype`` is the Arrow type
     the CMS hashed (hashing is dtype-aware)."""
-    import pyarrow as pa
-
     keys, vals, ests = [], [], []
     for key, cands, state in groups:
         cms = state.to_dense() if hasattr(state, "to_dense") else state
-        est = cms.estimate(_value_numpy(pa.array(cands, type=vtype)))
+        est = cms.estimate(_value_numpy(_arrow_array(cands, vtype)))
         ranked = sorted(zip(est.tolist(), cands),
                         key=lambda t: (-t[0], t[1]))[:k]
         for e, v in ranked:
@@ -896,7 +894,7 @@ def _topk_partials(spec, key_cols, col, m, k, out_schema):
         for batch in batches:
             codes = part.add(batch)
             vtype = batch.column(col).type
-            _track_batch(trackers, m, part.keys_by_gid, codes,
+            _track_batch(trackers, m, part.ids.keys, codes,
                          batch.column(col))
         states = part.final_states()
         if not states:
@@ -917,29 +915,30 @@ def _topk_partials(spec, key_cols, col, m, k, out_schema):
 def _topk_merger(spec, key_cols, k, out_schema):
     """mapInArrow over key-partitioned partials: per key, merge the CMS
     blobs, union the candidates, and emit the top-k rows."""
-    import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     arrow_schema = to_arrow_schema(out_schema)
+    n = len(key_cols)
 
     def merge(batches):
-        batches = [b for b in batches if b.num_rows]
-        if not batches:
+        ids = _KeyIds(key_cols)
+        codes, blobs, cands = [], [], []
+        for batch in batches:
+            codes.append(ids.codes(batch))
+            blobs += batch.column(n).to_pylist()
+            cands += batch.column(n + 1).to_pylist()
+            vtype = batch.column(n + 1).type.value_type
+        if not blobs:
             return
-        batch = pa.Table.from_batches(batches).combine_chunks().to_batches()[0]
-        codes, key_tuples = _encode_batch_keys(batch, key_cols)
-        n = len(key_cols)
-        blobs, cands = batch.column(n), batch.column(n + 1)
-        rows_of: dict = {}
-        for r, c in enumerate(codes.tolist()):
-            rows_of.setdefault(c, []).append(r)
+        codes = np.concatenate(codes)
+        order = np.argsort(codes, kind="stable")
+        runs = np.split(order, np.flatnonzero(np.diff(codes[order])) + 1)
         groups = ((
-            key_tuples[c],
-            list(set().union(*(cands[r].as_py() for r in rows))),
-            reduce(spec.merge_states,
-                   (spec.blob_to_state(blobs[r].as_py()) for r in rows)),
-        ) for c, rows in rows_of.items())
-        yield _topk_batch(groups, k, cands.type.value_type, arrow_schema)
+            ids.keys[codes[rows[0]]],
+            list(set().union(*(cands[r] for r in rows))),
+            spec.merge_many([spec.blob_to_state(blobs[r]) for r in rows]),
+        ) for rows in runs)
+        yield _topk_batch(groups, k, vtype, arrow_schema)
 
     return merge
 

@@ -14,6 +14,8 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 
 import gr_tdigest_spark.functions as Fn
+from gr_tdigest_spark.operators.agg import (TDigestSpec, _merge_partials,
+                                            tdigest_agg)
 
 __all__ = ["merge_sketch_tables", "add_values", "add_weighted_values"]
 
@@ -30,19 +32,16 @@ def merge_sketch_tables(
 
     Default merges t-digest blobs; pass any ``SketchSpec`` (HLLSpec,
     CMSSpec, BloomSpec, KLLSpec, MinHashSpec) to merge that kind
-    instead via the generic ``companions.merge_sketches``."""
+    instead. Keyed, this is ``sketch_agg``'s merge stage (one row per
+    canonical key); keyless, a grouped-aggregate merge, so no input
+    still gives one row."""
+    spec = spec or TDigestSpec()
     out = tables[0]
     for t in tables[1:]:
         out = out.unionByName(t)
-    if spec is None:
-        agg = Fn.merge_tdigests(col).alias(col)
-    else:
-        from gr_tdigest_spark.operators.companions import merge_sketches
-
-        agg = merge_sketches(col, spec).alias(col)
     if keys:
-        return out.groupBy(*keys).agg(agg)
-    return out.agg(agg)
+        return _merge_partials(out, spec, list(keys), col)
+    return out.agg(Fn._merge_udf(spec)(col).alias(col))
 
 
 def add_values(
@@ -57,8 +56,6 @@ def add_values(
     """Table-level ``add_many``: ingest new raw rows into an existing
     digest table. Config for the new partials must match the existing
     digests (strict merge compatibility enforces it)."""
-    from gr_tdigest_spark.operators.agg import tdigest_agg
-
     fresh = tdigest_agg(
         new_rows, list(keys) or None, value_col,
         weight_col=weight_col, out_col=col, **cfg,

@@ -41,7 +41,7 @@ from pyspark.sql.types import (
 )
 
 from gr_tdigest_spark.operators.agg import (
-    SketchSpec, _PartitionBuild, _partition_merger, _project_input,
+    SketchSpec, _merge_partials, _PartitionBuild, _project_input,
     _rows_batch,
 )
 from gr_tdigest_spark.sources.tables import (
@@ -180,23 +180,9 @@ def merge_from_checkpoint(
     out_col: Optional[str] = None,
 ) -> DataFrame:
     """Read all checkpointed partials and produce the final merged
-    sketch table (same partition-wise merge as the in-flight plan)."""
-    key_cols = list(keys) if keys else []
-    out_col = out_col or spec.name
-    partials = read_table(spark, _partials_path(ckpt_dir)).select(
-        *key_cols, out_col
-    )
-    out_schema = StructType(
-        [partials.schema[k] for k in key_cols]
-        + [StructField(out_col, BinaryType(), True)]
-    )
-    if key_cols:
-        return partials.repartition(*key_cols).mapInPandas(
-            _partition_merger(spec, key_cols, out_col), schema=out_schema
-        )
-    return partials.repartition(1).mapInPandas(
-        _partition_merger(spec, [], out_col), schema=out_schema
-    )
+    sketch table through ``sketch_agg``'s merge stage."""
+    return _merge_partials(read_table(spark, _partials_path(ckpt_dir)), spec,
+                           list(keys) if keys else [], out_col or spec.name)
 
 
 def checkpoint_lineage(spark: SparkSession, ckpt_dir: str) -> DataFrame:

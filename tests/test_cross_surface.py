@@ -330,7 +330,7 @@ class TestProbeTable:
     SQL_NAMES = sorted([
         "tdigest_quantile", "tdigest_cdf", "tdigest_median",
         "tdigest_count", "tdigest_min", "tdigest_max", "tdigest_sum",
-        "hll_merge", "cms_merge", "bloom_merge", "minhash_merge",
+        "tdigest_merge", "hll_merge", "cms_merge", "bloom_merge", "minhash_merge",
         "kll_merge", "bottomk_merge",
         "hll_estimate", "kll_quantile", "bottomk_distinct",
         "bottomk_sample", "bloom_contains", "cms_estimate",

@@ -171,6 +171,58 @@ class TestCmsTopKPlans:
         assert n == 2
 
 
+class TestMergeStagePlans:
+    """Every blob-table merge hop is one mapInArrow node over a
+    by-key exchange: no pandas node, no grouped aggregate, no sort."""
+
+    @staticmethod
+    def _merge_nodes(df) -> int:
+        plan = _plan(df)
+        assert "MapInPandas" not in plan
+        assert "AggregateInPandas" not in plan
+        assert not re.search(r"\bSort\b", plan), plan
+        return len(re.findall(r"\bMapInArrow merge\(", plan))
+
+    def test_merge_sketch_tables_keyed(self, spark):
+        from gr_tdigest_spark.operators.rollup import merge_sketch_tables
+        from gr_tdigest_spark.sketches import wire
+        from gr_tdigest_spark.sketches.tdigest import TDigest
+
+        blob = wire.encode(TDigest.from_values([1.0, 2.0], max_size=50))
+        table = spark.createDataFrame(
+            [("a", blob), ("a", blob), ("b", blob)], "g string, td binary")
+        assert self._merge_nodes(
+            merge_sketch_tables([table], ["g"], "td")) == 1
+
+    @pytest.mark.parametrize("salt, hops", [(None, 1), (3, 2)],
+                             ids=["two_phase", "salted"])
+    def test_sketch_agg(self, spark, sf_dir, salt, hops):
+        from gr_tdigest_spark.operators import tdigest_agg
+
+        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        spark.conf.set("spark.gr_tdigest.agg.rebalance.maxBytes", "0")
+        try:
+            dg = tdigest_agg(li, ["l_returnflag"], "l_extendedprice",
+                             max_size=50, salt_buckets=salt)
+        finally:
+            spark.conf.unset("spark.gr_tdigest.agg.rebalance.maxBytes")
+        assert self._merge_nodes(dg) == hops
+
+    def test_merge_from_checkpoint(self, spark, sf_dir, tmp_path):
+        from gr_tdigest_spark.operators import TDigestSpec
+        from gr_tdigest_spark.sources.checkpoint import (
+            build_partials_checkpointed, merge_from_checkpoint,
+        )
+
+        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        spec = TDigestSpec(max_size=50)
+        build_partials_checkpointed(li, ["l_returnflag"], "l_extendedprice",
+                                    spec, str(tmp_path), n_shards=4)
+        merged = merge_from_checkpoint(spark, str(tmp_path), spec,
+                                       ["l_returnflag"])
+        assert self._merge_nodes(merged) == 1
+
+
 class TestAQESkewJoin:
     def test_skewed_join_is_split_by_aqe(self, spark):
         """north_rule: 'AQE skew handling made explicit for hot

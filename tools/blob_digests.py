@@ -1,14 +1,19 @@
-"""Blob digests of every partial-build surface, for byte-identity checks
-across commits.
+"""Blob digests of every build and merge surface, for byte-identity
+checks across commits.
 
 Builds each spec (t-digest in 'error', 'drop' and weighted form, HLL,
 CMS, weighted CMS piles, Bloom, KLL, MinHash, bottom-k, weighted
 bottom-k) over a fixture's lineitem table with three key sets (two
-string columns, one high-cardinality long, global) through
-``sketch_agg`` and ``checkpointed_sketch_agg``, and writes, per case,
-the sorted (key, sha256(blob)) list as JSON. ``cms_topk`` cases (global,
-grouped with a small ``m``, grouped by a float key) record their
-(keys, value, est_count) rows in output order. A case that raises is
+string columns, one high-cardinality long, global) through every build
+and merge surface, and writes, per case, the sorted (key, sha256(blob))
+list as JSON. The surfaces are ``sketch_agg`` as the gate plans it
+(``agg``), forced two-phase with the rebalance disabled (``agg2``),
+salted with ``salt_buckets=3`` (``salt``, keyed only),
+``checkpointed_sketch_agg`` (``ckpt``) and ``merge_sketch_tables`` of
+the odd and even ``l_orderkey`` halves (``mst``; keyless for the
+global key set, t-digest with the default spec). ``cms_topk`` cases
+(global, grouped with a small ``m``, grouped by a float key) record
+their (keys, value, est_count) rows in output order. A case that raises is
 recorded as ``["ERROR <type>"]``. Run it from the root of each checkout
 and diff the outputs:
 
@@ -36,11 +41,16 @@ from gr_tdigest_spark.operators.companions import (  # noqa: E402
     BloomSpec, BottomKSpec, CMSSpec, HLLSpec, KLLSpec, MinHashSpec,
     WeightedBottomKSpec, cms_topk,
 )
+from gr_tdigest_spark.operators.rollup import (  # noqa: E402
+    merge_sketch_tables,
+)
 from gr_tdigest_spark.sources.checkpoint import (  # noqa: E402
     checkpointed_sketch_agg,
 )
 
 KEY_SETS = (["l_returnflag", "l_linestatus"], ["l_suppkey"], None)
+SURFACES = ("agg", "ckpt", "agg2", "salt", "mst")
+REBALANCE_CONF = "spark.gr_tdigest.agg.rebalance.maxBytes"
 
 # (keys, value column, k, m) per cms_topk case
 TOPK_CASES = (
@@ -74,6 +84,29 @@ def cases():
     ]
 
 
+def build(li, surface, keys, spec, col, w, ckpt_dir):
+    """The ``(keys, b)`` blob table of one case on one surface."""
+    if surface == "ckpt":
+        return checkpointed_sketch_agg(
+            li, keys, col, spec, ckpt_dir, n_shards=8, weight_col=w,
+            out_col="b", resume=False,
+        )
+    if surface == "mst":
+        halves = [
+            sketch_agg(li.where(F.col("l_orderkey") % 2 == odd), keys, col,
+                       spec, weight_col=w, out_col="b")
+            for odd in (1, 0)
+        ]
+        return merge_sketch_tables(
+            halves, keys or [], "b",
+            None if isinstance(spec, TDigestSpec) else spec,
+        )
+    if surface == "agg2":
+        li.sparkSession.conf.set(REBALANCE_CONF, "0")
+    return sketch_agg(li, keys, col, spec, weight_col=w, out_col="b",
+                      salt_buckets=3 if surface == "salt" else None)
+
+
 def main(sf_dir: str, out: str) -> None:
     spark = (
         SparkSession.builder.master("local[4]")
@@ -98,19 +131,13 @@ def main(sf_dir: str, out: str) -> None:
         for keys in KEY_SETS:
             kn = "+".join(keys) if keys else "global"
             for name, spec, col, w in cases():
-                for surface in ("agg", "ckpt"):
+                for surface in SURFACES:
+                    if surface == "salt" and not keys:
+                        continue
                     case = f"{surface}/{name}/{kn}/{col}"
                     try:
-                        if surface == "agg":
-                            df = sketch_agg(li, keys, col, spec,
-                                            weight_col=w, out_col="b")
-                        else:
-                            df = checkpointed_sketch_agg(
-                                li, keys, col, spec,
-                                os.path.join(tmp, case.replace("/", "_")),
-                                n_shards=8, weight_col=w, out_col="b",
-                                resume=False,
-                            )
+                        df = build(li, surface, keys, spec, col, w,
+                                   os.path.join(tmp, case.replace("/", "_")))
                         rows = sorted(
                             [repr(tuple(r[k] for k in keys or [])),
                              hashlib.sha256(bytes(r["b"])).hexdigest()]
@@ -118,6 +145,8 @@ def main(sf_dir: str, out: str) -> None:
                         )
                     except Exception as e:  # recorded, not fatal
                         rows = [f"ERROR {type(e).__name__}"]
+                    finally:
+                        li.sparkSession.conf.unset(REBALANCE_CONF)
                     res[case] = rows
                     print(case, len(rows), hashlib.sha256(
                         repr(rows).encode()).hexdigest()[:12], flush=True)
