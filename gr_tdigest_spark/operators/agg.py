@@ -28,7 +28,9 @@ Design points for the 100 TB / 1000-executor shape:
   gone; an optional ``salt_buckets`` level adds a treeAggregate-style
   intermediate merge for extreme skew (north_rule: skew handled
   explicitly). The same merge stage, and ``SketchSpec.merge_blobs``,
-  serve the checkpoint and ``merge_sketch_tables``.
+  serve the checkpoint and ``merge_sketch_tables``. The stage merges a
+  partition's blobs as one Arrow column (``merge_blob_array``; for
+  t-digest one vectorized ``wire.decode_many``, not a decode per blob).
 - Filters/column pruning stay in Catalyst: only keys+value are selected
   before the first Python stage, so parquet scans read just those
   columns.
@@ -125,12 +127,24 @@ class SketchSpec:
 
     def merge_blobs(self, blobs) -> Optional[bytes]:
         """How one key merges, on every surface: NULL blobs are skipped,
-        a single blob comes back as is, none gives ``empty_blob()``."""
+        a single blob comes back as is, none gives ``empty_blob()``;
+        otherwise the blobs' states are ``merge_many``-ed in order.
+        ``merge_blob_array`` applies this to many keys at once."""
         blobs = [bytes(b) for b in blobs if b is not None]
         if len(blobs) <= 1:
             return blobs[0] if blobs else self.empty_blob()
         return self.state_to_blob(self.merge_many(
             [self.blob_to_state(b) for b in blobs]))
+
+    def merge_blob_array(self, blobs, key_ids: np.ndarray,
+                         n_keys: int) -> list:
+        """``merge_blobs`` of each key's blobs, for keys ``0..n_keys-1``:
+        ``blobs`` is an Arrow binary array and ``key_ids`` its rows' key
+        ids; a key's rows merge in row order."""
+        groups: List[list] = [[] for _ in range(n_keys)]
+        for kid, blob in zip(np.asarray(key_ids).tolist(), blobs.to_pylist()):
+            groups[kid].append(blob)
+        return [self.merge_blobs(g) for g in groups]
 
     def clean_values(
         self, values: np.ndarray, weights: Optional[np.ndarray]
@@ -271,6 +285,82 @@ class TDigestSpec(SketchSpec):
 
     def empty_blob(self) -> bytes:
         return self.state_to_blob(self._empty())
+
+    def merge_blobs(self, blobs) -> bytes:
+        """``merge_blob_array`` over one key's blobs."""
+        import pyarrow as pa
+
+        arr = pa.array([None if b is None else bytes(b) for b in blobs],
+                       pa.binary())
+        return self.merge_blob_array(arr, np.zeros(len(arr), np.int64), 1)[0]
+
+    def merge_blob_array(self, blobs, key_ids, n_keys):
+        """Columnar ``merge_blobs``, byte-identical to ``merge_many`` of
+        each key's decoded digests: one ``wire.decode_many`` of the
+        blobs of every key with two or more (a lone blob comes back as
+        is, undecoded), ``merge_many``'s checks over the header columns,
+        one stable sort of every key's concatenated means (ties in
+        (row, centroid) order), then ``_compress`` per key."""
+        import pyarrow as pa
+
+        key_ids = np.asarray(key_ids, dtype=np.int64)
+        rows = np.flatnonzero(blobs.is_valid().to_numpy(zero_copy_only=False))
+        rows = rows[np.argsort(key_ids[rows], kind="stable")]
+        per_key = np.bincount(key_ids[rows], minlength=n_keys)
+        empty = self.empty_blob()
+        out = [empty] * n_keys
+        for kid, row in zip(np.flatnonzero(per_key == 1).tolist(),
+                            rows[(np.cumsum(per_key) - 1)[per_key == 1]]
+                            .tolist()):
+            out[kid] = blobs[row].as_py()
+        multi = per_key > 1
+        if not multi.any():
+            return out
+        sel = rows[np.repeat(multi, per_key)]
+        cols = td_wire.decode_many(blobs.take(pa.array(sel)))
+        # slot i of cols is key seg[i]'s; each key's slots are contiguous
+        seg = np.repeat(np.arange(multi.sum()), per_key[multi])
+        heads = np.flatnonzero(np.r_[True, seg[1:] != seg[:-1]])
+        slot = np.arange(sel.size)
+
+        def first(mask):
+            """Each key's first slot in ``mask``, or ``sel.size``."""
+            return np.minimum.reduceat(np.where(mask, slot, sel.size), heads)
+
+        live = (cols.count != 0.0) & (cols.n > 0)  # not effectively empty
+        ref = np.minimum(first(live), sel.size - 1)[seg]
+        odd = cols.precision != cols.precision[heads][seg]
+        for c in (cols.max_size, cols.scale, cols.policy, cols.pin):
+            odd |= live & (c != c[ref])
+        odd_key = np.bincount(seg, weights=odd) > 0
+        no_live = first(live) == sel.size
+        run = live & (cols.count > 0.0)
+        head_run = first(run)
+
+        rs = np.flatnonzero(run)
+        lo, n = cols.bounds[rs], cols.n[rs]
+        at = np.repeat(lo - (np.cumsum(n) - n), n) + np.arange(n.sum())
+        owner = np.repeat(seg[rs], n)
+        order = np.lexsort((cols.means[at], owner))
+        means, weights = cols.means[at][order], cols.weights[at][order]
+        cuts = np.searchsorted(owner[order], np.arange(multi.sum() + 1))
+
+        for i, kid in enumerate(np.flatnonzero(multi).tolist()):
+            if odd_key[i] or no_live[i]:
+                digests = [td_wire.decode(blobs[int(r)].as_py())
+                           for r in sel[seg == i]]
+                validation.check_merge_compatible(digests)
+                if no_live[i]:
+                    out[kid] = self.state_to_blob(digests[0])
+                    continue
+            if head_run[i] == sel.size:
+                out[kid] = self.state_to_blob(TDigest())
+                continue
+            result = cols.empty_like(int(head_run[i]))
+            result._compress(means[cuts[i]:cuts[i + 1]],
+                             weights[cuts[i]:cuts[i + 1]])
+            out[kid] = self.state_to_blob(result)
+        return out
 
     def _pile_digest(
         self, means: np.ndarray, weights: np.ndarray,
@@ -1014,21 +1104,14 @@ def _rebalance_input(
     return src.coalesce(plan.n_parts), False
 
 
-def _merge_partials(df: DataFrame, spec: SketchSpec, key_cols: List[str],
-                    out_col: str) -> DataFrame:
-    """The merge stage of every blob table: the ``(keys, out_col)`` rows
-    of ``df`` by canonical key (one partition when global) into one
-    mapInArrow merger, one ``spec.merge_blobs`` row per key. A key's
-    lone non-NULL row, the common case on key-clustered input, passes
-    through as Arrow."""
+def _partition_merger(spec: SketchSpec, key_cols: List[str], arrow_schema):
+    """The merge stage's mapInArrow function: one partition's
+    ``(keys, blob)`` batches to one row per key. A key's lone non-NULL
+    row, the common case on key-clustered input, passes through as
+    Arrow; the partition's other rows stay Arrow too and merge in one
+    ``spec.merge_blob_array`` call (for t-digest, one columnar decode of
+    every blob)."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    df = _canon_float_keys(df.select(*key_cols, out_col), key_cols)
-    df = df.repartition(*key_cols) if key_cols else df.repartition(1)
-    schema = StructType([df.schema[k] for k in key_cols]
-                        + [StructField(out_col, BinaryType(), True)])
-    arrow_schema = to_arrow_schema(schema)
 
     def merge(batches):
         ids = _KeyIds(key_cols)
@@ -1037,7 +1120,7 @@ def _merge_partials(df: DataFrame, spec: SketchSpec, key_cols: List[str],
             return
         single = np.bincount(np.concatenate([c for _, c in held]),
                              minlength=len(ids.keys)) == 1
-        blobs_of: Dict[int, list] = {}
+        rest_blobs, rest_ids = [], []
         for batch, codes in held:
             blobs = batch.column(len(key_cols))
             through = single[codes] & blobs.is_valid().to_numpy(
@@ -1047,17 +1130,41 @@ def _merge_partials(df: DataFrame, spec: SketchSpec, key_cols: List[str],
                 # output stream's batches must share the declared schema
                 yield batch.filter(pa.array(through)).cast(arrow_schema)
             rest = np.flatnonzero(~through)
-            for kid, blob in zip(codes[rest].tolist(),
-                                 blobs.take(pa.array(rest)).to_pylist()):
-                blobs_of.setdefault(kid, []).append(blob)
-        if blobs_of:
+            if rest.size:
+                rest_blobs.append(blobs.take(pa.array(rest)))
+                rest_ids.append(codes[rest])
+        if rest_ids:
+            # every row of a key that does not pass through is here, so
+            # its first row here is its first row: keys in id order
+            kids, dense = np.unique(np.concatenate(rest_ids),
+                                    return_inverse=True)
+            # large_binary: one column may outgrow int32 offsets
+            blobs = pa.concat_arrays(
+                [b.cast(pa.large_binary()) for b in rest_blobs])
             yield _rows_batch(
-                [ids.keys[kid] for kid in blobs_of],
-                [[spec.merge_blobs(b) for b in blobs_of.values()]],
+                [ids.keys[kid] for kid in kids.tolist()],
+                [spec.merge_blob_array(blobs, dense, kids.size)],
                 arrow_schema,
             )
 
-    return df.mapInArrow(merge, schema=schema)
+    return merge
+
+
+def _merge_partials(df: DataFrame, spec: SketchSpec, key_cols: List[str],
+                    out_col: str) -> DataFrame:
+    """The merge stage of every blob table: the ``(keys, out_col)`` rows
+    of ``df`` by canonical key (one partition when global) into one
+    ``_partition_merger`` task each, one ``spec.merge_blobs`` row per
+    key."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    df = _canon_float_keys(df.select(*key_cols, out_col), key_cols)
+    df = df.repartition(*key_cols) if key_cols else df.repartition(1)
+    schema = StructType([df.schema[k] for k in key_cols]
+                        + [StructField(out_col, BinaryType(), True)])
+    return df.mapInArrow(
+        _partition_merger(spec, key_cols, to_arrow_schema(schema)),
+        schema=schema)
 
 
 def sketch_agg(

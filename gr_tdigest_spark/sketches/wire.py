@@ -38,19 +38,29 @@ Payload per centroid: v1 ``mean(F) + weight(u64)``; v2/v3
 
 The digest is always encoded at its own precision; v1/v2 decode infers
 precision from payload length (wire.rs:628-700), v3 reads the header code.
+
+``decode_many`` decodes a whole Arrow binary column for the merge stage:
+v3 blobs with the 64-byte header are parsed in one vectorized pass over
+the column's data buffer (every check of ``decode``, the CRC as one
+``zlib.crc32`` per blob), and any other blob, or one that fails a
+vectorized check, goes through ``decode`` and is spliced in. So
+``decode`` is the only source of ``WireError`` messages.
 """
 
 from __future__ import annotations
 
 import struct
 import zlib
-from typing import Tuple
+from typing import NamedTuple, Tuple
 
 import numpy as np
 
 from gr_tdigest_spark.sketches.tdigest import TDigest, KIND_ATOMIC, KIND_MIXED
 
-__all__ = ["encode", "decode", "wire_precision", "WireError"]
+__all__ = [
+    "encode", "decode", "decode_many", "DecodedBlobs", "wire_precision",
+    "WireError",
+]
 
 MAGIC = b"TDIG"
 HEADER_LEN_V12 = 56
@@ -356,6 +366,173 @@ def _decode_v3(blob: bytes) -> TDigest:
         precision, scale_code, policy_code, pin, int(max_size),
         total_weight, mn, mx, data_sum, means, w, kinds,
     )
+
+
+class DecodedBlobs(NamedTuple):
+    """``decode_many``'s columns: one entry per slot of the input array
+    (header codes as on the wire; ``pin`` is 0 unless the policy is
+    edges; ``min``/``max`` and the weights of f32 slots rounded to f32,
+    as ``TDigest._store`` does), and every slot's centroids as flat
+    arrays: slot ``i`` owns ``bounds[i]:bounds[i + 1]``. A NULL slot has
+    ``valid`` False and no centroids."""
+
+    valid: np.ndarray
+    precision: np.ndarray
+    scale: np.ndarray
+    policy: np.ndarray
+    pin: np.ndarray
+    max_size: np.ndarray
+    count: np.ndarray
+    min: np.ndarray
+    max: np.ndarray
+    sum: np.ndarray
+    n: np.ndarray
+    bounds: np.ndarray
+    means: np.ndarray
+    weights: np.ndarray
+    kinds: np.ndarray
+
+    def empty_like(self, i: int) -> TDigest:
+        """An empty digest with slot ``i``'s config and precision."""
+        return TDigest.empty(
+            int(self.max_size[i]), _CODE_TO_SCALE[int(self.scale[i])],
+            _CODE_TO_POLICY[int(self.policy[i])], int(self.pin[i]), None,
+            _CODE_PRECISION[int(self.precision[i])],
+        )
+
+
+def _gather(buf: np.ndarray, pos: np.ndarray, dtype: str) -> np.ndarray:
+    """The little-endian ``dtype`` value at each byte offset ``pos``."""
+    size = np.dtype(dtype).itemsize
+    return buf[pos[:, None] + np.arange(size)].view(dtype).ravel()
+
+
+def _field(H: np.ndarray, at: int, dtype: str) -> np.ndarray:
+    """The ``dtype`` header field at byte ``at`` of each header row."""
+    return H[:, at:at + np.dtype(dtype).itemsize].copy().view(dtype).ravel()
+
+
+def _parse_v3(buf: np.ndarray, starts: np.ndarray, lens: np.ndarray):
+    """Vectorized ``_decode_v3`` of the blobs at ``buf[starts:+lens]``:
+    ``(ok, H, means, weights, kinds)``, where ``ok`` marks the blobs
+    with the 64-byte header that pass every check ``decode`` makes
+    (the rest are left to ``decode``), ``H`` holds their header rows
+    and the centroid arrays their payloads, blob after blob. Zeroes
+    ``buf``'s CRC slots."""
+    ok = lens >= HEADER_LEN_V3
+    H = buf[starts[ok, None] + np.arange(HEADER_LEN_V3)]
+    n = _field(H, 44, "<u8")
+    payload = (lens[ok] - HEADER_LEN_V3).astype(np.uint64)
+    stride = np.where(H[:, 7] == 1, _stride(3, "f32"), _stride(3, "f64"))
+    hdr_ok = (
+        (H[:, :4] == np.frombuffer(MAGIC, np.uint8)).all(axis=1)
+        & (H[:, 4] == 3) & (H[:, 6] == HEADER_LEN_V3)
+        & ((H[:, 7] == 1) | (H[:, 7] == 2))
+        & (H[:, 8] < len(_CODE_TO_SCALE)) & (H[:, 9] < len(_CODE_TO_POLICY))
+        & ((H[:, 9] != _POLICY_TO_CODE["edges"]) | (H[:, 10] >= 1))
+        & (n <= payload // np.uint64(_stride(3, "f32")))
+    )
+    # n·stride only where n is small enough not to overflow
+    hdr_ok[hdr_ok] = (n[hdr_ok].astype(np.int64) * stride[hdr_ok]
+                      == payload[hdr_ok].astype(np.int64))
+    ok[ok] = hdr_ok
+    H, n, stride = H[hdr_ok], n[hdr_ok].astype(np.int64), stride[hdr_ok]
+    s = starts[ok]
+
+    # CRC over the header with its slot zeroed, then the payload
+    buf[s[:, None] + np.arange(V3_CHECKSUM_OFFSET, HEADER_LEN_V3)] = 0
+    mv = memoryview(buf)
+    crc32 = zlib.crc32
+    crc = np.fromiter(
+        (crc32(mv[a:b]) for a, b in zip(s.tolist(), (s + lens[ok]).tolist())),
+        dtype=np.uint32, count=s.size,
+    )
+    good = ((H[:, 5] & V3_FLAG_CHECKSUM) == 0) | (
+        crc == _field(H, V3_CHECKSUM_OFFSET, "<u4"))
+
+    # centroid j of blob i sits at s[i] + 64 + j·stride[i]
+    blob = np.repeat(np.arange(s.size), n)
+    j = np.arange(blob.size) - np.repeat(np.cumsum(n) - n, n)
+    pos = s[blob] + HEADER_LEN_V3 + j * stride[blob]
+    f32 = H[blob, 7] == 1
+    means = np.empty(blob.size)
+    means[f32] = _gather(buf, pos[f32], "<f4")
+    means[~f32] = _gather(buf, pos[~f32], "<f8")
+    wpos = pos + np.where(f32, 4, 8)
+    weights = _gather(buf, wpos, "<f8")
+    weights[f32] = weights[f32].astype(np.float32)  # TDigest._store
+    kinds = buf[wpos + 8]
+    bad = (kinds > 1) | ~np.isfinite(means) | ~np.isfinite(weights) | (
+        weights < 0)
+    good &= np.bincount(blob[bad], minlength=s.size) == 0
+    ok[ok] = good
+    keep = good[blob]
+    return ok, H[good], means[keep], weights[keep], kinds[keep]
+
+
+def decode_many(arr) -> DecodedBlobs:
+    """Decode every slot of a ``pa.BinaryArray``/``LargeBinaryArray``
+    straight from its offsets and data buffer (a non-zero array offset
+    and NULL slots honoured). v3 blobs with the 64-byte header decode
+    in one vectorized pass; any other blob, or one failing a check,
+    goes through ``decode``, which raises its ``WireError``."""
+    import pyarrow as pa
+
+    size = len(arr)
+    valid = (arr.is_valid().to_numpy(zero_copy_only=False) if arr.null_count
+             else np.ones(size, dtype=bool))
+    _, off_buf, data_buf = arr.buffers()
+    off_dt = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    offsets = np.frombuffer(off_buf, off_dt, count=arr.offset + size + 1)[
+        arr.offset:].astype(np.int64)
+    # a private copy of the column's bytes: _parse_v3 zeroes CRC slots
+    buf = np.frombuffer(data_buf, np.uint8)[offsets[0]:offsets[-1]].copy() \
+        if data_buf is not None else np.empty(0, np.uint8)
+    starts, lens = offsets[:-1] - offsets[0], np.diff(offsets)
+
+    fast = np.flatnonzero(valid)
+    ok, H, means, weights, kinds = _parse_v3(buf, starts[fast], lens[fast])
+    fast, slow = fast[ok], fast[~ok]
+    precision, scale, policy, pin = (np.zeros(size, np.uint8)
+                                     for _ in range(4))
+    max_size = np.zeros(size, np.uint64)
+    count, mn, mx, total = (np.zeros(size) for _ in range(4))
+    n = np.zeros(size, np.int64)
+    precision[fast], scale[fast], policy[fast] = H[:, 7], H[:, 8], H[:, 9]
+    pin[fast] = np.where(H[:, 9] == _POLICY_TO_CODE["edges"], H[:, 10], 0)
+    max_size[fast], n[fast] = _field(H, 12, "<u8"), _field(H, 44, "<u8")
+    count[fast], total[fast] = _field(H, 20, "<f8"), _field(H, 52, "<f8")
+    f32 = H[:, 7] == 1
+    for out, at in ((mn, 28), (mx, 36)):
+        v = _field(H, at, "<f8")
+        v[f32] = v[f32].astype(np.float32)  # TDigest._store
+        out[fast] = v
+
+    digests = [decode(arr[i].as_py()) for i in slow.tolist()]
+    for i, td in zip(slow.tolist(), digests):
+        precision[i] = _PRECISION_CODE[td.precision]
+        scale[i] = _SCALE_TO_CODE[td.scale]
+        policy[i] = _POLICY_TO_CODE[td.policy]
+        pin[i], max_size[i], n[i] = td.pin_per_side, td.max_size, len(td)
+        count[i], mn[i], mx[i], total[i] = td.count, td.min, td.max, td.sum
+    bounds = np.concatenate(([0], np.cumsum(n)))
+    if digests:
+        # scatter the vectorized slots' centroids around the spliced ones
+        fn = n[fast]
+        dest = np.repeat(bounds[fast] - (np.cumsum(fn) - fn), fn) + \
+            np.arange(fn.sum())
+        flat = [np.empty(bounds[-1]), np.empty(bounds[-1]),
+                np.empty(bounds[-1], np.uint8)]
+        for out, vals in zip(flat, (means, weights, kinds)):
+            out[dest] = vals
+        for i, td in zip(slow.tolist(), digests):
+            seg = slice(bounds[i], bounds[i + 1])
+            flat[0][seg], flat[1][seg] = td.means64, td.weights64
+            flat[2][seg] = td.kinds
+        means, weights, kinds = flat
+    return DecodedBlobs(valid, precision, scale, policy, pin, max_size,
+                        count, mn, mx, total, n, bounds, means, weights,
+                        kinds)
 
 
 def encode_pile_groups(

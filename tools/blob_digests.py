@@ -11,7 +11,10 @@ list as JSON. The surfaces are ``sketch_agg`` as the gate plans it
 salted with ``salt_buckets=3`` (``salt``, keyed only),
 ``checkpointed_sketch_agg`` (``ckpt``) and ``merge_sketch_tables`` of
 the odd and even ``l_orderkey`` halves (``mst``; keyless for the
-global key set, t-digest with the default spec). ``cms_topk`` cases
+global key set, t-digest with the default spec). ``rollup`` cases
+build a per-``(l_returnflag, l_orderkey)`` t-digest table (default spec,
+and ``max_size=100, precision='f32'``) and ``merge_sketch_tables`` it by
+``l_returnflag``: thousands of blobs per key. ``cms_topk`` cases
 (global, grouped with a small ``m``, grouped by a float key) record
 their (keys, value, est_count) rows in output order. A case that raises is
 recorded as ``["ERROR <type>"]``. Run it from the root of each checkout
@@ -51,6 +54,12 @@ from gr_tdigest_spark.sources.checkpoint import (  # noqa: E402
 KEY_SETS = (["l_returnflag", "l_linestatus"], ["l_suppkey"], None)
 SURFACES = ("agg", "ckpt", "agg2", "salt", "mst")
 REBALANCE_CONF = "spark.gr_tdigest.agg.rebalance.maxBytes"
+
+# (name, spec) per rollup case
+ROLLUP_CASES = (
+    ("tdigest", TDigestSpec()),
+    ("tdigest_f32", TDigestSpec(max_size=100, precision="f32")),
+)
 
 # (keys, value column, k, m) per cms_topk case
 TOPK_CASES = (
@@ -107,6 +116,15 @@ def build(li, surface, keys, spec, col, w, ckpt_dir):
                       salt_buckets=3 if surface == "salt" else None)
 
 
+def digest_rows(df, keys) -> list:
+    """The sorted (key, sha256(blob)) rows of a ``(keys, b)`` table."""
+    return sorted(
+        [repr(tuple(r[k] for k in keys or [])),
+         hashlib.sha256(bytes(r["b"])).hexdigest()]
+        for r in df.collect()
+    )
+
+
 def main(sf_dir: str, out: str) -> None:
     spark = (
         SparkSession.builder.master("local[4]")
@@ -136,13 +154,9 @@ def main(sf_dir: str, out: str) -> None:
                         continue
                     case = f"{surface}/{name}/{kn}/{col}"
                     try:
-                        df = build(li, surface, keys, spec, col, w,
-                                   os.path.join(tmp, case.replace("/", "_")))
-                        rows = sorted(
-                            [repr(tuple(r[k] for k in keys or [])),
-                             hashlib.sha256(bytes(r["b"])).hexdigest()]
-                            for r in df.collect()
-                        )
+                        rows = digest_rows(build(
+                            li, surface, keys, spec, col, w,
+                            os.path.join(tmp, case.replace("/", "_"))), keys)
                     except Exception as e:  # recorded, not fatal
                         rows = [f"ERROR {type(e).__name__}"]
                     finally:
@@ -150,6 +164,18 @@ def main(sf_dir: str, out: str) -> None:
                     res[case] = rows
                     print(case, len(rows), hashlib.sha256(
                         repr(rows).encode()).hexdigest()[:12], flush=True)
+    for name, spec in ROLLUP_CASES:
+        case = f"rollup/{name}/l_returnflag/l_extendedprice"
+        try:
+            fine = sketch_agg(li, ["l_returnflag", "l_orderkey"],
+                              "l_extendedprice", spec, out_col="b")
+            rows = digest_rows(merge_sketch_tables(
+                [fine], ["l_returnflag"], "b", spec), ["l_returnflag"])
+        except Exception as e:  # recorded, not fatal
+            rows = [f"ERROR {type(e).__name__}"]
+        res[case] = rows
+        print(case, len(rows), hashlib.sha256(
+            repr(rows).encode()).hexdigest()[:12], flush=True)
     for keys, col, k, m in TOPK_CASES:
         kn = "+".join(keys) if keys else "global"
         case = f"topk/{kn}/{col}/k={k}/m={m}"

@@ -8,11 +8,13 @@ Usage: python tools/check_oracles.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -47,7 +49,11 @@ def canon(rows, cols):
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    sf_dir = os.path.abspath(sf_dir)
     only = set(sys.argv[2:])
+    # Python workers start in the JVM's directory and import the package
+    # from there: make it this checkout's root, as for the driver
+    os.chdir(ROOT)
 
     import __spark_entry__ as entrymod
     from gr_tdigest_spark.plans import get_spark

@@ -11,11 +11,14 @@ Writes QUALITY.md. Usage: python tools/quality_report.py
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 from gr_tdigest_spark.sketches.tdigest import TDigest  # noqa: E402
 

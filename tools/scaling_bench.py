@@ -20,13 +20,16 @@ import os
 import subprocess
 import sys
 
+# GEN and MEASURE run in this checkout's root, so they and their
+# Python workers import its package
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 GEN = r"""
-import sys
-sys.path.insert(0, "/root/repo")
+import os, sys
 from gr_tdigest_spark.plans import get_spark
 from gr_tdigest_spark.sources.transcripts import transcripts_df
 n_convs, path = int(sys.argv[1]), sys.argv[2]
-spark = get_spark(cores=32, shuffle_partitions=32)
+spark = get_spark(cores=os.cpu_count(), shuffle_partitions=32)
 spark.sparkContext.setLogLevel("ERROR")
 t = transcripts_df(spark, n_convs=n_convs, seed=42, slices=256)
 t.write.mode("overwrite").parquet(path)
@@ -36,7 +39,6 @@ spark.stop()
 
 MEASURE = r"""
 import sys, time, json, os
-sys.path.insert(0, "/root/repo")
 os.environ.setdefault("SPARK_DRIVER_MEM", "24g")
 from pyspark.sql import functions as F
 import gr_tdigest_spark.functions as Fn
@@ -82,7 +84,7 @@ def main():
     if not os.path.exists(table):
         out = subprocess.run(
             [sys.executable, "-c", GEN, str(n_convs), table],
-            capture_output=True, text=True, timeout=1200,
+            capture_output=True, text=True, timeout=1200, cwd=ROOT,
         )
         if "WROTE" not in out.stdout:
             raise RuntimeError(f"generation failed:\n{out.stderr[-2000:]}")
@@ -92,7 +94,7 @@ def main():
     for cores in (n, n4):
         out = subprocess.run(
             [sys.executable, "-c", MEASURE, str(cores), table],
-            capture_output=True, text=True, timeout=1800,
+            capture_output=True, text=True, timeout=1800, cwd=ROOT,
         )
         lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
         if not lines:
