@@ -66,7 +66,7 @@ def _canon_key(v):
     missing-ish scalar (None / NaN / NaT) is None. NaN never equals
     itself (Python ≥3.10 even hashes it by identity), so NaN keys would
     never merge; a NaN key and a NULL key are one group on every
-    surface, as ``_canon_float_keys`` makes them in the JVM."""
+    surface, as ``_canon_key_col`` makes them in the JVM."""
     if v is None:
         return None
     try:
@@ -996,23 +996,30 @@ def _spread_expr(src: DataFrame, key_cols: List[str], value_col: str,
     return F.xxhash64(*cols)
 
 
+def _canon_key_col(df: DataFrame, name: str, alias: Optional[str] = None):
+    """Key column ``name`` of ``df`` (read through the DataFrame alias
+    ``alias`` when given) as its canonical group identity, in the JVM:
+    a float/double key's NaN becomes NULL and -0.0 becomes +0.0, as
+    ``_canon_key`` makes them in Python; other types are as they are."""
+    dt = df.schema[name].dataType
+    col = F.col(f"{alias}.`{name}`" if alias else f"`{name}`")
+    if not isinstance(dt, (FloatType, DoubleType)):
+        return col
+    return (F.when(F.isnan(col), F.lit(None).cast(dt))
+            .when(col == 0.0, F.lit(0.0).cast(dt))
+            .otherwise(col))
+
+
 def _canon_float_keys(df: DataFrame, key_cols: List[str]) -> DataFrame:
-    """JVM-side canonicalization of float/double KEY columns (NaN→NULL,
-    -0.0→+0.0) so a hash repartition by the raw keys agrees with the
-    partial builders' canonicalized group identity (``_canon_key``):
-    without it a NaN key and a NULL key would land in different
-    partitions and the single-phase plan would emit two rows for the
-    one canonical group the two-phase merger produces."""
+    """``df`` with its float/double KEY columns rewritten canonical
+    (``_canon_key_col``) so a hash repartition by the keys agrees with
+    the partial builders' canonicalized group identity: without it a
+    NaN key and a NULL key would land in different partitions and the
+    single-phase plan would emit two rows for the one canonical group
+    the two-phase merger produces."""
     for c in key_cols:
-        dt = df.schema[c].dataType
-        if isinstance(dt, (FloatType, DoubleType)):
-            col = F.col(c)
-            df = df.withColumn(
-                c,
-                F.when(F.isnan(col), F.lit(None).cast(dt))
-                .when(col == 0.0, F.lit(0.0).cast(dt))
-                .otherwise(col),
-            )
+        if isinstance(df.schema[c].dataType, (FloatType, DoubleType)):
+            df = df.withColumn(c, _canon_key_col(df, c))
     return df
 
 
@@ -1219,6 +1226,16 @@ def sketch_agg(
     return _merge_partials(partials, spec, key_cols, out_col)
 
 
+def _tdigest_spec(df: DataFrame, value_col: str, precision: str = "f64",
+                  **cfg) -> TDigestSpec:
+    """The ``TDigestSpec`` of a build over ``df[value_col]``: ``cfg`` is
+    its other fields, and ``precision='auto'`` infers the precision from
+    the column's Spark type (FloatType → f32, else f64), the reference's
+    Polars input-dtype rule (polars_expr.rs:522-544)."""
+    return TDigestSpec(precision=validation.resolve_auto_precision(
+        precision, df.schema[value_col].dataType), **cfg)
+
+
 def tdigest_agg(
     df: DataFrame,
     keys: Optional[Sequence[str]],
@@ -1239,8 +1256,7 @@ def tdigest_agg(
     polars_expr.rs:247-250).
 
     ``precision='auto'`` infers the digest precision from the value
-    column's Spark type (FloatType → f32, else f64), mirroring the
-    reference's Polars input-dtype rule (polars_expr.rs:522-544).
+    column's Spark type (``_tdigest_spec``).
 
     ``pre_aggregate=True`` first collapses rows to exact (keys, value)
     piles JVM-side — ``groupBy(keys, value).count()`` (or
@@ -1253,11 +1269,8 @@ def tdigest_agg(
     (the kernel coalesces to the same piles). The wrong choice for
     near-unique continuous values, where it adds a full-width shuffle
     for nothing — hence opt-in."""
-    precision = validation.resolve_auto_precision(
-        precision, df.schema[value_col].dataType
-    )
-    spec = TDigestSpec(
-        max_size=max_size, scale=scale, policy=policy,
+    spec = _tdigest_spec(
+        df, value_col, max_size=max_size, scale=scale, policy=policy,
         pin_per_side=pin_per_side, precision=precision, on_invalid=on_invalid,
     )
     if pre_aggregate:

@@ -7,48 +7,40 @@ here never attach a blob to a fact row:
 
 - group-constant probes (``with_group_quantile``): evaluate on the tiny
   digest table, broadcast-join the SCALAR result — pure JVM join.
-- per-row probes (``with_group_cdf``): a broadcast-join of the blob
-  column would move ~17 KB × fact-rows through Arrow into Python
-  (measured 42 s for 600 k rows vs 1-2 s for the map). Instead the
-  digest table ships ONCE per executor as a Spark broadcast variable
-  and a pandas UDF over (keys, probe) decodes each group's digest once
-  per batch; only the key + probe columns cross Arrow.
-- ``strategy='cogroup'`` covers group cardinalities too large to
-  broadcast (#groups × blob exceeding executor memory): facts cogroup
-  with digests on the keys, so each blob crosses once per group.
+- per-row probes (``with_group_cdf``): one iterator Arrow UDF over
+  the key, value and probe columns (the other columns stay in the JVM)
+  attaches the CDF, in one of two layouts chosen from the input. A
+  small input, or one with many keys, is hash-repartitioned by its
+  canonical keys and each task builds its groups' digests from its own
+  rows: no blob is encoded, nothing is collected and, for a small
+  input, no job runs when the DataFrame is built; a task holds one
+  shuffle partition's narrow columns, or its largest group. Few keys
+  over a larger input keep the facts where they are: ``tdigest_agg``'s
+  digests, at most 2 x task slots of them, are collected once and the
+  rows stream through the UDF.
 """
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Iterator, Optional, Sequence, Tuple
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import DoubleType, StructField, StructType
+from pyspark.sql.types import DoubleType
 
 import gr_tdigest_spark.functions as Fn
-from gr_tdigest_spark.operators.agg import tdigest_agg, _canon_key_tuple
-from gr_tdigest_spark.sketches import wire as td_wire
+from gr_tdigest_spark.operators import agg
+from gr_tdigest_spark.operators.agg import (
+    _KeyIds, _PartitionBuild, _canon_key_col, _tdigest_spec, tdigest_agg,
+)
 
 __all__ = [
     "with_group_quantile",
     "with_group_cdf",
     "filter_by_group_quantile",
 ]
-
-
-def _null_canon_key(df: DataFrame, name: str, qualifier: str):
-    """Key expression for the digest join-back: float NaN keys are
-    canonicalized to NULL (mirroring what the aggregate's partial stage
-    does to group keys), so a NaN-keyed fact row matches its digest."""
-    from pyspark.sql.types import DoubleType, FloatType
-
-    c = F.col(f"{qualifier}.`{name}`")
-    if isinstance(df.schema[name].dataType, (DoubleType, FloatType)):
-        return F.when(F.isnan(c), F.lit(None)).otherwise(c)
-    return c
 
 
 def with_group_quantile(
@@ -78,8 +70,8 @@ def with_group_quantile(
     fact, dim = df.alias("__gqf"), F.broadcast(scalars).alias("__gqs")
     cond = None
     for k in key_cols:
-        e = _null_canon_key(df, k, "__gqf").eqNullSafe(
-            _null_canon_key(scalars, k, "__gqs")
+        e = _canon_key_col(df, k, "__gqf").eqNullSafe(
+            _canon_key_col(scalars, k, "__gqs")
         )
         cond = e if cond is None else (cond & e)
     return fact.join(dim, cond, "left").select(
@@ -128,72 +120,94 @@ def filter_by_group_quantile(
     return out.where(cond).drop(thr_col).select(*df.columns)
 
 
-def _broadcast_cdf(df, key_cols, probe_col, out_col, digests):
-    """Digest map as a Spark broadcast variable; fact rows carry only
-    keys + probe through Arrow."""
-    blob_map = {
-        _canon_key_tuple(tuple(r[k] for k in key_cols)): bytes(r["tdigest"])
-        for r in digests.collect()
-    }
-    bc = df.sparkSession.sparkContext.broadcast(blob_map)
+def _group_cdf_udf(spec, names, key_cols, value_col, weight_col,
+                   probe_col, blobs=None):
+    """The iterator Arrow UDF of ``with_group_cdf`` over the columns
+    ``names``: yields the CDF of each row's probe under its group's
+    digest, NaN as NULL. With ``blobs`` (``{canonical key: blob}``) the
+    batches stream through and each probes its groups' digests; without,
+    the task holds its by-key partition's batches, builds every group's
+    digest from them (``_PartitionBuild``) and then probes."""
 
-    @F.pandas_udf(DoubleType())
-    def _cdf(*cols: pd.Series) -> pd.Series:
-        probe = cols[-1]
-        xarr = probe.to_numpy(dtype=np.float64, na_value=np.nan)
-        out = np.full(len(probe), np.nan)
-        if not len(probe):
-            return pd.Series(out)
-        # vectorized key grouping (one factorize per batch, no per-row
-        # Python) — same pattern as the partial builders in agg.py
-        if len(cols) == 2:
-            codes, uniques = pd.factorize(cols[0], use_na_sentinel=False)
-            key_tuples = [_canon_key_tuple((u,)) for u in uniques]
-        else:
-            codes, uniques = pd.factorize(
-                pd.MultiIndex.from_arrays([c for c in cols[:-1]]),
-                use_na_sentinel=False,
-            )
-            key_tuples = [_canon_key_tuple(u) for u in uniques]
+    def probes(batch):
+        return (batch.column(probe_col).cast(pa.float64(), safe=False)
+                .to_numpy(zero_copy_only=False))
+
+    def cdfs(codes, keys, digest_of, xs):
+        out = np.full(codes.size, np.nan)
         order = np.argsort(codes, kind="stable")
-        bounds = np.searchsorted(
-            codes[order], np.arange(len(key_tuples) + 1)
-        )
-        mp = bc.value
-        for gi, key in enumerate(key_tuples):
-            blob = mp.get(key)
-            if blob is None:
-                continue  # unseen group → null, matching a left join
-            idx = order[bounds[gi]:bounds[gi + 1]]
-            out[idx] = td_wire.decode(blob).cdf(xarr[idx])
-        return pd.Series(out)
+        bounds = np.searchsorted(codes[order], np.arange(len(keys) + 1))
+        for gid, key in enumerate(keys):
+            td = digest_of(key) if bounds[gid] < bounds[gid + 1] else None
+            if td is not None:  # None: no valid value in the group
+                rows = order[bounds[gid]:bounds[gid + 1]]
+                out[rows] = td.cdf(xs[rows])
+        return pa.array(out, mask=np.isnan(out))
 
-    return df.withColumn(out_col, _cdf(*key_cols, probe_col))
+    def by_key(batches):
+        part = _PartitionBuild(spec, key_cols, value_col, weight_col)
+        held = [(batch, part.add(batch)) for batch in batches]
+        if not held:
+            return
+        out = cdfs(np.concatenate([c for _, c in held]), part.ids.keys,
+                   part.final_states().get,
+                   np.concatenate([probes(b) for b, _ in held]))
+        start = 0
+        for batch, _ in held:
+            yield out.slice(start, batch.num_rows)
+            start += batch.num_rows
+
+    def from_map(batches):
+        ids, digests = _KeyIds(key_cols), {}
+
+        def digest_of(key):
+            if key not in digests:
+                blob = blobs.get(key)
+                digests[key] = blob and spec.blob_to_state(blob)
+            return digests[key]
+
+        for batch in batches:
+            yield cdfs(ids.codes(batch), ids.keys, digest_of, probes(batch))
+
+    def run(arrays: Iterator[Tuple[pa.Array, ...]]) -> Iterator[pa.Array]:
+        batches = (pa.RecordBatch.from_arrays(
+            list(a) if isinstance(a, tuple) else [a], names=names)
+            for a in arrays)
+        return by_key(batches) if blobs is None else from_map(batches)
+
+    return run
 
 
-def _cogroup_cdf(df, key_cols, probe_col, out_col, digests):
-    """Scale path for huge group counts: facts ⋈ digests via cogroup —
-    each blob crosses the wire once per group, never once per row."""
-    out_schema = StructType(
-        df.schema.fields + [StructField(out_col, DoubleType(), True)]
-    )
-
-    def attach(facts: pd.DataFrame, dig: pd.DataFrame) -> pd.DataFrame:
-        res = facts.copy()
-        if len(dig) and len(facts):
-            td = td_wire.decode(bytes(dig["tdigest"].iloc[0]))
-            xs = facts[probe_col].to_numpy(dtype=np.float64,
-                                           na_value=np.nan)
-            res[out_col] = td.cdf(xs)
-        else:
-            res[out_col] = np.nan
-        return res
-
-    return (
-        df.groupBy(*key_cols)
-        .cogroup(digests.groupBy(*key_cols))
-        .applyInPandas(attach, schema=out_schema)
-    )
+def _few_group_digests(src, key_cols, value_col, weight_col, spec):
+    """``{canonical key: blob}`` of ``src``'s groups when the by-key pass
+    would not serve them, else None. ``src`` is the columns the pass
+    reads. The by-key pass holds a group per task and runs as many tasks
+    as there are keys, so it is right for a small input (Catalyst
+    estimate <= ``_SINGLE_PHASE_SMALL``) or many keys (the sampled
+    probe of ``sketch_agg``'s gate). Few keys over a larger input are
+    built by ``sketch_agg``'s own layout; at most 2 x task slots + 1
+    digest rows are collected, and more rows than 2 x slots (the probe
+    sampled too few keys) fall back to the by-key pass."""
+    spark = src.sparkSession
+    slots = spark.sparkContext.defaultParallelism
+    est = agg._plan_size_bytes(src)
+    if est is not None and est <= agg._SINGLE_PHASE_SMALL:
+        return None
+    # an RDD-backed input's estimate is Long.MaxValue: probe every row
+    if agg._enough_keys_for_by_key(src, key_cols,
+                                   est if est and est < 1 << 62 else 0,
+                                   slots):
+        return None
+    cap = 2 * slots
+    table = agg.sketch_agg(src, key_cols, value_col, spec,
+                           weight_col=weight_col).limit(cap + 1).toArrow()
+    if table.num_rows > cap:
+        return None
+    ids, blobs = _KeyIds(key_cols), {}
+    for batch in table.to_batches():
+        keys = [ids.keys[c] for c in ids.codes(batch).tolist()]
+        blobs.update(zip(keys, batch.column(spec.name).to_pylist()))
+    return blobs
 
 
 def with_group_cdf(
@@ -202,22 +216,46 @@ def with_group_cdf(
     value_col: str,
     probe_col: Optional[str] = None,
     out_col: str = "cdf",
-    strategy: str = "broadcast",
+    weight_col: Optional[str] = None,
     **cfg,
 ) -> DataFrame:
     """Attach the group's CDF evaluated at each row's own value (or at
     ``probe_col``) — ``cdf(tdigest(x), probe).over(keys)``.
 
-    ``strategy='broadcast'`` (default): digest map broadcast once per
-    executor; right whenever #groups × blob fits in memory (a 150k-group
-    × 17 KB table is ~2.5 GB — switch strategies before that).
-    ``strategy='cogroup'``: shuffle-based, blob crosses once per group.
-    """
+    Only the key, value, weight and probe columns cross into Python, in
+    one iterator Arrow UDF (``withColumn``: a column named ``out_col``
+    is replaced). ``_few_group_digests`` picks the layout: a small
+    input, or one with many keys, is hash-repartitioned by its
+    canonical keys (each row keeps its own key values) and each task
+    builds and probes its groups' digests, so the largest group must
+    fit a worker; few keys over a larger input stream unshuffled
+    against ``tdigest_agg``'s collected digests. A row's CDF is
+    ``tdigest_cdf_col`` over ``tdigest_agg``'s digest of its group
+    whenever that aggregate builds the group the same way. ``cfg``
+    holds the ``TDigestSpec`` fields (``precision='auto'`` too). A
+    NULL or NaN probe, or a group with no valid value, gives NULL.
+    Strict-mode (``on_invalid='error'``) errors surface where the
+    digests are built: at the action on the by-key layout, in this
+    call on the few-keys one."""
+    key_cols = list(keys or [])
+    if not key_cols:
+        raise ValueError(
+            "with_group_cdf needs at least one key column; for one "
+            "digest over all rows use tdigest_agg(df, None, value_col) "
+            "and probe it with tdigest_cdf_col"
+        )
     probe_col = probe_col or value_col
-    key_cols = list(keys)
-    digests = tdigest_agg(df, key_cols, value_col, **cfg)
-    if strategy == "broadcast":
-        return _broadcast_cdf(df, key_cols, probe_col, out_col, digests)
-    if strategy == "cogroup":
-        return _cogroup_cdf(df, key_cols, probe_col, out_col, digests)
-    raise ValueError("strategy must be 'broadcast' or 'cogroup'")
+    spec = _tdigest_spec(df, value_col, **cfg)
+    names = list(dict.fromkeys(
+        key_cols + [value_col, probe_col] + ([weight_col] if weight_col else [])
+    ))
+    blobs = _few_group_digests(df.select(*names), key_cols, value_col,
+                               weight_col, spec)
+    if blobs is None:
+        df = df.repartition(*[_canon_key_col(df, k) for k in key_cols])
+    cdf = F.arrow_udf(
+        _group_cdf_udf(spec, names, key_cols, value_col, weight_col,
+                       probe_col, blobs),
+        DoubleType(),
+    )
+    return df.withColumn(out_col, cdf(*[F.col(f"`{n}`") for n in names]))

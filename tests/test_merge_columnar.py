@@ -261,6 +261,21 @@ def test_config_mismatch_with_empty_digest_merges():
     assert interleaved(spec, [group]) == [reference(spec, group)]
 
 
+def test_all_empty_group_keeps_its_first_empty():
+    """A key of only empty digests merges to its first empty digest,
+    with that digest's own config, not to ``spec.empty_blob()``; a key
+    of only NULLs gives ``spec.empty_blob()``."""
+    spec = TDigestSpec()
+    e100 = wire.encode(TDigest.empty(max_size=100))
+    e200 = wire.encode(TDigest.empty(max_size=200))
+    assert e100 != spec.empty_blob()
+    assert spec.merge_blobs([e100, e100]) == e100
+    assert spec.merge_blobs([e100, None, e200]) == e100
+    assert spec.merge_blobs([None, None]) == spec.empty_blob()
+    groups = [[e100, e100], [None, None], [e100, e100, e100], [e200, e100]]
+    assert interleaved(spec, groups) == [e100, spec.empty_blob(), e100, e200]
+
+
 # --------------------------------------------------------------------- #
 # the merge stage's mapInArrow function
 # --------------------------------------------------------------------- #

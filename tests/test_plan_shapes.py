@@ -109,18 +109,28 @@ class TestQueryPlans:
         # top-k must NOT materialize a global sort
         assert "TakeOrderedAndProject" in plan
 
-    def test_broadcast_cdf_adds_no_shuffle(self, spark, sf_dir):
-        """The probe pass ships a broadcast VARIABLE, not a join — the
-        fact table must not be shuffled at all."""
+    def test_group_cdf_one_exchange_one_udf(self, spark, sf_dir):
+        """with_group_cdf on a small input is one by-key pass: building
+        it runs no Spark job, and its plan is one hash Exchange under
+        one ArrowEvalPython (key, value and probe columns only), with
+        no broadcast and no mapInArrow of whole rows."""
         from gr_tdigest_spark.operators.window import with_group_cdf
 
         li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
             "l_returnflag", "l_extendedprice"
         )
+        jobs = spark.sparkContext.statusTracker()
+        before = set(jobs.getJobIdsForGroup(None))
         out = with_group_cdf(
             li, ["l_returnflag"], "l_extendedprice", max_size=200
         )
-        assert _n_exchanges(out) == 0
+        assert set(jobs.getJobIdsForGroup(None)) == before
+        plan = _plan(out)
+        assert _n_exchanges(out) == 1
+        assert len(re.findall(r"\bExchange hashpartitioning\b", plan)) == 1
+        assert len(re.findall(r"\bArrowEvalPython\b", plan)) == 1
+        assert "BroadcastExchange" not in plan
+        assert "MapInArrow" not in plan
 
     def test_exact_dedup_single_exchange_semi_join(self, spark, sf_dir):
         from gr_tdigest_spark.operators.dedup import dedup_exact

@@ -823,25 +823,191 @@ class TestNullableGroupKeys:
         assert counts == {"a": 300.0, None: 300.0}
 
 
+def _plan_of(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 class TestGroupCdfStrategies:
-    def test_cogroup_matches_broadcast(self, spark, sf_dir):
+    """with_group_cdf's two input-selected layouts: a by-key pass that
+    builds and probes each group's digest in one task, and, for few
+    keys over a larger input, a streaming probe of tdigest_agg's
+    collected digests."""
+
+    def test_matches_tdigest_agg_cdf(self, spark, sf_dir):
+        """Every row's CDF is bitwise tdigest_cdf_col over tdigest_agg's
+        digest of its group (single-phase at this size, so both build
+        each group from all its rows at once)."""
         from gr_tdigest_spark.operators.window import with_group_cdf
 
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").where(
-            "l_orderkey % 7 = 0")  # deterministic subset (limit() is not)
-        cfg = dict(max_size=20000, policy="off")
-        # (l_orderkey, l_linenumber) is NOT unique in the synthetic
-        # data — compare sorted multisets, not dicts
-        def rows(strategy):
-            return sorted(
-                tuple(r) for r in with_group_cdf(
-                    li, ["l_returnflag"], "l_extendedprice",
-                    strategy=strategy, **cfg,
-                ).select("l_orderkey", "l_linenumber", "cdf").collect()
-            )
+        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        for keys, w in ((["l_returnflag", "l_linestatus"], None),
+                        (["l_suppkey"], None),
+                        (["l_returnflag"], "l_quantity")):
+            cfg = dict(max_size=100, weight_col=w)
+            cols = ["l_orderkey", "l_linenumber", "l_extendedprice", *keys]
+            got = sorted(tuple(r) for r in with_group_cdf(
+                li, keys, "l_extendedprice", **cfg
+            ).select(*cols, "cdf").collect())
+            dg = tdigest_agg(li, keys, "l_extendedprice", **cfg)
+            cond = [li[k] == dg[k] for k in keys]
+            want = sorted(tuple(r) for r in li.join(dg, cond, "left").select(
+                *[li[c] for c in cols],
+                Fn.tdigest_cdf_col("tdigest", "l_extendedprice"),
+            ).collect())
+            assert len(got) == li.count()
+            assert got == want, (keys, w)
 
-        a, b = rows("broadcast"), rows("cogroup")
-        assert a == b and len(a) > 100
+    def test_few_fat_groups_stream_unshuffled(self, spark):
+        """Three groups over a 3 M-row input (est. > 24 MB), each spread
+        over every partition: the digests come from tdigest_agg's
+        two-phase layout, the facts are not shuffled, and every row's
+        CDF is bitwise tdigest_cdf_col over those digests."""
+        from gr_tdigest_spark.operators.window import with_group_cdf
+
+        df = spark.range(0, 3_000_000, 1, 8).select(
+            "id", F.pmod("id", F.lit(3)).alias("g"),
+            (F.xxhash64("id") % 100_000 / 7.0).alias("x"))
+        out = with_group_cdf(df, ["g"], "x", max_size=100)
+        assert "Exchange" not in _plan_of(out)
+        dg = tdigest_agg(df, ["g"], "x", max_size=100)
+        want = df.join(F.broadcast(dg), "g").select(
+            "id", Fn.tdigest_cdf_col("tdigest", "x").alias("want"))
+        bad = out.join(want, "id").where(
+            ~F.col("cdf").eqNullSafe(F.col("want"))).count()
+        assert bad == 0
+        assert out.where(F.col("cdf").isNull()).count() == 0
+
+    def test_probe_undercount_falls_back_to_by_key(self, spark,
+                                                   monkeypatch):
+        """When the sampled key probe says few keys but the digest table
+        has more than 2 x slots rows, the by-key pass runs instead."""
+        from gr_tdigest_spark.operators import agg
+        from gr_tdigest_spark.operators.window import with_group_cdf
+
+        monkeypatch.setattr(agg, "_SINGLE_PHASE_SMALL", 0)
+        monkeypatch.setattr(agg, "_enough_keys_for_by_key",
+                            lambda *a, **k: False)
+        df = spark.range(0, 4000, 1, 4).select(
+            "id", F.pmod("id", F.lit(50)).alias("g"),
+            (F.col("id") * 0.5).alias("x"))
+        out = with_group_cdf(df, ["g"], "x", max_size=100)
+        assert "Exchange hashpartitioning" in _plan_of(out)
+        dg = tdigest_agg(df, ["g"], "x", max_size=100)
+        want = df.join(dg, "g").select(
+            "id", Fn.tdigest_cdf_col("tdigest", "x").alias("want"))
+        assert out.join(want, "id").where(
+            ~F.col("cdf").eqNullSafe(F.col("want"))).count() == 0
+
+    def test_only_key_value_probe_cross_to_python(self, spark):
+        """Other columns stay in the JVM: a CalendarIntervalType column,
+        which Arrow conversion rejects, rides through unchanged."""
+        from gr_tdigest_spark.operators.window import with_group_cdf
+
+        df = spark.createDataFrame(
+            [("a", 1.0), ("a", 2.0), ("b", 3.0)], "g string, x double"
+        ).withColumn("iv", F.make_interval(F.lit(0), F.lit(1)))
+        out = with_group_cdf(df, ["g"], "x")
+        assert out.columns == ["g", "x", "iv", "cdf"]
+        rows = sorted(out.select(
+            "g", "x", "cdf", F.col("iv").isNotNull()).collect())
+        assert [tuple(r) for r in rows] == [
+            ("a", 1.0, 0.25, True), ("a", 2.0, 0.75, True),
+            ("b", 3.0, 0.5, True)]
+
+    @pytest.mark.parametrize("layout", ["by_key", "few_keys"])
+    def test_float_and_null_keys(self, spark, layout):
+        """NaN and NULL keys are one group, -0.0 and 0.0 another; the
+        output keeps each row's own key; a NULL or NaN probe gives
+        NULL (the values pinned from the broadcast plan it replaces).
+        A VALUES relation has a known small size (by-key layout), a
+        list-built frame does not (sampled probe, few-keys layout)."""
+        from gr_tdigest_spark.operators.window import with_group_cdf
+
+        nan = float("nan")
+        keys = [nan, nan, None, None, -0.0, 0.0, 1.0, 2.0]
+        xs = [1.0, 2.0, 3.0, 4.0, 5.0, 6.0, None, nan]
+        if layout == "by_key":
+            sql = lambda v: "NULL" if v is None else f"double('{v}')"
+            df = spark.sql("SELECT * FROM VALUES " + ", ".join(
+                f"({i}, {sql(g)}, {sql(x)})"
+                for i, (g, x) in enumerate(zip(keys, xs))
+            ) + " AS t(i, g, x)")
+        else:
+            df = spark.createDataFrame(list(zip(range(8), keys, xs)),
+                                       "i int, g double, x double")
+        out = with_group_cdf(df, ["g"], "x", on_invalid="drop", max_size=100)
+        assert ("Exchange" in _plan_of(out)) == (layout == "by_key")
+        rows = sorted(out.collect())
+        assert [r.i for r in rows] == list(range(8))
+        keys = [r.g for r in rows]
+        assert np.isnan(keys[0]) and np.isnan(keys[1])
+        assert keys[2:4] == [None, None]
+        assert [str(k) for k in keys[4:]] == ["-0.0", "0.0", "1.0", "2.0"]
+        assert [r.cdf for r in rows] == [
+            0.125, 0.375, 0.625, 0.875, 0.25, 0.75, None, None]
+
+    @pytest.mark.parametrize("layout", ["by_key", "few_keys"])
+    def test_weighted_with_probe_col(self, spark, layout):
+        """weight_col and a separate probe_col, on both layouts (a
+        pandas-built frame is a sized local relation, a list-built one
+        is RDD-backed): each row's CDF is tdigest_cdf_col at its probe
+        over tdigest_agg's weighted digest of its group (groups under
+        capacity, so every layout builds the same digest)."""
+        import pandas as pd
+        from gr_tdigest_spark.operators.window import with_group_cdf
+
+        rng = np.random.default_rng(5)
+        rows = [(i, ["a", "b", "c"][i % 3], float(rng.normal()),
+                 float(rng.integers(1, 5)), float(rng.normal()))
+                for i in range(300)]
+        cols = ["i", "g", "x", "w", "p"]
+        df = (spark.createDataFrame(pd.DataFrame(rows, columns=cols))
+              if layout == "by_key" else spark.createDataFrame(rows, cols))
+        out = with_group_cdf(df, ["g"], "x", probe_col="p", weight_col="w",
+                             max_size=500)
+        assert ("Exchange" in _plan_of(out)) == (layout == "by_key")
+        dg = tdigest_agg(df, ["g"], "x", weight_col="w", max_size=500)
+        want = df.join(dg, "g").select(
+            "i", Fn.tdigest_cdf_col("tdigest", "p").alias("want"))
+        got = dict(out.select("i", "cdf").collect())
+        assert got == dict(want.collect())
+
+    def test_out_col_replaces_existing_column(self, spark):
+        from gr_tdigest_spark.operators.window import with_group_cdf
+
+        df = spark.createDataFrame(
+            [("a", 1.0), ("a", 2.0), ("b", 3.0)], "g string, x double")
+        once = with_group_cdf(df, ["g"], "x")
+        twice = with_group_cdf(once, ["g"], "x")
+        assert twice.columns == ["g", "x", "cdf"]
+        assert sorted(twice.collect()) == sorted(once.collect())
+
+    def test_strict_mode_raises(self, spark):
+        """A NaN value under on_invalid='error' raises where the digests
+        are built: at the action on the by-key layout (a small
+        local-relation input), in the call on the few-keys layout (an
+        RDD-backed input, whose size Catalyst does not know)."""
+        import pandas as pd
+        from gr_tdigest_spark.operators.window import with_group_cdf
+
+        msg = r"sample value \(NaN or ±inf\) is not allowed"
+        rows = [("a", 1.0), ("a", float("nan"))]
+        small = spark.createDataFrame(pd.DataFrame(rows, columns=["g", "x"]))
+        out = with_group_cdf(small, ["g"], "x")
+        with pytest.raises(Exception, match=msg):
+            out.collect()
+        unsized = spark.createDataFrame(rows, "g string, x double")
+        with pytest.raises(Exception, match=msg):
+            with_group_cdf(unsized, ["g"], "x")
+
+    @pytest.mark.parametrize("keys", [[], None], ids=["empty", "none"])
+    def test_keyless_call_raises(self, spark, keys):
+        from gr_tdigest_spark.operators.window import with_group_cdf
+
+        df = spark.createDataFrame([(1.0,)], "x double")
+        with pytest.raises(ValueError,
+                           match=r"tdigest_agg\(df, None, value_col\)"):
+            with_group_cdf(df, keys, "x")
 
     def test_multi_key_broadcast_cdf(self, spark, sf_dir):
         from gr_tdigest_spark.operators.window import with_group_cdf

@@ -16,9 +16,12 @@ build a per-``(l_returnflag, l_orderkey)`` t-digest table (default spec,
 and ``max_size=100, precision='f32'``) and ``merge_sketch_tables`` it by
 ``l_returnflag``: thousands of blobs per key. ``cms_topk`` cases
 (global, grouped with a small ``m``, grouped by a float key) record
-their (keys, value, est_count) rows in output order. A case that raises is
-recorded as ``["ERROR <type>"]``. Run it from the root of each checkout
-and diff the outputs:
+their (keys, value, est_count) rows in output order. ``group_cdf`` cases
+run ``with_group_cdf`` for both keyed key sets, over ``l_extendedprice``
+in 'error' mode and over ``x_bad`` in 'drop' mode, and record the row
+count and the sha256 of the sorted (l_orderkey, l_linenumber, cdf)
+rows. A case that raises is recorded as ``["ERROR <type>"]``. Run it
+from the root of each checkout and diff the outputs:
 
     python tools/blob_digests.py <sf_dir> <out.json>
 """
@@ -47,6 +50,7 @@ from gr_tdigest_spark.operators.companions import (  # noqa: E402
 from gr_tdigest_spark.operators.rollup import (  # noqa: E402
     merge_sketch_tables,
 )
+from gr_tdigest_spark.operators.window import with_group_cdf  # noqa: E402
 from gr_tdigest_spark.sources.checkpoint import (  # noqa: E402
     checkpointed_sketch_agg,
 )
@@ -66,6 +70,12 @@ TOPK_CASES = (
     (None, "l_returnflag", 3, None),
     (["l_returnflag", "l_linestatus"], "l_suppkey", 5, 8),
     (["l_discount"], "l_suppkey", 3, None),
+)
+
+# (name, value column, cfg) per group_cdf case
+CDF_CASES = (
+    ("error", "l_extendedprice", dict(max_size=100)),
+    ("drop", "x_bad", dict(max_size=100, on_invalid="drop")),
 )
 
 
@@ -190,6 +200,19 @@ def main(sf_dir: str, out: str) -> None:
         res[case] = rows
         print(case, len(rows), hashlib.sha256(
             repr(rows).encode()).hexdigest()[:12], flush=True)
+    for keys in KEY_SETS[:2]:
+        for name, col, cfg in CDF_CASES:
+            case = f"group_cdf/{name}/{'+'.join(keys)}/{col}"
+            try:
+                got = sorted(repr(tuple(r)) for r in with_group_cdf(
+                    li, keys, col, **cfg,
+                ).select("l_orderkey", "l_linenumber", "cdf").collect())
+                rows = [len(got), hashlib.sha256(
+                    "\n".join(got).encode()).hexdigest()]
+            except Exception as e:  # recorded, not fatal
+                rows = [f"ERROR {type(e).__name__}"]
+            res[case] = rows
+            print(case, rows, flush=True)
     with open(out, "w") as f:
         json.dump(res, f, indent=0)
     spark.stop()
