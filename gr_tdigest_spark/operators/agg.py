@@ -22,7 +22,9 @@ Design points for the 100 TB / 1000-executor shape:
   from the Arrow batch, and each spec's columnar ``build_from_codes``
   builds every group of a flush at once — one hash/sort/reduceat pass,
   no per-group numpy dispatch. That is the per-conversation case: many
-  small groups.
+  small groups. For t-digest the one builder is the blob encoder
+  (``TDigestSpec.build_blobs_from_codes``); its states are the decode
+  of its blobs.
 - The final merge is partition-wise (``_merge_partials``: mapInArrow
   over hash-partitioned partials), so per-group scheduling overhead is
   gone; an optional ``salt_buckets`` level adds a treeAggregate-style
@@ -162,7 +164,8 @@ class SketchSpec:
         """Columnar core of every partial build: ``{key: state}`` for
         each group with surviving rows. ``codes`` (int64, aligned with
         ``values``) index the distinct ``key_tuples``; values arrive in
-        the numpy form Spark's pandas conversion gives, unfiltered."""
+        the numpy form Spark's pandas conversion gives, unfiltered.
+        ``TDigestSpec`` builds blobs and returns their decode here."""
         raise NotImplementedError
 
     def build_blobs_from_codes(
@@ -173,7 +176,7 @@ class SketchSpec:
         weights: Optional[np.ndarray],
     ) -> Tuple[list, list]:
         """``(keys, blobs)`` of the non-empty groups — the partial
-        builder's single-flush output."""
+        builder's single-flush output, and a stream's micro-batch."""
         states = self.build_from_codes(codes, key_tuples, values, weights)
         return list(states), [self.state_to_blob(s) for s in states.values()]
 
@@ -362,23 +365,6 @@ class TDigestSpec(SketchSpec):
             out[kid] = self.state_to_blob(result)
         return out
 
-    def _pile_digest(
-        self, means: np.ndarray, weights: np.ndarray,
-        total_w: float, total_mw: float,
-    ) -> TDigest:
-        """Construct the (provably) uncompressed digest directly from the
-        group's coalesced piles — skips pipeline stages 2-6."""
-        td = self._empty()
-        td.means = means
-        td.weights = np.where(weights <= 1.0, 1.0, weights)
-        td.kinds = np.zeros(means.size, dtype=np.uint8)
-        td.count = total_w
-        td.sum = total_mw
-        td.min = float(means[0])
-        td.max = float(means[-1])
-        td._store()
-        return td
-
     def _prepare_runs(
         self,
         codes: np.ndarray,
@@ -386,9 +372,10 @@ class TDigestSpec(SketchSpec):
         vals: np.ndarray,
         ws: Optional[np.ndarray],
     ):
-        """Shared preprocessing for the vectorized builders: validate/
-        clean, one lexsort over (key code, value), one reduceat pass for
-        pile coalescing. Returns None when no rows survive."""
+        """The builder's runs: validate/clean, one lexsort over (key
+        code, value), one reduceat pass coalescing equal values into
+        piles. Returns (run means, run weights, each group's run
+        bounds), or None when no rows survive."""
         if self.on_invalid == "drop":
             keep = np.isfinite(np.asarray(vals, dtype=np.float64))
             if ws is not None:
@@ -412,11 +399,7 @@ class TDigestSpec(SketchSpec):
         order = np.lexsort((vals, codes))
         sc = codes[order]
         sv = vals[order]
-        sw = ws[order] if ws is not None else None
-
-        group_bounds = np.searchsorted(sc, np.arange(n_groups + 1))
-
-        w_all = sw if sw is not None else np.ones(sv.size)
+        w_all = ws[order] if ws is not None else np.ones(sv.size)
         # coalesce equal (group, value) runs globally
         new_run = np.empty(sv.size, dtype=bool)
         new_run[0] = True
@@ -430,9 +413,7 @@ class TDigestSpec(SketchSpec):
         grp_run_bounds = np.searchsorted(
             run_group, np.arange(n_groups + 1)
         )
-        return (
-            sw, w_all, group_bounds, run_means, run_weights, grp_run_bounds
-        )
+        return run_means, run_weights, grp_run_bounds
 
     def build_from_codes(
         self,
@@ -441,54 +422,10 @@ class TDigestSpec(SketchSpec):
         vals: np.ndarray,
         ws: Optional[np.ndarray],
     ) -> Dict[tuple, TDigest]:
-        """Core vectorized multi-group build: direct digest construction
-        for no-merge groups, kernel compress for the rest."""
-        out: Dict[tuple, TDigest] = {}
-        prep = self._prepare_runs(codes, len(key_tuples), vals, ws)
-        if prep is None:
-            return out
-        (sw, w_all, group_bounds, run_means, run_weights,
-         grp_run_bounds) = prep
-        no_merge_factor = _NO_MERGE_FACTOR.get(self.scale, 0.0) * 0.99
-
-        for gi, key in enumerate(key_tuples):
-            r0, r1 = grp_run_bounds[gi], grp_run_bounds[gi + 1]
-            if r1 <= r0:
-                continue
-            n_distinct = r1 - r0
-            g0, g1 = group_bounds[gi], group_bounds[gi + 1]
-            # sequential sum over RUN weights — identical operands and
-            # association to the columnar path's reduceat counts
-            total_w = (
-                float(np.add.reduceat(run_weights[r0:r1], [0])[0])
-                if sw is not None else float(g1 - g0)
-            )
-            if (
-                total_w < no_merge_factor * self.max_size
-                and n_distinct <= self.max_size
-                and (sw is None or bool(np.all(run_weights[r0:r1] >= 1.0)))
-            ):
-                # ∑w·mean via np.add.reduceat — the SAME strictly
-                # sequential association build_blobs_from_codes uses
-                # (np.dot/np.add.reduce are pairwise/BLAS-ordered), so
-                # the two partial paths emit bit-identical data_sum
-                # headers and tdigest_sum cannot depend on which path a
-                # partition happened to take (r2 advice)
-                td = self._pile_digest(
-                    run_means[r0:r1].copy(),
-                    run_weights[r0:r1].copy(),
-                    total_w,
-                    float(np.add.reduceat(
-                        run_means[r0:r1] * run_weights[r0:r1], [0]
-                    )[0]),
-                )
-            else:
-                td = self._empty()
-                # piles are already sorted+coalesced: run the pipeline on
-                # them instead of the raw rows (≤ distinct-count items)
-                td._compress(run_means[r0:r1], run_weights[r0:r1])
-            out[key] = td
-        return out
+        """``{key: TDigest}``: the decode of ``build_blobs_from_codes``'
+        blobs, so a state and a blob never disagree."""
+        keys, blobs = self.build_blobs_from_codes(codes, key_tuples, vals, ws)
+        return {k: td_wire.decode(b) for k, b in zip(keys, blobs)}
 
     def build_blobs_from_codes(
         self,
@@ -497,22 +434,21 @@ class TDigestSpec(SketchSpec):
         vals: np.ndarray,
         ws: Optional[np.ndarray],
     ):
-        """Columnar partial output: encode TDIG v3 blobs straight from
-        the coalesced run arrays — no per-key TDigest object, no states
-        dict. No-merge groups (the common case at high key cardinality:
-        many small groups) go through the vectorized multi-group encoder
-        (wire.encode_pile_groups); groups that need compression fall
-        back to the kernel. Returns (keys, blobs) for non-empty groups.
+        """The t-digest partial builder: TDIG v3 blobs straight from
+        the coalesced run arrays, with no per-key TDigest object.
+        No-merge groups (the common case at high key cardinality: many
+        small groups) go through the vectorized multi-group encoder
+        (``wire.encode_pile_groups``); groups that need compression go
+        through the kernel. Returns (keys, blobs) for non-empty groups.
 
-        Group count/sum here come from reduceat over the run arrays —
-        same values as the per-key np.sum/np.dot of the states path up
-        to summation order (integer-weight counts are exact either way).
+        Group count/sum come from a strictly sequential ``reduceat``
+        over the run arrays, the association the kernel's ``_normalize``
+        uses too.
         """
         prep = self._prepare_runs(codes, len(key_tuples), vals, ws)
         if prep is None:
             return [], []
-        (sw, w_all, group_bounds, run_means, run_weights,
-         grp_run_bounds) = prep
+        run_means, run_weights, grp_run_bounds = prep
         n_groups = len(key_tuples)
         nruns = run_means.size
 
@@ -530,7 +466,7 @@ class TDigestSpec(SketchSpec):
         counts = np.where(valid, counts, 0.0)
         sums = np.where(valid, sums, 0.0)
         n_distinct = b1 - b0
-        if sw is not None:
+        if ws is not None:
             min_w = np.minimum.reduceat(np.append(run_weights, np.inf), idx)
             all_ge1 = np.where(valid, min_w >= 1.0, False)
         else:

@@ -1030,12 +1030,21 @@ def bloom_filter_rows(
     integer key column crosses the Arrow boundary as float64, so pass
     ``key_dtype="int64"`` (or pre-filter nulls) to probe with the
     ingested dtype. A Bloom table with no rows (built over empty input)
-    is the empty filter: no row passes, ``negate=True`` keeps all.
+    or a NULL blob (a keyless merge of NULL rows) is the empty filter:
+    no row passes, ``negate=True`` keeps all. A table of more than one
+    row (a keyed Bloom table) raises ``ValueError``: merge it without
+    keys first.
     """
-    row = bloom_df.select(blob_col).first()
-    if row is None:
+    rows = bloom_df.select(blob_col).limit(2).collect()
+    if len(rows) > 1:
+        raise ValueError(
+            "bloom_filter_rows needs a one-row Bloom table, got "
+            f"{len(rows)} or more rows; merge_sketch_tables it without "
+            "keys first"
+        )
+    if not rows or rows[0][0] is None:
         return df if negate else df.where(F.lit(False))
-    bc = df.sparkSession.sparkContext.broadcast(bytes(row[0]))
+    bc = df.sparkSession.sparkContext.broadcast(bytes(rows[0][0]))
 
     @F.pandas_udf(BooleanType())
     def _member(keys: pd.Series) -> pd.Series:

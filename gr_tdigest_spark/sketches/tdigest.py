@@ -124,9 +124,9 @@ def _normalize(
     run_means = means[starts] + 0.0
     run_weights = np.add.reduceat(weights, starts)
     # strictly sequential (reduceat) association for count/sum — the
-    # single canonical ordering shared with both distributed partial
-    # paths (agg.py build_from_codes / build_blobs_from_codes), so the
-    # data_sum header never depends on which code path built the blob
+    # ordering the partial builder (agg.py build_blobs_from_codes) uses
+    # too, so a digest's data_sum header does not depend on whether
+    # its piles went through this pipeline or the pile encoder
     total_w = float(np.add.reduceat(run_weights, [0])[0])
     total_mw = float(np.add.reduceat(run_means * run_weights, [0])[0])
     out_w = _coerce_pile_weights(run_weights)

@@ -552,12 +552,13 @@ def encode_pile_groups(
 
     Group ``i`` owns runs ``bounds[i]:bounds[i+1]`` of the (sorted,
     coalesced) ``run_means``/``run_weights`` arrays; ``counts``/``sums``
-    carry the group totals computed from the ORIGINAL weights. Produces
-    byte-for-byte the same blob as ``encode(_pile_digest(...), 3)``
-    without constructing a TDigest object per key: the payload matrix
-    and header field columns are built in numpy for all groups, leaving
-    only crc32 (zlib, C) + slicing in the per-key loop. Empty groups
-    yield None.
+    carry the group totals computed from the ORIGINAL weights. Each
+    blob is byte-for-byte ``encode(td, 3)`` of the uncompressed digest
+    ``td`` of the group's piles (atomic centroids, weights below 1
+    stored as 1, min/max the first/last run), without constructing a
+    TDigest object per key: the payload matrix and header field columns
+    are built in numpy for all groups, leaving only crc32 (zlib, C) +
+    slicing in the per-key loop. Empty groups yield None.
     """
     scale_code = _SCALE_TO_CODE[scale]
     policy_code = _POLICY_TO_CODE[policy]

@@ -4,10 +4,11 @@ Any ``SketchSpec`` monoid (t-digest, HLL, CMS, Bloom, KLL, MinHash,
 bottom-k) plugs into the same ``applyInPandasWithState`` plan: one
 sketch blob per key in the state store, updated per micro-batch,
 emitted in update mode. The batch path and the streaming path share the
-input projection, the columnar ``build_from_codes`` and the kernel
-monoid, so a streaming aggregate equals the batch aggregate over the
-same rows (tested), and watermark/window semantics compose by adding
-the window column to ``keys``.
+input projection, the columnar ``build_blobs_from_codes`` and
+``merge_blobs``: each micro-batch's blob merges into the stored one, so
+a streaming aggregate equals the in-order merge of the batch
+aggregates of its micro-batches (tested), and watermark/window
+semantics compose by adding the window column to ``keys``.
 """
 
 from __future__ import annotations
@@ -68,24 +69,22 @@ def sketch_stream_agg(
         frames = [pdf[value_col].to_numpy() for pdf in pdfs]
         vals = np.concatenate(frames) if frames else np.empty(0)
         n_new = float(spec.clean_values(vals, None)[0].size)
-        built = spec.build_from_codes(
+        _, built = spec.build_blobs_from_codes(
             np.zeros(vals.size, dtype=np.int64), [key], vals, None
-        ).get(key)
+        )
         if state.exists:
-            blob, rows = state.get
-            sk = spec.blob_to_state(bytes(blob))
-            if built is not None:
-                sk = spec.merge_states(sk, built)
+            stored, rows = state.get
+            blob = spec.merge_blobs([bytes(stored)] + built)
             rows = float(rows) + n_new
-        elif built is None:
+        elif not built:
             return
         else:
-            sk, rows = built, n_new
-        blob = spec.state_to_blob(sk)
+            blob, rows = built[0], n_new
         state.update((blob, rows))
         row = dict(zip(key_cols, key))
         row[out_col] = blob
-        row["n"] = float(count_fn(sk)) if count_fn is not None else rows
+        row["n"] = (float(count_fn(spec.blob_to_state(blob)))
+                    if count_fn is not None else rows)
         yield pd.DataFrame([row], columns=key_cols + [out_col, "n"])
 
     return (

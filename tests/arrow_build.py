@@ -31,11 +31,16 @@ def build_states(spec, pdf, key_cols, value_col, weight_col=None):
     )
 
 
-def build_blobs(spec, pdf, key_cols, value_col, weight_col=None, **kw):
+def build_blobs(spec, pdf, key_cols, value_col, weight_col=None,
+                batch_rows=None, **kw):
     """``{key: blob}`` emitted by ``_partial_builder_arrow`` for the
-    frame as one partition (``kw`` reaches the builder, e.g.
-    ``flush_rows``)."""
+    frame as one partition, fed as batches of ``batch_rows`` rows (one
+    batch when None; ``kw`` reaches the builder, e.g. ``flush_rows``)."""
     batch = pa.RecordBatch.from_pandas(pdf, preserve_index=False)
+    batches = [batch] if not batch_rows else [
+        batch.slice(i, batch_rows)
+        for i in range(0, batch.num_rows, batch_rows)
+    ]
     types = from_arrow_schema(batch.schema)
     schema = StructType(
         [types[k] for k in key_cols] + [StructField("b", BinaryType())]
@@ -44,7 +49,7 @@ def build_blobs(spec, pdf, key_cols, value_col, weight_col=None, **kw):
         spec, key_cols, value_col, weight_col, schema, **kw
     )
     out = {}
-    for part in build(iter([batch])):
+    for part in build(iter(batches)):
         for row in part.to_pylist():
             out[tuple(row[k] for k in key_cols)] = row["b"]
     return out

@@ -139,8 +139,8 @@ def test_encode_batch_keys_wide_key_space(n_cols):
 
 
 class TestColumnarBlobPath:
-    """build_blobs_from_codes (columnar partial output) must agree with
-    the states path (build_from_codes → encode) for every config."""
+    """build_from_codes' states are the decode of build_blobs_from_codes'
+    blobs: they re-encode to the same bytes for every config."""
 
     def _compare(self, prec, weighted, seed):
         rng = np.random.default_rng(seed)
@@ -162,9 +162,6 @@ class TestColumnarBlobPath:
         from gr_tdigest_spark.sketches import wire
         bmap = dict(zip(k2, blobs))
         for key, st in states.items():
-            # byte-identical: both paths use the same sequential
-            # ∑w·mean association (r2 advice — partition-layout
-            # independence of the data_sum header)
             assert wire.encode(st, 3) == bmap[key], key
 
     def test_f64_unit(self):

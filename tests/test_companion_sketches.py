@@ -369,6 +369,36 @@ class TestBloomSemiFilter:
             li, "l_orderkey", bl, negate=True
         ).count() == li.count()
 
+    def test_null_blob_is_empty_filter(self, spark):
+        """A keyless merge of NULL Bloom rows is a NULL blob: the empty
+        filter, as a Bloom table with no rows is."""
+        from gr_tdigest_spark.operators.companions import (
+            BloomSpec, bloom_filter_rows,
+        )
+        from gr_tdigest_spark.operators.rollup import merge_sketch_tables
+
+        nulls = spark.createDataFrame([(None,), (None,)], "bloom binary")
+        bl = merge_sketch_tables([nulls], [], "bloom", BloomSpec())
+        assert bl.collect()[0]["bloom"] is None
+        facts = spark.range(10).withColumnRenamed("id", "k")
+        assert bloom_filter_rows(facts, "k", bl).count() == 0
+        assert bloom_filter_rows(facts, "k", bl, negate=True).count() == 10
+
+    def test_multi_row_table_raises(self, spark):
+        """A keyed Bloom table has one filter per key: probing one of
+        them would drop the others' members, so it is refused."""
+        from gr_tdigest_spark.operators.companions import (
+            bloom_agg, bloom_filter_rows,
+        )
+
+        keyed = bloom_agg(
+            spark.createDataFrame([(0, 1), (1, 7)], "g int, v long"),
+            ["g"], "v", m_bits=1 << 10,
+        )
+        facts = spark.range(10).withColumnRenamed("id", "k")
+        with pytest.raises(ValueError, match="2 or more rows"):
+            bloom_filter_rows(facts, "k", keyed)
+
 
 class TestCmsTopKCogroup:
     """Grouped top-k under near-uniform counts, with m above the

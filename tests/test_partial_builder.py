@@ -1,13 +1,16 @@
 """The one partial-build path: the values it hashes and the blobs it
 emits on every surface that runs it (sketch_agg, checkpoint, stream)."""
 
+import hashlib
 from functools import reduce
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from arrow_build import build_blobs
 from gr_tdigest_spark.operators.agg import SketchSpec, TDigestSpec, sketch_agg
 from gr_tdigest_spark.operators.companions import (
     BloomSpec, BottomKSpec, CMSSpec, HLLSpec, KLLSpec, MinHashSpec,
@@ -157,3 +160,91 @@ def test_surfaces_emit_identical_blobs(spark, surface_src, tmp_path, name,
     assert sorted(agg) == ["g0", "g1", "g2", "g3"]
     assert ckpt == agg
     assert streamed == agg
+
+
+# the multi-flush partition: four flushes of 300 rows, each a shuffle
+# of its keys' rows; 'a' is in every flush, 'b', 'c' and 'd' in some,
+# and 'e''s values in flush 1 are all NaN (no rows survive for the
+# specs that drop NaN)
+_FLUSHES = (
+    {"a": 150, "b": 100, "e": 50},
+    {"a": 150, "c": 20, "e": 130},
+    {"a": 100, "b": 150, "e": 50},
+    {"a": 200, "d": 100},
+)
+_FLUSH_ROWS = 300
+
+# (spec, value column, weight column) per case: the surface specs
+# above, plus weighted (weights below and above 1) and f32 t-digests
+_FLUSH_CASES = {
+    **{name: (spec, col, None) for name, (spec, col) in
+       _SURFACE_CASES.items()},
+    "tdigest_weighted": (TDigestSpec(max_size=50), "v", "w"),
+    "tdigest_f32": (TDigestSpec(max_size=50, precision="f32"), "v", None),
+}
+
+# sha256 of each case's sorted (key, sha256(blob)) list, as the
+# partial builder emitted it before t-digest states became the decode
+# of the blob encoder's output
+_FLUSH_SHA = {
+    "bloom":
+        "384968979c6d7181c5522e80b346b88f72b7cee89ed685c6835e8693128dc723",
+    "bottomk":
+        "c5855cc2ca18fc062a9eee095c478fc88c9474371523f6a5990fd56615a1f1f8",
+    "cms":
+        "2ff0d4c11e3d27fc896e8004c908978198479e72837289b8ecaf1a4ae4d7ecfa",
+    "hll":
+        "6e317adf89e25f278a40d202205e2525b5e8641927829691ec6a4b1adfa1138e",
+    "kll":
+        "e81fd26005edafadcd7fcecf547289c90609d0a50b0c4daa0703b806a550922b",
+    "minhash":
+        "c06ca3d79cb0317ec4616113b82652f57b45a4ad8b61110d482a890bbb3539bd",
+    "tdigest":
+        "de9e7f2454d79ed10ac43f3b5d00853c37918fbf601eaa7ad29b29410d634520",
+    "tdigest_drop":
+        "1b542d2057e5c61d66a39455e47fe1e1981d6d1d300381cd99238ff8ebcd7e42",
+    "tdigest_f32":
+        "9466ded35f0b36fe974004207f2f2df847151061b656cb777f4d3b236270e196",
+    "tdigest_weighted":
+        "b480befac8593a8dfb3a7cc445dde37990a4e818f7bf94be7baee4c032f9b104",
+}
+
+
+def _flush_frame() -> pd.DataFrame:
+    rng = np.random.default_rng(29)
+    frames = []
+    for i, sizes in enumerate(_FLUSHES):
+        g = np.concatenate([[k] * n for k, n in sizes.items()])
+        v = np.round(rng.standard_cauchy(g.size), 1)
+        v_nan = np.where(np.arange(g.size) % 9 == 0, np.nan, v)
+        if i == 1:
+            v_nan[g == "e"] = np.nan
+        frames.append(pd.DataFrame({
+            "g": g, "v": v, "v_nan": v_nan,
+            "w": (np.arange(g.size) % 4 + 1) * 0.5,
+        }).sample(frac=1.0, random_state=i))
+    return pd.concat(frames, ignore_index=True)
+
+
+def _blobs_sha(blobs: dict) -> str:
+    return hashlib.sha256(repr(sorted(
+        (key, hashlib.sha256(blob).hexdigest())
+        for key, blob in blobs.items()
+    )).encode()).hexdigest()
+
+
+@pytest.mark.parametrize("name", sorted(_FLUSH_CASES))
+def test_multi_flush_partition(name):
+    """A partition of four ``flush_rows`` flushes folds each key's
+    per-flush states through ``merge_states``: every key with a
+    surviving row gets one blob, the order-free monoids equal the
+    one-flush build, and every blob matches its recorded hash."""
+    spec, col, w = _FLUSH_CASES[name]
+    pdf = _flush_frame()
+    multi = build_blobs(spec, pdf, ["g"], col, w,
+                        batch_rows=_FLUSH_ROWS, flush_rows=_FLUSH_ROWS)
+    single = build_blobs(spec, pdf, ["g"], col, w)
+    assert sorted(multi) == sorted(single) == [(k,) for k in "abcde"]
+    if name in ("hll", "cms", "bloom", "minhash", "bottomk"):
+        assert multi == single
+    assert _blobs_sha(multi) == _FLUSH_SHA[name]

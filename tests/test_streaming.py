@@ -2,14 +2,20 @@
 the same digest as an incremental batch build, including state recovery
 from the checkpoint across query restarts."""
 
+import hashlib
 import os
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
+from gr_tdigest_spark.operators.agg import TDigestSpec, sketch_agg
+from gr_tdigest_spark.operators.companions import HLLSpec, KLLSpec
 from gr_tdigest_spark.sketches.tdigest import TDigest
 from gr_tdigest_spark.sketches import wire as td_wire
-from gr_tdigest_spark.streaming import tdigest_stream_agg
+from gr_tdigest_spark.streaming import sketch_stream_agg, tdigest_stream_agg
 
 
 def test_streaming_matches_incremental_batch(spark, tmp_path):
@@ -453,3 +459,83 @@ def test_stream_dedup_null_text_passthrough(spark):
                  if r["doc_id"] in (1, 2))
     assert got == [1, 2]
     assert stream_dedup_exact(df, "text").count() == 3
+
+
+# sha256 of each spec's sorted (key, sha256(final blob)) list, as the
+# stream emitted it when micro-batches merged through merge_states
+_FOLD_SHA = {
+    "hll":
+        "2f98c8cee95695d1fecb1ac154b39a21a4ecc17982ed5a245a58aeb502e6e301",
+    "kll":
+        "5a7dca1e203f04eaa6a9edbcdbdde2e53d8ca26aec11e41cc67588dc15777eb1",
+    "tdigest":
+        "72fb479a95e7f08109f465bdfbd96f97b2c7300987301c99895d6b95c3515e0e",
+}
+
+
+_FOLD_SPECS = {
+    "tdigest": TDigestSpec(max_size=50),
+    "kll": KLLSpec(k=16),
+    "hll": HLLSpec(p=10),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_FOLD_SPECS))
+def test_stream_state_folds_micro_batches(spark, tmp_path, name):
+    """Three files read one per trigger are three micro-batches. Each
+    key's final state is the in-order ``merge_blobs`` fold of the
+    files' own ``sketch_agg`` blobs (over the files holding the key:
+    'b' skips the last, 'c' the middle, 'd' is only in the last), and
+    every final blob matches its recorded hash."""
+    spec = _FOLD_SPECS[name]
+    src = tmp_path / "in"
+    src.mkdir()
+    rng = np.random.default_rng(31)
+    files = []
+    for i, keys in enumerate(("abc", "ab", "acd")):
+        g = rng.choice(list(keys), 240)
+        x = np.round(rng.standard_cauchy(240), 2)
+        files.append(str(src / f"part{i}.parquet"))
+        pq.write_table(pa.table({"g": g, "x": x}), files[-1])
+        # the file source orders files by modification time
+        os.utime(files[-1], (1_700_000_000 + i,) * 2)
+
+    epochs, latest = [], {}
+
+    def sink(df, epoch_id):
+        rows = df.collect()
+        epochs.append(epoch_id)
+        latest.update((r["g"], bytes(r["b"])) for r in rows)
+
+    q = (
+        sketch_stream_agg(
+            spark.readStream.schema("g string, x double")
+            .option("maxFilesPerTrigger", 1).parquet(str(src)),
+            ["g"], "x", spec, out_col="b",
+        )
+        .writeStream.outputMode("update").foreachBatch(sink)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+    assert len(epochs) == 3
+
+    per_file = [
+        {r["g"]: bytes(r["b"]) for r in sketch_agg(
+            spark.read.parquet(f), ["g"], "x", spec, out_col="b"
+        ).collect()}
+        for f in files
+    ]
+    assert sorted(latest) == list("abcd")
+    for key, blob in latest.items():
+        parts = [blobs[key] for blobs in per_file if key in blobs]
+        acc = parts[0]
+        for part in parts[1:]:
+            acc = spec.merge_blobs([acc, part])
+        assert blob == acc, key
+    got = hashlib.sha256(repr(sorted(
+        (key, hashlib.sha256(blob).hexdigest())
+        for key, blob in latest.items()
+    )).encode()).hexdigest()
+    assert got == _FOLD_SHA[name]

@@ -11,7 +11,11 @@ list as JSON. The surfaces are ``sketch_agg`` as the gate plans it
 salted with ``salt_buckets=3`` (``salt``, keyed only),
 ``checkpointed_sketch_agg`` (``ckpt``) and ``merge_sketch_tables`` of
 the odd and even ``l_orderkey`` halves (``mst``; keyless for the
-global key set, t-digest with the default spec). ``rollup`` cases
+global key set, t-digest with the default spec) and, for keyed
+unweighted cases, ``sketch_stream_agg`` over the rows written as three
+parquet files by ``l_orderkey % 3`` and read one file per trigger, so
+each key's state merges micro-batch by micro-batch (``stream``; each
+key's last emitted blob). ``rollup`` cases
 build a per-``(l_returnflag, l_orderkey)`` t-digest table (default spec,
 and ``max_size=100, precision='f32'``) and ``merge_sketch_tables`` it by
 ``l_returnflag``: thousands of blobs per key. ``cms_topk`` cases
@@ -28,9 +32,11 @@ from the root of each checkout and diff the outputs:
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import os
+import shutil
 import sys
 import tempfile
 
@@ -39,6 +45,9 @@ sys.path.insert(
 )
 
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
+from pyspark.sql.types import (  # noqa: E402
+    BinaryType, StructField, StructType,
+)
 
 from gr_tdigest_spark.operators.agg import (  # noqa: E402
     TDigestSpec, sketch_agg,
@@ -54,9 +63,11 @@ from gr_tdigest_spark.operators.window import with_group_cdf  # noqa: E402
 from gr_tdigest_spark.sources.checkpoint import (  # noqa: E402
     checkpointed_sketch_agg,
 )
+from gr_tdigest_spark.streaming import sketch_stream_agg  # noqa: E402
 
 KEY_SETS = (["l_returnflag", "l_linestatus"], ["l_suppkey"], None)
-SURFACES = ("agg", "ckpt", "agg2", "salt", "mst")
+SURFACES = ("agg", "ckpt", "agg2", "salt", "mst", "stream")
+STREAM_FILES = 3
 REBALANCE_CONF = "spark.gr_tdigest.agg.rebalance.maxBytes"
 
 # (name, spec) per rollup case
@@ -103,8 +114,60 @@ def cases():
     ]
 
 
+def stream_source(li, keys, col, tmp) -> str:
+    """Directory of ``STREAM_FILES`` parquet files holding ``li``'s
+    (keys, col) rows split by ``l_orderkey % STREAM_FILES``, their
+    modification times in split order (the order the file source reads
+    them); written once per (keys, col)."""
+    src = os.path.join(tmp, "stream_" + "+".join(keys + [col]))
+    if os.path.isdir(src):
+        return src
+    os.makedirs(src)
+    for i in range(STREAM_FILES):
+        part = os.path.join(tmp, f"part{i}")
+        (li.where(F.col("l_orderkey") % STREAM_FILES == i)
+         .select(*dict.fromkeys(keys + [col])).coalesce(1)
+         .write.parquet(part))
+        dst = os.path.join(src, f"part{i}.parquet")
+        shutil.move(glob.glob(os.path.join(part, "part-*.parquet"))[0], dst)
+        shutil.rmtree(part)
+        os.utime(dst, (1_700_000_000 + i,) * 2)
+    return src
+
+
+def stream(li, keys, col, spec, ckpt_dir):
+    """The ``(keys, b)`` table of each key's last blob emitted by
+    ``sketch_stream_agg`` over ``stream_source``, one file per
+    trigger."""
+    spark = li.sparkSession
+    src = stream_source(li, keys, col, os.path.dirname(ckpt_dir))
+    schema = spark.read.parquet(src).schema
+    latest = {}
+    q = (
+        sketch_stream_agg(
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1).parquet(src),
+            keys, col, spec, out_col="b",
+        )
+        .writeStream.outputMode("update")
+        .foreachBatch(lambda b, _: latest.update(
+            (tuple(r[k] for k in keys), r["b"]) for r in b.collect()))
+        .option("checkpointLocation", ckpt_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return spark.createDataFrame(
+        [(*k, b) for k, b in latest.items()],
+        StructType([schema[k] for k in keys]
+                   + [StructField("b", BinaryType())]),
+    )
+
+
 def build(li, surface, keys, spec, col, w, ckpt_dir):
     """The ``(keys, b)`` blob table of one case on one surface."""
+    if surface == "stream":
+        return stream(li, keys, col, spec, ckpt_dir)
     if surface == "ckpt":
         return checkpointed_sketch_agg(
             li, keys, col, spec, ckpt_dir, n_shards=8, weight_col=w,
@@ -161,6 +224,8 @@ def main(sf_dir: str, out: str) -> None:
             for name, spec, col, w in cases():
                 for surface in SURFACES:
                     if surface == "salt" and not keys:
+                        continue
+                    if surface == "stream" and (not keys or w):
                         continue
                     case = f"{surface}/{name}/{kn}/{col}"
                     try:
