@@ -33,7 +33,6 @@ stats decode only the 64-byte header, not the payload.
 from __future__ import annotations
 
 import math
-import struct
 from dataclasses import dataclass
 from operator import itemgetter
 from typing import Callable, Optional, Sequence, Tuple
@@ -101,6 +100,7 @@ __all__ = [
 # ---------------------------------------------------------------------- #
 
 _RAISE = "raise"  # NULL policy: a NULL blob is an error
+_NULL_TDIG = "null TDIG blob (reference polars_expr.rs:376-383)"
 
 _PANDAS_DTYPE = {
     DoubleType: "float64", LongType: "int64", IntegerType: "int32",
@@ -156,9 +156,7 @@ class _Probe:
             for blobs, rows in _group_rows_by_blob(*cols[:n_blobs]):
                 if None in blobs:
                     if self.on_null == _RAISE:
-                        raise ValueError(
-                            "null TDIG blob (reference polars_expr.rs:376-383)"
-                        )
+                        raise ValueError(_NULL_TDIG)
                     cell[0] = self.on_null
                 else:
                     states = [d(b) for d, b in zip(self.decode, blobs)]
@@ -200,11 +198,12 @@ def _merge_udf(spec):
 # --- t-digest kernels ---
 
 def _header(blob: bytes) -> tuple:
-    """(count, min, max, sum, n_centroids) from the 64-byte v3 header
-    without decoding the centroids; older wire versions decode fully."""
-    if blob[:4] == b"TDIG" and blob[4] == 3:
-        count, lo, hi, n, total = struct.unpack_from("<dddQd", blob, 20)
-        return count, lo, hi, total, n
+    """(count, min, max, sum, n_centroids) from a v3 blob's checked
+    header (``wire.v3_header``: a blob ``decode`` rejects raises its
+    error here too) without decoding the centroids; older wire versions
+    decode fully."""
+    if blob[:5] == b"TDIG\x03":
+        return td_wire.v3_header(blob)[6:]
     td = td_wire.decode(blob)
     return td.count, td.min, td.max, td.sum, len(td)
 
@@ -505,13 +504,18 @@ def tdigest_to_struct(col) -> Column:
 
 
 def tdigest_from_struct(col) -> Column:
-    """Rebuild a TDIG blob from the struct form (round-trips exactly)."""
+    """Rebuild a TDIG blob from the struct form (round-trips exactly).
+    A NULL struct raises the t-digest NULL error (``null TDIG blob``),
+    as ``tdigest_to_struct`` does on a NULL blob."""
 
     @F.pandas_udf(BinaryType())
     def _b(structs: pd.DataFrame) -> pd.Series:
-        # struct-typed input arrives as a DataFrame of its fields
+        # struct-typed input arrives as a DataFrame of its fields, a
+        # NULL struct as a row of NULL fields
         out = []
         for _, s in structs.iterrows():
+            if s.isna().all():
+                raise ValueError(_NULL_TDIG)
             td = TDigest.__new__(TDigest)
             cents = s["centroids"]
             cents = [] if cents is None else list(cents)

@@ -19,12 +19,12 @@ Design points for the 100 TB / 1000-executor shape:
   of row count. Only partial sketches cross the wire.
 - One partial builder serves every ``SketchSpec`` (and the checkpoint
   and streaming surfaces): key columns are dictionary-encoded straight
-  from the Arrow batch, and each spec's columnar ``build_from_codes``
-  builds every group of a flush at once — one hash/sort/reduceat pass,
-  no per-group numpy dispatch. That is the per-conversation case: many
-  small groups. For t-digest the one builder is the blob encoder
-  (``TDigestSpec.build_blobs_from_codes``); its states are the decode
-  of its blobs.
+  from the Arrow batch, and each flush is one columnar
+  ``build_blobs_from_codes`` call that builds every group's blob at
+  once — one hash/sort/reduceat pass, no per-group numpy dispatch.
+  That is the per-conversation case: many small groups. A key seen in
+  more than one flush merges its blobs with ``merge_blob_array``, the
+  merge stage's own definition.
 - The final merge is partition-wise (``_merge_partials``: mapInArrow
   over hash-partitioned partials), so per-group scheduling overhead is
   gone; an optional ``salt_buckets`` level adds a treeAggregate-style
@@ -161,11 +161,13 @@ class SketchSpec:
         values: np.ndarray,
         weights: Optional[np.ndarray],
     ) -> Dict[tuple, object]:
-        """Columnar core of every partial build: ``{key: state}`` for
-        each group with surviving rows. ``codes`` (int64, aligned with
-        ``values``) index the distinct ``key_tuples``; values arrive in
-        the numpy form Spark's pandas conversion gives, unfiltered.
-        ``TDigestSpec`` builds blobs and returns their decode here."""
+        """Columnar core of a companion spec's partial build:
+        ``{key: state}`` for each group with surviving rows, which
+        ``build_blobs_from_codes`` encodes. ``codes`` (int64, aligned
+        with ``values``) index the distinct ``key_tuples``; values
+        arrive in the numpy form Spark's pandas conversion gives,
+        unfiltered. ``TDigestSpec`` encodes its blobs directly and has
+        no states form."""
         raise NotImplementedError
 
     def build_blobs_from_codes(
@@ -175,8 +177,8 @@ class SketchSpec:
         values: np.ndarray,
         weights: Optional[np.ndarray],
     ) -> Tuple[list, list]:
-        """``(keys, blobs)`` of the non-empty groups — the partial
-        builder's single-flush output, and a stream's micro-batch."""
+        """``(keys, blobs)`` of the non-empty groups — one flush of the
+        partial builder, and a stream's micro-batch."""
         states = self.build_from_codes(codes, key_tuples, values, weights)
         return list(states), [self.state_to_blob(s) for s in states.values()]
 
@@ -189,7 +191,7 @@ class SketchSpec:
     ) -> Dict[tuple, object]:
         """Reference oracle: ``{key_tuple: state}`` via pandas groupby
         and one ``clean_values`` + ``build_state`` per group. Tests hold
-        every spec's ``build_from_codes`` to it; no Spark plan runs it.
+        every spec's partial builder to it; no Spark plan runs it.
         """
         out: Dict[tuple, object] = {}
         vals = pdf[value_col].to_numpy()
@@ -415,18 +417,6 @@ class TDigestSpec(SketchSpec):
         )
         return run_means, run_weights, grp_run_bounds
 
-    def build_from_codes(
-        self,
-        codes: np.ndarray,
-        key_tuples: list,
-        vals: np.ndarray,
-        ws: Optional[np.ndarray],
-    ) -> Dict[tuple, TDigest]:
-        """``{key: TDigest}``: the decode of ``build_blobs_from_codes``'
-        blobs, so a state and a blob never disagree."""
-        keys, blobs = self.build_blobs_from_codes(codes, key_tuples, vals, ws)
-        return {k: td_wire.decode(b) for k, b in zip(keys, blobs)}
-
     def build_blobs_from_codes(
         self,
         codes: np.ndarray,
@@ -622,8 +612,10 @@ class _PartitionBuild:
     """One partition's partial build for a spec: rows get
     partition-wide group ids (``_KeyIds``), values go from Arrow
     buffers to numpy (``_value_numpy``), and every ``flush_rows``
-    buffered rows the spec's columnar ``build_from_codes`` folds into
-    per-key states."""
+    buffered rows are one ``build_blobs_from_codes`` call. Each key
+    holds one blob: a key already held merges it with the flush's blob
+    in one ``merge_blob_array`` call (held blob first), so a key's blob
+    is the in-order fold of its flushes' blobs."""
 
     def __init__(self, spec: SketchSpec, key_cols: List[str],
                  value_col: str, weight_col: Optional[str],
@@ -632,12 +624,11 @@ class _PartitionBuild:
         self.value_col, self.weight_col = value_col, weight_col
         self.flush_rows = flush_rows
         self.ids = _KeyIds(key_cols)
-        self.states: Dict[tuple, object] = {}
+        self.held: Dict[tuple, bytes] = {}
         self._codes: List[np.ndarray] = []
         self._vals: List[np.ndarray] = []
         self._ws: List[np.ndarray] = []
         self._buffered = 0
-        self._spilled = False  # True once any flush built states
 
     def add(self, batch) -> np.ndarray:
         """Buffer one Arrow batch; returns its rows' group ids."""
@@ -651,41 +642,32 @@ class _PartitionBuild:
             self._flush()
         return codes
 
-    def _buffer(self) -> tuple:
-        return (
+    def _flush(self) -> None:
+        if not self._codes:
+            return
+        keys, blobs = self.spec.build_blobs_from_codes(
             np.concatenate(self._codes), self.ids.keys,
             np.concatenate(self._vals),
             np.concatenate(self._ws) if self._ws else None,
         )
-
-    def _flush(self) -> None:
-        if not self._codes:
-            return
-        self._spilled = True
-        for key, st in self.spec.build_from_codes(*self._buffer()).items():
-            prev = self.states.get(key)
-            self.states[key] = st if prev is None else (
-                self.spec.merge_states(prev, st)
-            )
         self._codes, self._vals, self._ws = [], [], []
         self._buffered = 0
+        fresh = dict(zip(keys, blobs))
+        again = [key for key in fresh if key in self.held]
+        if again:
+            import pyarrow as pa
 
-    def final_states(self) -> Dict[tuple, object]:
-        """``{key: state}`` of the partition's non-empty groups."""
-        self._flush()
-        return self.states
+            pairs = pa.array([self.held[key] for key in again]
+                             + [fresh[key] for key in again], pa.binary())
+            n = len(again)
+            fresh.update(zip(again, self.spec.merge_blob_array(
+                pairs, np.tile(np.arange(n), 2), n)))
+        self.held.update(fresh)
 
     def blobs(self) -> Tuple[list, list]:
         """``(keys, blobs)`` of the partition's non-empty groups."""
-        if not self._spilled and self._codes:
-            # single-flush partition (the common case: flush_rows is 1M
-            # and partitions are sized ~rows/2·cores): blobs straight
-            # from the columnar core — for t-digest, from the coalesced
-            # run arrays with no per-key TDigest objects
-            return self.spec.build_blobs_from_codes(*self._buffer())
-        states = self.final_states()
-        return list(states), [self.spec.state_to_blob(s)
-                              for s in states.values()]
+        self._flush()
+        return list(self.held), list(self.held.values())
 
 
 def _utc(v):

@@ -103,13 +103,6 @@ class _KernelSpec(SketchSpec):
         return sk
 
     def merge_states(self, a, b):
-        # partial states may be Sparse* (columnar builders below);
-        # every companion merge is commutative (max/add/or/min), so
-        # either side may normalize
-        if hasattr(a, "to_dense"):
-            return a.merge(b)
-        if hasattr(b, "to_dense"):
-            return b.merge(a)
         return a.merge(b)
 
     def blob_to_state(self, blob: bytes):
@@ -861,13 +854,12 @@ def _track_batch(trackers: dict, m: int, key_tuples: list,
 
 
 def _topk_batch(groups, k: int, vtype, arrow_schema):
-    """Top-k rows of ``(key, candidates, CMS state)`` groups, taken one
-    at a time: the candidates' estimates against the key's own CMS,
-    ranked by (estimate desc, value asc). ``vtype`` is the Arrow type
-    the CMS hashed (hashing is dtype-aware)."""
+    """Top-k rows of ``(key, candidates, CMS)`` groups, taken one at a
+    time: the candidates' estimates against the key's own CMS, ranked
+    by (estimate desc, value asc). ``vtype`` is the Arrow type the CMS
+    hashed (hashing is dtype-aware)."""
     keys, vals, ests = [], [], []
-    for key, cands, state in groups:
-        cms = state.to_dense() if hasattr(state, "to_dense") else state
+    for key, cands, cms in groups:
         est = cms.estimate(_value_numpy(_arrow_array(cands, vtype)))
         ranked = sorted(zip(est.tolist(), cands),
                         key=lambda t: (-t[0], t[1]))[:k]
@@ -896,17 +888,17 @@ def _topk_partials(spec, key_cols, col, m, k, out_schema):
             vtype = batch.column(col).type
             _track_batch(trackers, m, part.ids.keys, codes,
                          batch.column(col))
-        states = part.final_states()
-        if not states:
+        keys, blobs = part.blobs()
+        if not keys:
             return
         if k is not None:
-            yield _topk_batch(((key, trackers[key].top(), st)
-                               for key, st in states.items()),
+            yield _topk_batch(((key, trackers[key].top(),
+                                spec.blob_to_state(blob))
+                               for key, blob in zip(keys, blobs)),
                               k, vtype, arrow_schema)
         else:
-            yield _rows_batch(list(states), [
-                [spec.state_to_blob(st) for st in states.values()],
-                [trackers[key].top() for key in states],
+            yield _rows_batch(keys, [
+                blobs, [trackers[key].top() for key in keys],
             ], arrow_schema)
 
     return build

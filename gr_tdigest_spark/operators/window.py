@@ -12,16 +12,18 @@ here never attach a blob to a fact row:
   attaches the CDF, in one of two layouts chosen from the input. A
   small input, or one with many keys, is hash-repartitioned by its
   canonical keys and each task builds its groups' digests from its own
-  rows: no blob is encoded, nothing is collected and, for a small
-  input, no job runs when the DataFrame is built; a task holds one
-  shuffle partition's narrow columns, or its largest group. Few keys
-  over a larger input keep the facts where they are: ``tdigest_agg``'s
-  digests, at most 2 x task slots of them, are collected once and the
-  rows stream through the UDF.
+  rows: nothing is collected and, for a small input, no job runs when
+  the DataFrame is built; a task holds one shuffle partition's narrow
+  columns, or its largest group. Few keys over a larger input keep the
+  facts where they are: ``tdigest_agg``'s digests, at most 2 x task
+  slots of them, are collected once and the rows stream through the
+  UDF. Both layouts probe a ``{key: blob}`` map, decoding a group's
+  digest once, on first use.
 """
 
 from __future__ import annotations
 
+import functools
 from typing import Iterator, Optional, Sequence, Tuple
 
 import numpy as np
@@ -124,14 +126,20 @@ def _group_cdf_udf(spec, names, key_cols, value_col, weight_col,
                    probe_col, blobs=None):
     """The iterator Arrow UDF of ``with_group_cdf`` over the columns
     ``names``: yields the CDF of each row's probe under its group's
-    digest, NaN as NULL. With ``blobs`` (``{canonical key: blob}``) the
-    batches stream through and each probes its groups' digests; without,
-    the task holds its by-key partition's batches, builds every group's
-    digest from them (``_PartitionBuild``) and then probes."""
+    digest, NaN as NULL, a digest decoded once from a ``{canonical key:
+    blob}`` map. With ``blobs`` the batches stream through against it;
+    without, the task holds its by-key partition's batches, builds the
+    map from them (``_PartitionBuild``) and then probes."""
 
     def probes(batch):
         return (batch.column(probe_col).cast(pa.float64(), safe=False)
                 .to_numpy(zero_copy_only=False))
+
+    def lookup(blob_of):
+        """Each key's digest, decoded from ``blob_of`` once; None when
+        the key has no blob."""
+        return functools.cache(
+            lambda key: blob_of.get(key) and spec.blob_to_state(blob_of[key]))
 
     def cdfs(codes, keys, digest_of, xs):
         out = np.full(codes.size, np.nan)
@@ -150,7 +158,7 @@ def _group_cdf_udf(spec, names, key_cols, value_col, weight_col,
         if not held:
             return
         out = cdfs(np.concatenate([c for _, c in held]), part.ids.keys,
-                   part.final_states().get,
+                   lookup(dict(zip(*part.blobs()))),
                    np.concatenate([probes(b) for b, _ in held]))
         start = 0
         for batch, _ in held:
@@ -158,14 +166,7 @@ def _group_cdf_udf(spec, names, key_cols, value_col, weight_col,
             start += batch.num_rows
 
     def from_map(batches):
-        ids, digests = _KeyIds(key_cols), {}
-
-        def digest_of(key):
-            if key not in digests:
-                blob = blobs.get(key)
-                digests[key] = blob and spec.blob_to_state(blob)
-            return digests[key]
-
+        ids, digest_of = _KeyIds(key_cols), lookup(blobs)
         for batch in batches:
             yield cdfs(ids.codes(batch), ids.keys, digest_of, probes(batch))
 

@@ -195,10 +195,6 @@ class SparseBloom:
         bf.n_added = int(self.n_added)
         return bf
 
-    def merge(self, other) -> BloomFilter:
-        dense = other if isinstance(other, BloomFilter) else other.to_dense()
-        return self.to_dense().merge(dense)
-
     def to_bytes(self) -> bytes:
         if self.m_bits < (1 << 32) and 4 + 4 * self.pos.size < self.m_bits // 8:
             return (

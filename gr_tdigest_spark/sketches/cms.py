@@ -215,10 +215,6 @@ class SparseCMS:
         c.total = self.total
         return c
 
-    def merge(self, other) -> CMS:
-        dense = other if isinstance(other, CMS) else other.to_dense()
-        return self.to_dense().merge(dense)
-
     def to_bytes(self) -> bytes:
         cells = self.depth * self.width
         if cells <= _SPARSE_MAX_CELLS and 4 + 12 * self.idx.size < 8 * cells:

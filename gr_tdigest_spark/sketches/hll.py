@@ -164,13 +164,13 @@ class HLL:
 class SparseHLL:
     """Lightweight partial state: sorted unique register indices + ranks
     for ONE group, produced by the vectorized multi-group builder
-    (HLLSpec.build_from_codes). Never allocates the dense 2^p array unless
-    a cross-flush merge or a dense encoding actually needs it — at
-    150k-group partials that is the difference between kilobytes and
-    gigabytes of transient state. ``to_bytes`` emits the IDENTICAL blob
-    a dense HLL with the same registers would (sparse indices are
-    sorted, matching flatnonzero order), so the two state forms are
-    indistinguishable on the wire."""
+    (HLLSpec.build_from_codes), which only ever encodes it. Never
+    allocates the dense 2^p array unless the dense encoding is the
+    smaller — at 150k-group partials that is the difference between
+    kilobytes and gigabytes of transient state. ``to_bytes`` emits the
+    IDENTICAL blob a dense HLL with the same registers would (sparse
+    indices are sorted, matching flatnonzero order), so the two state
+    forms are indistinguishable on the wire."""
 
     __slots__ = ("p", "idx", "ranks")
 
@@ -181,10 +181,6 @@ class SparseHLL:
         h = HLL(self.p)
         h.registers[self.idx] = self.ranks
         return h
-
-    def merge(self, other) -> HLL:
-        dense = other if isinstance(other, HLL) else other.to_dense()
-        return self.to_dense().merge(dense)
 
     def to_bytes(self) -> bytes:
         m = 1 << self.p

@@ -59,7 +59,7 @@ from gr_tdigest_spark.sketches.tdigest import TDigest, KIND_ATOMIC, KIND_MIXED
 
 __all__ = [
     "encode", "decode", "decode_many", "DecodedBlobs", "wire_precision",
-    "WireError",
+    "v3_header", "WireError",
 ]
 
 MAGIC = b"TDIG"
@@ -284,18 +284,21 @@ def _decode_centroids(
     return means, w, kinds
 
 
+def _check_codes(scale_code: int, policy_code: int, pin: int) -> None:
+    if scale_code not in _CODE_TO_SCALE:
+        raise WireError(f"invalid TDIG scale code: {scale_code}")
+    if policy_code not in _CODE_TO_POLICY:
+        raise WireError(f"invalid TDIG policy code: {policy_code}")
+    if policy_code == _POLICY_TO_CODE["edges"] and pin == 0:
+        raise WireError("edges policy requires pin_per_side >= 1")
+
+
 def _build(
     precision: str, scale_code: int, policy_code: int, pin: int,
     max_size: int, total_weight: float, mn: float, mx: float, data_sum: float,
     means: np.ndarray, weights: np.ndarray, kinds: np.ndarray,
 ) -> TDigest:
-    if scale_code not in _CODE_TO_SCALE:
-        raise WireError(f"invalid TDIG scale code: {scale_code}")
-    if policy_code not in _CODE_TO_POLICY:
-        raise WireError(f"invalid TDIG policy code: {policy_code}")
     policy = _CODE_TO_POLICY[policy_code]
-    if policy == "edges" and pin == 0:
-        raise WireError("edges policy requires pin_per_side >= 1")
     td = TDigest.__new__(TDigest)
     td.means = means
     td.weights = weights
@@ -330,16 +333,22 @@ def _decode_v12(blob: bytes, version: int) -> TDigest:
     precision = wire_precision(blob)
     payload = blob[HEADER_LEN_V12:]
     means, w, kinds = _decode_centroids(payload, version, precision, int(n))
+    _check_codes(scale_code, policy_code, pin)
     return _build(
         precision, scale_code, policy_code, pin, int(max_size),
         total_weight, mn, mx, data_sum, means, w, kinds,
     )
 
 
-def _decode_v3(blob: bytes) -> TDigest:
+def v3_header(blob: bytes) -> tuple:
+    """``(header_len, precision, scale_code, policy_code, pin, max_size,
+    count, min, max, sum, n_centroids)`` of a ``TDIG`` v3 blob, after
+    every check ``decode`` makes short of reading the centroids:
+    length, header_len, precision code, CRC, payload length against
+    n·stride, then scale and policy codes and the edges pin. A failed
+    check raises ``decode``'s ``WireError``."""
     if len(blob) < HEADER_LEN_V3:
         raise WireError("buffer too small")
-    flags = blob[5]
     header_len = blob[6]
     if header_len < HEADER_LEN_V3:
         raise WireError("v3 header_len must be >= 64")
@@ -349,23 +358,23 @@ def _decode_v3(blob: bytes) -> TDigest:
     if prec_code not in _CODE_PRECISION:
         raise WireError(f"invalid TDIG precision code: {prec_code}")
     precision = _CODE_PRECISION[prec_code]
-    scale_code, policy_code, pin = blob[8], blob[9], blob[10]
-    (max_size,) = struct.unpack_from("<Q", blob, 12)
-    (total_weight,) = struct.unpack_from("<d", blob, 20)
-    mn, mx = struct.unpack_from("<dd", blob, 28)
-    (n,) = struct.unpack_from("<Q", blob, 44)
-    (data_sum,) = struct.unpack_from("<d", blob, 52)
-    (expected_crc,) = struct.unpack_from("<I", blob, V3_CHECKSUM_OFFSET)
-    if flags & V3_FLAG_CHECKSUM:
-        actual = _checksum_v3(blob, header_len)
-        if actual != expected_crc:
+    if blob[5] & V3_FLAG_CHECKSUM:
+        (expected_crc,) = struct.unpack_from("<I", blob, V3_CHECKSUM_OFFSET)
+        if _checksum_v3(blob, header_len) != expected_crc:
             raise WireError("invalid TDIG checksum")
-    payload = blob[header_len:]
-    means, w, kinds = _decode_centroids(payload, 3, precision, int(n))
-    return _build(
-        precision, scale_code, policy_code, pin, int(max_size),
-        total_weight, mn, mx, data_sum, means, w, kinds,
-    )
+    scale_code, policy_code, pin, max_size, count, mn, mx, n, data_sum = (
+        struct.unpack_from("<BBBxQdddQd", blob, 8))
+    if len(blob) - header_len != n * _stride(3, precision):
+        raise WireError("payload length mismatch")
+    _check_codes(scale_code, policy_code, pin)
+    return (header_len, precision, scale_code, policy_code, pin, max_size,
+            count, mn, mx, data_sum, n)
+
+
+def _decode_v3(blob: bytes) -> TDigest:
+    header_len, *head, n = v3_header(blob)
+    means, w, kinds = _decode_centroids(blob[header_len:], 3, head[0], n)
+    return _build(*head, means, w, kinds)
 
 
 class DecodedBlobs(NamedTuple):

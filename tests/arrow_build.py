@@ -18,7 +18,8 @@ from gr_tdigest_spark.operators.agg import (
 
 
 def build_states(spec, pdf, key_cols, value_col, weight_col=None):
-    """``{key: state}`` from ``spec.build_from_codes`` over the batch's
+    """``{key: state}``: ``spec.blob_to_state`` of each blob
+    ``spec.build_blobs_from_codes`` builds over the batch's
     dictionary-encoded keys and Spark-form values."""
     batch = pa.RecordBatch.from_pandas(pdf, preserve_index=False)
     if key_cols:
@@ -26,9 +27,10 @@ def build_states(spec, pdf, key_cols, value_col, weight_col=None):
     else:
         codes, keys = np.zeros(batch.num_rows, dtype=np.int64), [()]
     ws = _value_numpy(batch.column(weight_col)) if weight_col else None
-    return spec.build_from_codes(
+    keys, blobs = spec.build_blobs_from_codes(
         codes, keys, _value_numpy(batch.column(value_col)), ws
     )
+    return {key: spec.blob_to_state(b) for key, b in zip(keys, blobs)}
 
 
 def build_blobs(spec, pdf, key_cols, value_col, weight_col=None,

@@ -7,6 +7,7 @@ import pytest
 
 from arrow_build import build_states
 from gr_tdigest_spark.operators.agg import TDigestSpec, _encode_batch_keys
+from gr_tdigest_spark.sketches import wire
 from gr_tdigest_spark.sketches.tdigest import TDigest
 
 
@@ -139,10 +140,12 @@ def test_encode_batch_keys_wide_key_space(n_cols):
 
 
 class TestColumnarBlobPath:
-    """build_from_codes' states are the decode of build_blobs_from_codes'
-    blobs: they re-encode to the same bytes for every config."""
+    """Every blob build_blobs_from_codes emits re-encodes to itself
+    through its decode, the property the partial builder's blob fold
+    and the merge stage rely on: f32/f64, unit/weighted, and a group
+    that needs compression."""
 
-    def _compare(self, prec, weighted, seed):
+    def _round_trip(self, prec, weighted, seed):
         rng = np.random.default_rng(seed)
         n = 30000
         codes = rng.integers(0, 2000, n)
@@ -150,42 +153,31 @@ class TestColumnarBlobPath:
         vals = rng.lognormal(0, 1, n)
         ws = rng.integers(1, 5, n).astype(float) if weighted else None
         spec = TDigestSpec(max_size=100, precision=prec)
-        states = spec.build_from_codes(
-            codes.copy(), keys, vals.copy(),
-            None if ws is None else ws.copy(),
-        )
-        k2, blobs = spec.build_blobs_from_codes(
-            codes.copy(), keys, vals.copy(),
-            None if ws is None else ws.copy(),
-        )
-        assert set(k2) == set(states.keys())
-        from gr_tdigest_spark.sketches import wire
-        bmap = dict(zip(k2, blobs))
-        for key, st in states.items():
-            assert wire.encode(st, 3) == bmap[key], key
+        got, blobs = spec.build_blobs_from_codes(codes, keys, vals, ws)
+        assert sorted(got) == [(int(i),) for i in np.unique(codes)]
+        for key, blob in zip(got, blobs):
+            assert wire.encode(wire.decode(blob), 3) == blob, key
 
     def test_f64_unit(self):
-        self._compare("f64", False, 1)
+        self._round_trip("f64", False, 1)
 
     def test_f64_weighted(self):
-        self._compare("f64", True, 2)
+        self._round_trip("f64", True, 2)
 
     def test_f32_unit(self):
-        self._compare("f32", False, 3)
+        self._round_trip("f32", False, 3)
 
     def test_f32_weighted(self):
-        self._compare("f32", True, 4)
+        self._round_trip("f32", True, 4)
 
     def test_slow_group_byte_equal(self):
         rng = np.random.default_rng(5)
         vals = rng.lognormal(0, 1, 5000)
         codes = np.zeros(5000, dtype=np.int64)
         spec = TDigestSpec(max_size=100)
-        from gr_tdigest_spark.sketches import wire
-        st = spec.build_from_codes(codes.copy(), [(0,)], vals.copy(),
-                                   None)[(0,)]
         _, blobs = spec.build_blobs_from_codes(codes, [(0,)], vals, None)
-        assert wire.encode(st, 3) == blobs[0]
+        assert len(wire.decode(blobs[0])) <= 100  # compressed
+        assert wire.encode(wire.decode(blobs[0]), 3) == blobs[0]
 
     def test_drop_mode_and_empty(self):
         spec = TDigestSpec(max_size=50, on_invalid="drop")
@@ -194,7 +186,6 @@ class TestColumnarBlobPath:
             np.array([0, 0, 1, 1]), [(0,), (1,)], vals, None
         )
         assert k == [(1,)]
-        from gr_tdigest_spark.sketches import wire
         assert wire.decode(blobs[0]).count == 2.0
 
 

@@ -146,6 +146,14 @@ class TestErrorContractsAcrossSurfaces:
         with pytest.raises(Exception, match="null TDIG blob"):
             dg.select(_df_call(name, "b")).collect()
 
+    def test_from_struct_null_errors(self, spark):
+        """A NULL struct gets the t-digest NULL error, as a NULL blob
+        does in ``tdigest_to_struct``."""
+        dg = spark.range(1).select(
+            F.lit(None).cast(Fn.TDIGEST_STRUCT).alias("s"))
+        with pytest.raises(Exception, match="null TDIG blob"):
+            dg.select(Fn.tdigest_from_struct("s")).collect()
+
     def test_empty_bytes_blob_errors(self, spark):
         dg = spark.range(1).select(F.lit(b"").alias("b"))
         with pytest.raises(Exception, match="TDIG"):

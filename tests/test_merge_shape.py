@@ -1,7 +1,7 @@
 """Accuracy by merge shape: the same values built directly, merged as
 a balanced tree of 16 parts, folded left-deep over those parts (the
-shape of a multi-flush partition's ``merge_states`` fold and of a
-stream's state), and appended one value at a time (256 one-value
+shape of a multi-flush partition's blob fold and of a stream's
+state), and appended one value at a time (256 one-value
 digests after a build of the rest).
 
 Each shape's worst max rank error over five Cauchy inputs is held to

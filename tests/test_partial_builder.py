@@ -236,7 +236,7 @@ def _blobs_sha(blobs: dict) -> str:
 @pytest.mark.parametrize("name", sorted(_FLUSH_CASES))
 def test_multi_flush_partition(name):
     """A partition of four ``flush_rows`` flushes folds each key's
-    per-flush states through ``merge_states``: every key with a
+    per-flush blobs through ``merge_blob_array``: every key with a
     surviving row gets one blob, the order-free monoids equal the
     one-flush build, and every blob matches its recorded hash."""
     spec, col, w = _FLUSH_CASES[name]

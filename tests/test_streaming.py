@@ -462,7 +462,8 @@ def test_stream_dedup_null_text_passthrough(spark):
 
 
 # sha256 of each spec's sorted (key, sha256(final blob)) list, as the
-# stream emitted it when micro-batches merged through merge_states
+# stream emitted it when micro-batches merged as decoded states; the
+# blob merge (merge_blobs) must keep every byte
 _FOLD_SHA = {
     "hll":
         "2f98c8cee95695d1fecb1ac154b39a21a4ecc17982ed5a245a58aeb502e6e301",

@@ -130,6 +130,31 @@ class TestErrors:
             wire_precision(b"XXXX\x03")
 
 
+@pytest.mark.parametrize("name", [
+    "tdigest_count", "tdigest_min", "tdigest_max", "tdigest_sum",
+    "tdigest_mean", "tdigest_n_centroids",
+])
+def test_header_probes_check_like_decode(name):
+    """The header-level probes read a v3 blob through every check
+    ``decode`` makes and raise its error: a flipped header byte, a
+    zeroed header (header_len 64) and a truncated blob."""
+    from gr_tdigest_spark.functions import _PROBES
+
+    probe = _PROBES[name]
+    blob = encode(sample_digest(), 3)
+    flipped = bytearray(blob)
+    flipped[22] ^= 0x01  # inside total_weight
+    zeroed = b"TDIG\x03\x00\x40" + bytes(57)
+    for bad, msg in [(bytes(flipped), "invalid TDIG checksum"),
+                     (zeroed, "invalid TDIG precision code: 0"),
+                     (blob[:15], "buffer too small")]:
+        with pytest.raises(WireError, match=msg):
+            decode(bad)
+        with pytest.raises(WireError, match=msg):
+            probe.kernel(probe.decode[0](bad))
+    probe.kernel(probe.decode[0](blob))
+
+
 class TestPickle:
     def test_pickle_roundtrip(self):
         td = sample_digest()

@@ -24,10 +24,15 @@ their (keys, value, est_count) rows in output order. ``group_cdf`` cases
 run ``with_group_cdf`` for both keyed key sets, over ``l_extendedprice``
 in 'error' mode and over ``x_bad`` in 'drop' mode, and record the row
 count and the sha256 of the sorted (l_orderkey, l_linenumber, cdf)
-rows. A case that raises is recorded as ``["ERROR <type>"]``. Run it
-from the root of each checkout and diff the outputs:
+rows. The ``flush`` surface runs without Spark: every case goes
+through the partial builder (``_partial_builder_arrow``) over the
+lineitem rows as one partition, fed in ``FLUSH_ROWS``-row batches with
+``flush_rows=FLUSH_ROWS``, so each key's blob folds across many
+flushes. A case that raises is recorded as ``["ERROR <type>"]``. Run
+it from the root of each checkout and diff the outputs (``flush`` as a
+third argument runs only the Spark-free surface):
 
-    python tools/blob_digests.py <sf_dir> <out.json>
+    python tools/blob_digests.py <sf_dir> <out.json> [flush]
 """
 
 from __future__ import annotations
@@ -50,7 +55,7 @@ from pyspark.sql.types import (  # noqa: E402
 )
 
 from gr_tdigest_spark.operators.agg import (  # noqa: E402
-    TDigestSpec, sketch_agg,
+    TDigestSpec, _partial_builder_arrow, sketch_agg,
 )
 from gr_tdigest_spark.operators.companions import (  # noqa: E402
     BloomSpec, BottomKSpec, CMSSpec, HLLSpec, KLLSpec, MinHashSpec,
@@ -68,6 +73,7 @@ from gr_tdigest_spark.streaming import sketch_stream_agg  # noqa: E402
 KEY_SETS = (["l_returnflag", "l_linestatus"], ["l_suppkey"], None)
 SURFACES = ("agg", "ckpt", "agg2", "salt", "mst", "stream")
 STREAM_FILES = 3
+FLUSH_ROWS = 997
 REBALANCE_CONF = "spark.gr_tdigest.agg.rebalance.maxBytes"
 
 # (name, spec) per rollup case
@@ -189,16 +195,66 @@ def build(li, surface, keys, spec, col, w, ckpt_dir):
                       salt_buckets=3 if surface == "salt" else None)
 
 
-def digest_rows(df, keys) -> list:
-    """The sorted (key, sha256(blob)) rows of a ``(keys, b)`` table."""
+def digest_rows(rows, keys) -> list:
+    """The sorted (key, sha256(blob)) rows of ``(keys, b)`` rows."""
     return sorted(
         [repr(tuple(r[k] for k in keys or [])),
          hashlib.sha256(bytes(r["b"])).hexdigest()]
-        for r in df.collect()
+        for r in rows
     )
 
 
-def main(sf_dir: str, out: str) -> None:
+def flush_digests(sf_dir: str) -> dict:
+    """The ``flush`` surface: per case, the digest rows of the partial
+    builder's output over the lineitem rows (with the Spark surfaces'
+    derived columns and JVM null filter) as one partition of
+    ``FLUSH_ROWS``-row batches, flushing every ``FLUSH_ROWS`` rows."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    li = pq.read_table(f"{sf_dir}/lineitem.parquet")
+    line = li["l_linenumber"].to_numpy()
+    price = li["l_extendedprice"].to_numpy()
+    derived = {
+        "x_bad": pa.array(np.where(line == 5, np.nan, price),
+                          mask=line == 3),
+        "race": pa.array(np.abs(li["l_discount"].to_numpy())
+                         + li["l_orderkey"].to_numpy() * 1e-9),
+        "pile_w": pa.array((line % 3 + 1).astype(np.float64)),
+    }
+    for name, arr in derived.items():
+        li = li.append_column(name, arr)
+    res = {}
+    for keys in KEY_SETS:
+        kn = "+".join(keys) if keys else "global"
+        for name, spec, col, w in cases():
+            case = f"flush/{name}/{kn}/{col}"
+            t = li.select(list(dict.fromkeys(
+                (keys or []) + [col] + ([w] if w else []))))
+            if spec.skips_null_values:
+                t = t.filter(pc.is_valid(t[col]))
+            types = from_arrow_schema(t.schema)
+            schema = StructType([types[k] for k in keys or []]
+                                + [StructField("b", BinaryType())])
+            try:
+                build = _partial_builder_arrow(
+                    spec, keys or [], col, w, schema, flush_rows=FLUSH_ROWS)
+                rows = digest_rows(
+                    [r for out in build(iter(t.to_batches(FLUSH_ROWS)))
+                     for r in out.to_pylist()], keys)
+            except Exception as e:  # recorded, not fatal
+                rows = [f"ERROR {type(e).__name__}"]
+            res[case] = rows
+            print(case, len(rows), hashlib.sha256(
+                repr(rows).encode()).hexdigest()[:12], flush=True)
+    return res
+
+
+def spark_digests(sf_dir: str) -> dict:
+    """Every case on every Spark surface."""
     spark = (
         SparkSession.builder.master("local[4]")
         .config("spark.sql.shuffle.partitions", "8")
@@ -231,7 +287,8 @@ def main(sf_dir: str, out: str) -> None:
                     try:
                         rows = digest_rows(build(
                             li, surface, keys, spec, col, w,
-                            os.path.join(tmp, case.replace("/", "_"))), keys)
+                            os.path.join(tmp, case.replace("/", "_"))
+                        ).collect(), keys)
                     except Exception as e:  # recorded, not fatal
                         rows = [f"ERROR {type(e).__name__}"]
                     finally:
@@ -245,7 +302,8 @@ def main(sf_dir: str, out: str) -> None:
             fine = sketch_agg(li, ["l_returnflag", "l_orderkey"],
                               "l_extendedprice", spec, out_col="b")
             rows = digest_rows(merge_sketch_tables(
-                [fine], ["l_returnflag"], "b", spec), ["l_returnflag"])
+                [fine], ["l_returnflag"], "b", spec).collect(),
+                ["l_returnflag"])
         except Exception as e:  # recorded, not fatal
             rows = [f"ERROR {type(e).__name__}"]
         res[case] = rows
@@ -278,10 +336,17 @@ def main(sf_dir: str, out: str) -> None:
                 rows = [f"ERROR {type(e).__name__}"]
             res[case] = rows
             print(case, rows, flush=True)
+    spark.stop()
+    return res
+
+
+def main(sf_dir: str, out: str, only: str = "") -> None:
+    res = flush_digests(sf_dir)
+    if only != "flush":
+        res.update(spark_digests(sf_dir))
     with open(out, "w") as f:
         json.dump(res, f, indent=0)
-    spark.stop()
 
 
 if __name__ == "__main__":
-    main(*sys.argv[1:3])
+    main(*sys.argv[1:4])
