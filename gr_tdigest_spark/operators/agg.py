@@ -94,8 +94,11 @@ _NO_MERGE_FACTOR = {"k2": 1.44, "k3": 1.44, "quad": 0.5, "k1": 0.31}
 class SketchSpec:
     """Pluggable monoid: build, merge, and serialize one sketch kind.
 
-    Subclasses provide kernel states with ``merge``-like semantics; the
-    shared two-phase Spark plan in ``sketch_agg`` is identical for all.
+    Subclasses build a batch's blobs in one columnar
+    ``build_blobs_from_codes`` call and provide kernel states with
+    ``merge``-like semantics for merges and the per-group reference;
+    the shared two-phase Spark plan in ``sketch_agg`` is identical for
+    all.
     """
 
     name = "sketch"
@@ -154,22 +157,6 @@ class SketchSpec:
         """Validate/filter one batch of raw values before building."""
         return values, weights
 
-    def build_from_codes(
-        self,
-        codes: np.ndarray,
-        key_tuples: list,
-        values: np.ndarray,
-        weights: Optional[np.ndarray],
-    ) -> Dict[tuple, object]:
-        """Columnar core of a companion spec's partial build:
-        ``{key: state}`` for each group with surviving rows, which
-        ``build_blobs_from_codes`` encodes. ``codes`` (int64, aligned
-        with ``values``) index the distinct ``key_tuples``; values
-        arrive in the numpy form Spark's pandas conversion gives,
-        unfiltered. ``TDigestSpec`` encodes its blobs directly and has
-        no states form."""
-        raise NotImplementedError
-
     def build_blobs_from_codes(
         self,
         codes: np.ndarray,
@@ -177,10 +164,14 @@ class SketchSpec:
         values: np.ndarray,
         weights: Optional[np.ndarray],
     ) -> Tuple[list, list]:
-        """``(keys, blobs)`` of the non-empty groups — one flush of the
-        partial builder, and a stream's micro-batch."""
-        states = self.build_from_codes(codes, key_tuples, values, weights)
-        return list(states), [self.state_to_blob(s) for s in states.values()]
+        """The spec's columnar partial build: ``(keys, blobs)`` of the
+        groups with surviving rows — one flush of the partial builder,
+        and a stream's micro-batch. ``codes`` (int64, aligned with
+        ``values``) index the distinct ``key_tuples``; values arrive in
+        the numpy form Spark's pandas conversion gives, unfiltered.
+        Each blob equals ``state_to_blob`` of the group's
+        ``build_groups`` state."""
+        raise NotImplementedError
 
     def build_groups(
         self,

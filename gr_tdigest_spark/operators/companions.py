@@ -1,8 +1,11 @@
 """SketchSpec adapters for the companion sketches (HLL / CMS / Bloom /
 KLL / MinHash / bottom-k / weighted bottom-k) — each plugs its kernel
 monoid into the shared two-phase ``sketch_agg`` plan through one
-columnar ``build_from_codes`` (see operators/agg.py), plus convenience
-aggregates.
+columnar ``build_blobs_from_codes`` that returns every group's blob
+(see operators/agg.py), plus convenience aggregates. HLL, CMS and Bloom
+groups are encoded straight from their set cells by the kernel's one
+encoder (``encode_hll`` / ``encode_cms`` / ``encode_bloom``), never via a
+dense per-group state.
 """
 
 from __future__ import annotations
@@ -33,10 +36,10 @@ from gr_tdigest_spark.operators.agg import (
     SketchSpec, _arrow_array, _KeyIds, _PartitionBuild, _project_input,
     _rebalance_input, _rows_batch, _value_numpy, sketch_agg,
 )
-from gr_tdigest_spark.sketches.bloom import BloomFilter
+from gr_tdigest_spark.sketches.bloom import BloomFilter, encode_bloom
 from gr_tdigest_spark.sketches.bottomk import BottomK, WeightedBottomK
-from gr_tdigest_spark.sketches.cms import CMS
-from gr_tdigest_spark.sketches.hll import HLL
+from gr_tdigest_spark.sketches.cms import CMS, encode_cms
+from gr_tdigest_spark.sketches.hll import HLL, encode_hll
 from gr_tdigest_spark.sketches.kll import KLL
 from gr_tdigest_spark.sketches.minhash import MinHash
 
@@ -81,8 +84,10 @@ def _drop_missing(values, *aligned):
 
 
 class _KernelSpec(SketchSpec):
-    """Shared shape for the companion kernels: state IS the kernel object
-    (all five expose ``merge``/``to_bytes``/``from_bytes``)."""
+    """Shared shape for the companion kernels: a state IS the kernel
+    object (each exposes ``merge``/``to_bytes``/``from_bytes``), used
+    by merges and the per-group reference; each subclass's
+    ``build_blobs_from_codes`` emits the blobs of a whole batch."""
 
     kernel = None  # class with .from_bytes
     # nulls are SKIPPED (not errors) for the hash-family sketches;
@@ -125,19 +130,21 @@ class HLLSpec(_KernelSpec):
     def _new(self):
         return HLL(p=self.p)
 
-    def build_from_codes(self, codes, key_tuples, values, weights):
+    def build_blobs_from_codes(self, codes, key_tuples, values, weights):
         """Columnar multi-group build (the HLL analogue of the
         t-digest columnar partial): ONE hash pass over the whole batch,
-        one sort, reduceat-max per (group, register) run — no per-group
-        numpy-call overhead and no dense 2^p array per group (SparseHLL
-        states). At 150k single-digit-row groups this is the difference
-        between a ~20 s and a ~2 s partial stage."""
+        one sort, reduceat-max per (group, register) run, then each
+        group's sorted (register, rank) cells go straight to
+        ``encode_hll`` — no per-group numpy-call overhead and no dense
+        2^p array unless the dense wire is the smaller. At 150k
+        single-digit-row groups this is the difference between a ~20 s
+        and a ~2 s partial stage."""
         from gr_tdigest_spark.sketches.hashing import hash64
-        from gr_tdigest_spark.sketches.hll import SparseHLL, idx_rank
+        from gr_tdigest_spark.sketches.hll import idx_rank
 
         arr, codes = _drop_missing(values, codes)
         if not arr.size:
-            return {}
+            return [], []
         idx, rank = idx_rank(hash64(arr), self.p)
         m = 1 << self.p
         combined = codes * m + idx
@@ -150,13 +157,11 @@ class HLLSpec(_KernelSpec):
         gcodes = ukeys // m
         ridx = ukeys % m
         gstarts, bounds = _group_bounds(gcodes)
-        out = {}
-        for i in range(gstarts.size):
-            lo, hi = bounds[i], bounds[i + 1]
-            out[key_tuples[gcodes[lo]]] = SparseHLL(
-                self.p, ridx[lo:hi], max_rank[lo:hi]
-            )
-        return out
+        keys = [key_tuples[g] for g in gcodes[gstarts]]
+        return keys, [
+            encode_hll(self.p, ridx[lo:hi], max_rank[lo:hi])
+            for lo, hi in zip(bounds[:-1], bounds[1:])
+        ]
 
 
 class CMSSpec(_KernelSpec):
@@ -184,16 +189,15 @@ class CMSSpec(_KernelSpec):
                 sk.add(values)
         return sk
 
-    def build_from_codes(self, codes, key_tuples, values, weights):
+    def build_blobs_from_codes(self, codes, key_tuples, values, weights):
         """Columnar multi-group build: one depth×n column pass, one
-        sort of (group, cell) keys, reduceat-sum of (pile) weights,
-        SparseCMS states — the pre_aggregate pile path and the raw-row
+        sort of (group, cell) keys, reduceat-sum of (pile) weights, then
+        each group's sorted (cell, count) pairs go straight to
+        ``encode_cms`` — the pre_aggregate pile path and the raw-row
         path both route through it."""
-        from gr_tdigest_spark.sketches.cms import SparseCMS
-
         arr, codes, ws = _drop_missing(values, codes, weights)
         if not arr.size:
-            return {}
+            return [], []
         w = (
             np.ones(arr.size, dtype=np.int64) if ws is None
             else np.asarray(ws).astype(np.int64)
@@ -219,15 +223,12 @@ class CMSSpec(_KernelSpec):
             minlength=len(key_tuples),
         )
         gstarts, bounds = _group_bounds(gcodes)
-        out = {}
-        for i in range(gstarts.size):
-            lo, hi = bounds[i], bounds[i + 1]
-            g = int(gcodes[lo])
-            out[key_tuples[g]] = SparseCMS(
-                self.depth, self.width, self.seed,
-                cidx[lo:hi], sums[lo:hi], float(totals[g]),
-            )
-        return out
+        groups = gcodes[gstarts]
+        return [key_tuples[g] for g in groups], [
+            encode_cms(self.depth, self.width, self.seed, float(totals[g]),
+                       cidx[lo:hi], sums[lo:hi])
+            for g, lo, hi in zip(groups, bounds[:-1], bounds[1:])
+        ]
 
 
 class BloomSpec(_KernelSpec):
@@ -240,15 +241,14 @@ class BloomSpec(_KernelSpec):
     def _new(self):
         return BloomFilter(self.m_bits, self.k, self.seed)
 
-    def build_from_codes(self, codes, key_tuples, values, weights):
-        """Columnar multi-group build: one k×n bit-position pass,
-        one unique over (group, bit) keys, SparseBloom states — same
-        shape (and same ~10× high-cardinality win) as the HLL builder."""
-        from gr_tdigest_spark.sketches.bloom import SparseBloom
-
+    def build_blobs_from_codes(self, codes, key_tuples, values, weights):
+        """Columnar multi-group build: one k×n bit-position pass, one
+        unique over (group, bit) keys, then each group's sorted set-bit
+        positions go straight to ``encode_bloom`` — same shape (and same
+        ~10× high-cardinality win) as the HLL builder."""
         arr, codes = _drop_missing(values, codes)
         if not arr.size:
-            return {}
+            return [], []
         pos = self._new()._bit_positions(arr).astype(np.int64)  # k × n
         combined = codes[None, :] * self.m_bits + pos
         uniq = np.unique(combined.ravel())  # sorted unique (group, bit)
@@ -256,15 +256,12 @@ class BloomSpec(_KernelSpec):
         bits = uniq % self.m_bits
         n_per_group = np.bincount(codes, minlength=len(key_tuples))
         gstarts, bounds = _group_bounds(gcodes)
-        out = {}
-        for i in range(gstarts.size):
-            lo, hi = bounds[i], bounds[i + 1]
-            g = int(gcodes[lo])
-            out[key_tuples[g]] = SparseBloom(
-                self.m_bits, self.k, self.seed,
-                bits[lo:hi], int(n_per_group[g]),
-            )
-        return out
+        groups = gcodes[gstarts]
+        return [key_tuples[g] for g in groups], [
+            encode_bloom(self.m_bits, self.k, self.seed,
+                         int(n_per_group[g]), pos=bits[lo:hi])
+            for g, lo, hi in zip(groups, bounds[:-1], bounds[1:])
+        ]
 
 
 class MinHashSpec(_KernelSpec):
@@ -277,20 +274,20 @@ class MinHashSpec(_KernelSpec):
     def _new(self):
         return MinHash(k=self.k, seed=self.seed)
 
-    def build_from_codes(self, codes, key_tuples, values, weights):
+    def build_blobs_from_codes(self, codes, key_tuples, values, weights):
         """Columnar multi-group build: hash the batch once, sort rows
         by group ONCE, then one `minimum.reduceat` per signature slot
         (slot-chunked to bound the k×n temp). Signatures are dense by
-        nature (k uint64s), so states are plain MinHash objects; the
-        win is removing the per-group numpy-call overhead at high
-        group cardinality."""
+        nature (k uint64s), so each group's blob is a plain MinHash's
+        ``to_bytes``; the win is removing the per-group numpy-call
+        overhead at high group cardinality."""
         from gr_tdigest_spark.sketches.hashing import (
             dedupe_hash_pairs, hash_pair,
         )
 
         arr, codes = _drop_missing(values, codes)
         if not arr.size:
-            return {}
+            return [], []
         h1, h2 = hash_pair(arr, seed=self.seed)
         # dedupe (group, h1, h2) before the k×n slot expansion: slot
         # hashes derive from (h1, h2) alone and min ignores multiplicity,
@@ -313,14 +310,12 @@ class MinHashSpec(_KernelSpec):
             # unsigned minimum per group run, per slot
             sigs[lo:hi] = np.minimum.reduceat(hv, gstarts, axis=1)
         n_per_group = np.bincount(codes, minlength=len(key_tuples))
-        out = {}
-        for i in range(n_groups):
-            g = int(codes_s[gstarts[i]])
-            out[key_tuples[g]] = MinHash(
-                self.k, self.seed, sigs[:, i].copy(),
-                float(n_per_group[g]),
-            )
-        return out
+        groups = codes_s[gstarts]
+        return [key_tuples[g] for g in groups], [
+            MinHash(self.k, self.seed, sigs[:, i].copy(),
+                    float(n_per_group[g])).to_bytes()
+            for i, g in enumerate(groups)
+        ]
 
 
 class BottomKSpec(_KernelSpec):
@@ -362,36 +357,37 @@ class BottomKSpec(_KernelSpec):
             codes_s, h_s, vals_s = codes_s[keep], h_s[keep], vals_s[keep]
         return codes_s, h_s, vals_s
 
-    def build_from_codes(self, codes, key_tuples, values, weights):
+    def build_blobs_from_codes(self, codes, key_tuples, values, weights):
         """Columnar multi-group build (the per-conversation sampling
         shape at high group cardinality): hash the batch once, one
         lexsort over (group, priority), dedupe per the spec's rule
-        (``_order_and_dedupe``), then each group's state is a pure
-        ≤ k-entry slice — no per-group numpy dispatch. Byte-identical
-        to the per-group path (same stable tie order, same
-        truncation)."""
+        (``_order_and_dedupe``), then each group's blob is the kernel
+        state of a pure ≤ k-entry slice — no per-group numpy dispatch.
+        Byte-identical to the per-group path (same stable tie order,
+        same truncation)."""
         from gr_tdigest_spark.sketches.bottomk import _canon_values
 
         arr, codes, ws = _drop_missing(values, codes, weights)
         if not arr.size:
-            return {}
+            return [], []
         arr = _canon_values(np.asarray(arr))
         h = self._priority(arr, ws)
         codes_s, h_s, vals_s = self._order_and_dedupe(codes, h, arr)
         n_per_group = np.bincount(codes, minlength=len(key_tuples))
         gstarts, bounds = _group_bounds(codes_s)
-        out = {}
+        keys, blobs = [], []
         for i in range(gstarts.size):
             b0, b1 = int(bounds[i]), int(bounds[i + 1])
             g = int(codes_s[b0])
             hi = min(b1, b0 + self.k)
-            out[key_tuples[g]] = self.kernel(
+            keys.append(key_tuples[g])
+            blobs.append(self.kernel(
                 self.k, self.seed,
                 h_s[b0:hi].astype(np.uint64).copy(),
                 np.asarray(vals_s[b0:hi], dtype=object).copy(),
                 float(n_per_group[g]),
-            )
-        return out
+            ).to_bytes())
+        return keys, blobs
 
 
 class WeightedBottomKSpec(BottomKSpec):
@@ -472,42 +468,39 @@ class KLLSpec(_KernelSpec):
         v = np.asarray(values, dtype=np.float64)
         return v[np.isfinite(v)], None
 
-    def build_from_codes(self, codes, key_tuples, values, weights):
+    def build_blobs_from_codes(self, codes, key_tuples, values, weights):
         """Columnar multi-group build: sort rows by group once, then
         every group at-or-under the sketch capacity (n ≤ k — the
         high-cardinality regime) is an UNCOMPACTED level-0 state, i.e.
         a pure slice; only over-capacity groups pay the kernel's
-        compaction loop. Byte-identical to the per-group path (same
-        level-0 ordering, same compaction sequence)."""
-        from gr_tdigest_spark.sketches.kll import KLL
-
+        compaction loop. Each group's blob is its state's ``to_bytes``,
+        byte-identical to the per-group path (same level-0 ordering,
+        same compaction sequence)."""
         arr, codes = _drop_missing(values, codes)
         if not arr.size:
-            return {}
+            return [], []
         v = np.asarray(arr, dtype=np.float64)
         finite = np.isfinite(v)
         if not finite.all():
             v = v[finite]
             codes = codes[finite]
             if not v.size:
-                return {}
+                return [], []
         order = np.argsort(codes, kind="stable")
         codes_s = codes[order]
         v_s = v[order]
         gstarts, bounds = _group_bounds(codes_s)
-        out = {}
-        for i in range(gstarts.size):
-            lo, hi = bounds[i], bounds[i + 1]
+        keys, blobs = [], []
+        for lo, hi in zip(bounds[:-1], bounds[1:]):
             vals = v_s[lo:hi]
-            key = key_tuples[int(codes_s[lo])]
             if vals.size <= self.k:
-                out[key] = KLL(self.k, self.seed,
-                               [vals.copy()], float(vals.size))
+                st = KLL(self.k, self.seed, [vals], float(vals.size))
             else:
                 st = self._new()
                 st.add(vals)
-                out[key] = st
-        return out
+            keys.append(key_tuples[codes_s[lo]])
+            blobs.append(st.to_bytes())
+        return keys, blobs
 
 
 # ------------------------------------------------------------------ #

@@ -4,7 +4,7 @@ Companion sketch per BASELINE.json#north_rule. m bits / k hashes via
 Kirsch–Mitzenmacher double hashing; FPR ≈ (1 − e^{−kn/m})^k, zero false
 negatives. Mergeable monoid: merge = bitwise OR (same m, k, seed).
 
-Wire: ``GSBF`` + version + m + k + seed + n_added + bit words.
+Wire: ``GSBF``, sparse v2 or dense v1, written only by ``encode_bloom``.
 """
 
 from __future__ import annotations
@@ -17,13 +17,63 @@ import numpy as np
 
 from gr_tdigest_spark.sketches.hashing import hash_pair
 
-__all__ = ["BloomFilter", "SparseBloom", "optimal_bloom"]
+__all__ = ["BloomFilter", "encode_bloom", "optimal_bloom"]
 
 _MAGIC = b"GSBF"
 
 # 256-entry per-byte popcount table (uint16 keeps the indexed-sum small)
 _POPCNT8 = np.array([bin(i).count("1") for i in range(256)],
                     dtype=np.uint16)
+
+
+# version, m_bits, k, seed, n_added
+_HEAD = "<BQIqq"
+
+
+def _set_words(m_bits: int, pos: np.ndarray) -> np.ndarray:
+    """The m_bits/64 uint64 words with the bits at ``pos`` set."""
+    # cast BEFORE shifting: int64 >> uint64 promotes to float64 under
+    # NumPy 2 (NEP 50) and right_shift then raises
+    p64 = pos.astype(np.uint64)
+    words = np.zeros(m_bits // 64, dtype=np.uint64)
+    np.bitwise_or.at(words, (p64 >> np.uint64(6)).astype(np.int64),
+                     np.uint64(1) << (p64 % np.uint64(64)))
+    return words
+
+
+def encode_bloom(m_bits: int, k: int, seed: int, n_added: int,
+                 pos: np.ndarray = None, words: np.ndarray = None) -> bytes:
+    """The GSBF blob of an ``m_bits``-bit filter whose set bits are
+    given either as ``pos`` (sorted ascending bit positions) or as the
+    dense uint64 ``words``:
+
+    - v2 sparse: header + u32 n_set + u32 set-bit positions, when
+      m_bits < 2^32 and that is smaller than the m_bits/8 dense bytes;
+    - v1 dense: header + the m_bits/64 little-endian words.
+
+    Given ``words``, the set bits are counted with a byte popcount
+    table and expanded to positions only for the sparse form, so a
+    dense filter never pays the 8× ``unpackbits``. A nearly-empty
+    per-group filter's partial is ~4 B per set bit, not a fixed m_bits/8
+    (128 KB at the 2^20 default). The dense ``BloomFilter.to_bytes`` and
+    the columnar ``BloomSpec`` builder both write through here.
+    """
+    if pos is None:
+        byte_view = words.astype("<u8").view(np.uint8)
+        n_set = int(_POPCNT8[byte_view].sum())
+    else:
+        n_set = pos.size
+    if m_bits < (1 << 32) and 4 + 4 * n_set < m_bits // 8:
+        if pos is None:
+            pos = np.flatnonzero(np.unpackbits(byte_view, bitorder="little"))
+        return (
+            _MAGIC + struct.pack(_HEAD, 2, m_bits, k, seed, n_added)
+            + struct.pack("<I", n_set) + pos.astype("<u4").tobytes()
+        )
+    if words is None:
+        words = _set_words(m_bits, pos)
+    return (_MAGIC + struct.pack(_HEAD, 1, m_bits, k, seed, n_added)
+            + words.astype("<u8").tobytes())
 
 
 def optimal_bloom(n_expected: int, fpr: float = 0.01, seed: int = 11) -> "BloomFilter":
@@ -96,49 +146,22 @@ class BloomFilter:
         return (1.0 - math.exp(-self.k * self.n_added / self.m_bits)) ** self.k
 
     # ---------------- wire ----------------
-    #
-    # v1 dense: header + m_bits/8 word bytes
-    # v2 sparse: header + u32 n_set + u32 set-bit positions
-    #
-    # to_bytes picks whichever is smaller (sparse only when m_bits fits
-    # u32 indices). Same scale rationale as the HLL sparse mode: a
-    # nearly-empty per-group filter's shuffle partial is ~4 B per set
-    # bit, not a fixed m_bits/8 (128 KB at the 2^20 default).
-
-    _HEAD = "<BQIqq"
 
     def to_bytes(self) -> bytes:
-        # popcount via byte LUT (no numpy>=2 bitwise_count, no 8×
-        # unpackbits expansion) — to_bytes runs once per group in the
-        # final merge, so the cheap decision path matters at 150k groups
-        byte_view = self.words.astype("<u8").view(np.uint8)
-        n_set = int(_POPCNT8[byte_view].sum())
-        if self.m_bits < (1 << 32) and 4 + 4 * n_set < self.m_bits // 8:
-            bits = np.unpackbits(byte_view, bitorder="little")
-            pos = np.flatnonzero(bits).astype("<u4")
-            return (
-                _MAGIC
-                + struct.pack(self._HEAD, 2, self.m_bits, self.k,
-                              self.seed, self.n_added)
-                + struct.pack("<I", pos.size)
-                + pos.tobytes()
-            )
-        return (
-            _MAGIC
-            + struct.pack(self._HEAD, 1, self.m_bits, self.k,
-                          self.seed, self.n_added)
-            + self.words.astype("<u8").tobytes()
-        )
+        return encode_bloom(self.m_bits, self.k, self.seed, self.n_added,
+                            words=self.words)
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "BloomFilter":
         blob = bytes(blob)
         if blob[:4] != _MAGIC:
             raise ValueError("invalid GSBF magic")
+        off = 4 + struct.calcsize(_HEAD)
+        if len(blob) < off:
+            raise ValueError("truncated GSBF header")
         version, m_bits, k, seed, n_added = struct.unpack_from(
-            cls._HEAD, blob, 4
+            _HEAD, blob, 4
         )
-        off = 4 + struct.calcsize(cls._HEAD)
         if version == 1:
             words = np.frombuffer(blob, dtype="<u8", offset=off)
             if words.size != m_bits // 64:
@@ -152,56 +175,19 @@ class BloomFilter:
             # whose blob is the payload itself)
             if m_bits >= (1 << 32):
                 raise ValueError("GSBF sparse m_bits implausibly large")
+            if len(blob) < off + 4:
+                raise ValueError("truncated GSBF header")
             (n_set,) = struct.unpack_from("<I", blob, off)
+            if len(blob) != off + 4 + 4 * n_set:
+                raise ValueError("GSBF sparse payload length mismatch")
             pos = np.frombuffer(
                 blob, dtype="<u4", offset=off + 4, count=n_set
             )
-            if len(blob) != off + 4 + 4 * n_set:
-                raise ValueError("GSBF sparse payload length mismatch")
             if n_set and int(pos.max()) >= m_bits:
                 raise ValueError("GSBF sparse bit position out of range")
-            words = np.zeros(m_bits // 64, dtype=np.uint64)
-            w = (pos >> np.uint32(6)).astype(np.int64)
-            b = np.uint64(1) << pos.astype(np.uint64) % np.uint64(64)
-            np.bitwise_or.at(words, w, b)
-            return cls(int(m_bits), int(k), int(seed), words, int(n_added))
+            return cls(int(m_bits), int(k), int(seed),
+                       _set_words(m_bits, pos), int(n_added))
         raise ValueError(f"unsupported GSBF version {version}")
 
     def __reduce__(self):
         return (BloomFilter.from_bytes, (self.to_bytes(),))
-
-
-class SparseBloom:
-    """Lightweight partial state: sorted unique set-bit positions for
-    ONE group, produced by the vectorized multi-group builder
-    (BloomSpec.build_from_codes). ``to_bytes`` emits the identical blob a
-    dense filter with the same bits would (positions are sorted,
-    matching the unpackbits scan order)."""
-
-    __slots__ = ("m_bits", "k", "seed", "pos", "n_added")
-
-    def __init__(self, m_bits, k, seed, pos, n_added):
-        self.m_bits, self.k, self.seed = m_bits, k, seed
-        self.pos, self.n_added = pos, n_added
-
-    def to_dense(self) -> BloomFilter:
-        bf = BloomFilter(self.m_bits, self.k, self.seed)
-        # cast BEFORE shifting: int64 >> uint64 promotes to float64
-        # under NumPy 2 (NEP 50) and right_shift then raises
-        pos = self.pos.astype(np.uint64)
-        word = (pos >> np.uint64(6)).astype(np.int64)
-        bit = np.uint64(1) << (pos % np.uint64(64))
-        np.bitwise_or.at(bf.words, word, bit)
-        bf.n_added = int(self.n_added)
-        return bf
-
-    def to_bytes(self) -> bytes:
-        if self.m_bits < (1 << 32) and 4 + 4 * self.pos.size < self.m_bits // 8:
-            return (
-                _MAGIC
-                + struct.pack(BloomFilter._HEAD, 2, self.m_bits, self.k,
-                              self.seed, int(self.n_added))
-                + struct.pack("<I", self.pos.size)
-                + self.pos.astype("<u4").tobytes()
-            )
-        return self.to_dense().to_bytes()

@@ -202,6 +202,10 @@ class BottomK:
         blob = bytes(blob)
         if blob[:4] != cls.wire_magic:
             raise ValueError(f"invalid {cls.wire_magic.decode()} magic")
+        # the fixed header and the u32 entry count
+        off = 4 + struct.calcsize(_HEAD)
+        if len(blob) < off + 4:
+            raise ValueError(f"truncated {cls.wire_magic.decode()} header")
         version, k, seed, n_items = struct.unpack_from(_HEAD, blob, 4)
         if version != 1:
             raise ValueError(
@@ -215,7 +219,6 @@ class BottomK:
         # different one later.
         if not (2 <= k <= _MAX_K):
             raise ValueError(f"{cls.wire_magic.decode()} k out of range")
-        off = 4 + struct.calcsize(_HEAD)
         (n,) = struct.unpack_from("<I", blob, off)
         if n > k:
             raise ValueError(f"{cls.wire_magic.decode()} count exceeds k")

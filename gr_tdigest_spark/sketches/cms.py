@@ -6,7 +6,7 @@ point-estimate error ≤ ε·N with probability ≥ 1−δ where ε = e/width,
 δ = e^−depth.
 
 Mergeable monoid: merge = elementwise add (same shape+seed required).
-Wire: ``GSCM`` + version + depth + width + seed + counters + total.
+Wire: ``GSCM``, sparse v2 or dense v1, written only by ``encode_cms``.
 """
 
 from __future__ import annotations
@@ -19,7 +19,7 @@ import numpy as np
 
 from gr_tdigest_spark.sketches.hashing import hash_pair
 
-__all__ = ["CMS", "SparseCMS"]
+__all__ = ["CMS", "encode_cms"]
 
 _MAGIC = b"GSCM"
 
@@ -28,6 +28,42 @@ _MAGIC = b"GSCM"
 # guard and the encoder in exact agreement (2^28 cells = 2 GiB dense —
 # far beyond any practical CMS config)
 _SPARSE_MAX_CELLS = 1 << 28
+
+# version, depth, width, seed, total
+_HEAD = "<BIIqd"
+
+
+def encode_cms(depth: int, width: int, seed: int, total: float,
+               idx: np.ndarray, counts: np.ndarray,
+               table: np.ndarray = None) -> bytes:
+    """The GSCM blob of a depth×width sketch whose non-zero counters
+    are at flat indices ``idx`` (sorted ascending) holding ``counts``:
+
+    - v2 sparse: header + u32 nnz + u32 flat indices + i64 counts, when
+      depth·width ≤ ``_SPARSE_MAX_CELLS`` and that is smaller than the
+      dense table;
+    - v1 dense: header + the depth·width i64 counters (``table``, if
+      the caller holds the dense counters, else scattered from the
+      cells).
+
+    A group with d distinct values touches at most depth·d counters, so
+    a small group's partial is ~12 B per touched counter instead of a
+    fixed depth·width·8 (320 KB at the 5×8192 default). The dense
+    ``CMS.to_bytes`` and the columnar ``CMSSpec`` builder both write
+    through here.
+    """
+    cells = depth * width
+    if cells <= _SPARSE_MAX_CELLS and 4 + 12 * idx.size < 8 * cells:
+        return (
+            _MAGIC + struct.pack(_HEAD, 2, depth, width, seed, total)
+            + struct.pack("<I", idx.size)
+            + idx.astype("<u4").tobytes() + counts.astype("<i8").tobytes()
+        )
+    if table is None:
+        table = np.zeros(cells, dtype=np.int64)
+        table[idx] = counts
+    return (_MAGIC + struct.pack(_HEAD, 1, depth, width, seed, total)
+            + table.astype("<i8").tobytes())
 
 
 @dataclass
@@ -123,45 +159,24 @@ class CMS:
         )
 
     # ---------------- wire ----------------
-    #
-    # v1 dense: header + depth·width i64 counters
-    # v2 sparse: header + u32 nnz + u32 flat indices + i64 counts
-    #
-    # to_bytes picks whichever is smaller (sparse only when depth·width
-    # fits u32 indices). A group with d distinct values touches at most
-    # depth·d counters, so small-group partials shuffle ~12 B per
-    # touched counter instead of a fixed depth·width·8 (320 KB at the
-    # 5×8192 default) — the scale lever for per-conversation sketches.
-
-    _HEAD = "<BIIqd"
 
     def to_bytes(self) -> bytes:
         flat = self.table.reshape(-1)
         nz = np.flatnonzero(flat)
-        cells = self.depth * self.width
-        if cells <= _SPARSE_MAX_CELLS and 4 + 12 * nz.size < 8 * cells:
-            return (
-                _MAGIC
-                + struct.pack(self._HEAD, 2, self.depth, self.width,
-                              self.seed, self.total)
-                + struct.pack("<I", nz.size)
-                + nz.astype("<u4").tobytes()
-                + flat[nz].astype("<i8").tobytes()
-            )
-        head = _MAGIC + struct.pack(
-            self._HEAD, 1, self.depth, self.width, self.seed, self.total
-        )
-        return head + self.table.astype("<i8").tobytes()
+        return encode_cms(self.depth, self.width, self.seed, self.total,
+                          nz, flat[nz], flat)
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "CMS":
         blob = bytes(blob)
         if blob[:4] != _MAGIC:
             raise ValueError("invalid GSCM magic")
+        off = 4 + struct.calcsize(_HEAD)
+        if len(blob) < off:
+            raise ValueError("truncated GSCM header")
         version, depth, width, seed, total = struct.unpack_from(
-            cls._HEAD, blob, 4
+            _HEAD, blob, 4
         )
-        off = 4 + struct.calcsize(cls._HEAD)
         if version == 1:
             table = np.frombuffer(blob, dtype="<i8", offset=off)
             if table.size != depth * width:
@@ -176,6 +191,8 @@ class CMS:
             # amplification possible); anything larger here is forged
             if depth * width > _SPARSE_MAX_CELLS:
                 raise ValueError("GSCM sparse dims implausibly large")
+            if len(blob) < off + 4:
+                raise ValueError("truncated GSCM header")
             (nnz,) = struct.unpack_from("<I", blob, off)
             off += 4
             if len(blob) != off + 12 * nnz:
@@ -194,36 +211,3 @@ class CMS:
 
     def __reduce__(self):
         return (CMS.from_bytes, (self.to_bytes(),))
-
-
-class SparseCMS:
-    """Lightweight partial state: sorted unique flat cell indices +
-    counts for ONE group, produced by the vectorized multi-group
-    builder (CMSSpec.build_from_codes). ``to_bytes`` emits the identical
-    blob a dense table with the same cells would (indices sorted,
-    matching flatnonzero order)."""
-
-    __slots__ = ("depth", "width", "seed", "idx", "counts", "total")
-
-    def __init__(self, depth, width, seed, idx, counts, total):
-        self.depth, self.width, self.seed = depth, width, seed
-        self.idx, self.counts, self.total = idx, counts, float(total)
-
-    def to_dense(self) -> CMS:
-        c = CMS(self.depth, self.width, self.seed)
-        c.table.reshape(-1)[self.idx] = self.counts
-        c.total = self.total
-        return c
-
-    def to_bytes(self) -> bytes:
-        cells = self.depth * self.width
-        if cells <= _SPARSE_MAX_CELLS and 4 + 12 * self.idx.size < 8 * cells:
-            return (
-                _MAGIC
-                + struct.pack(CMS._HEAD, 2, self.depth, self.width,
-                              self.seed, self.total)
-                + struct.pack("<I", self.idx.size)
-                + self.idx.astype("<u4").tobytes()
-                + self.counts.astype("<i8").tobytes()
-            )
-        return self.to_dense().to_bytes()

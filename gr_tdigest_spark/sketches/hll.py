@@ -5,7 +5,7 @@ counts"). Standard Flajolet–Fusy–Gandouet–Meunier HLL with the 64-bit
 variant's corrections: relative standard error 1.04/√m.
 
 Mergeable monoid: merge = elementwise register max (same p required).
-Wire: ``GSHL`` + version + p + registers.
+Wire: ``GSHL``, sparse v2 or dense v1, written only by ``encode_hll``.
 """
 
 from __future__ import annotations
@@ -18,7 +18,7 @@ import numpy as np
 
 from gr_tdigest_spark.sketches.hashing import hash64
 
-__all__ = ["HLL", "SparseHLL", "idx_rank"]
+__all__ = ["HLL", "encode_hll", "idx_rank"]
 
 _MAGIC = b"GSHL"
 
@@ -31,6 +31,35 @@ def _alpha(m: int) -> float:
     if m == 64:
         return 0.709
     return 0.7213 / (1.0 + 1.079 / m)
+
+
+def encode_hll(p: int, idx: np.ndarray, ranks: np.ndarray,
+               registers: np.ndarray = None) -> bytes:
+    """The GSHL blob of a precision-``p`` sketch whose non-zero
+    registers are ``idx`` (sorted ascending) holding ``ranks``:
+
+    - v2 sparse: magic + (2, p) + u32 nnz + u32 indices + u8 ranks,
+      when that is smaller than 2^p bytes;
+    - v1 dense: magic + (1, p) + the 2^p register bytes (``registers``,
+      if the caller holds the dense array, else scattered from the
+      cells).
+
+    This is the scale lever for high-cardinality groupings
+    (per-conversation HLLs over 10^12 turns): a small group's partial
+    is ~5 B per touched register instead of a fixed 2^p. The dense
+    ``HLL.to_bytes`` and the columnar ``HLLSpec`` builder both write
+    through here, so a group's blob does not depend on which built it.
+    """
+    m = 1 << p
+    if 4 + 5 * idx.size < m:
+        return (
+            _MAGIC + struct.pack("<BBI", 2, p, idx.size)
+            + idx.astype("<u4").tobytes() + ranks.astype(np.uint8).tobytes()
+        )
+    if registers is None:
+        registers = np.zeros(m, dtype=np.uint8)
+        registers[idx] = ranks
+    return _MAGIC + struct.pack("<BB", 1, p) + registers.tobytes()
 
 
 def idx_rank(h: np.ndarray, p: int):
@@ -103,33 +132,18 @@ class HLL:
         return 1.04 / math.sqrt(self.m)
 
     # ---------------- wire ----------------
-    #
-    # v1 dense: magic + (1, p) + m register bytes
-    # v2 sparse: magic + (2, p) + u32 nnz + u32 indices + u8 ranks
-    #
-    # to_bytes picks whichever is smaller. This is the scale lever for
-    # high-cardinality groupings (per-conversation HLLs over 10^12
-    # turns): a small group's partial is ~5 B per touched register
-    # instead of a fixed 2^p — the shuffle carries kilobytes, not
-    # n_groups × 16 KB. Pure wire change: states and merges are
-    # identical, and decode(encode(x)) is register-exact either way.
 
     def to_bytes(self) -> bytes:
         nz = np.flatnonzero(self.registers)
-        if 4 + 5 * nz.size < self.m:
-            return (
-                _MAGIC + struct.pack("<BB", 2, self.p)
-                + struct.pack("<I", nz.size)
-                + nz.astype("<u4").tobytes()
-                + self.registers[nz].tobytes()
-            )
-        return _MAGIC + struct.pack("<BB", 1, self.p) + self.registers.tobytes()
+        return encode_hll(self.p, nz, self.registers[nz], self.registers)
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "HLL":
         blob = bytes(blob)
         if blob[:4] != _MAGIC:
             raise ValueError("invalid GSHL magic")
+        if len(blob) < 6:
+            raise ValueError("truncated GSHL header")
         version, p = struct.unpack_from("<BB", blob, 4)
         # validate p BEFORE any 2^p allocation: a forged header with
         # p=40 would otherwise attempt a 1 TB np.zeros (same
@@ -142,6 +156,8 @@ class HLL:
                 raise ValueError("GSHL register payload length mismatch")
             return cls(p, regs.copy())
         if version == 2:
+            if len(blob) < 10:
+                raise ValueError("truncated GSHL header")
             (nnz,) = struct.unpack_from("<I", blob, 6)
             off = 10
             if len(blob) != off + 5 * nnz:
@@ -159,36 +175,3 @@ class HLL:
 
     def __reduce__(self):
         return (HLL.from_bytes, (self.to_bytes(),))
-
-
-class SparseHLL:
-    """Lightweight partial state: sorted unique register indices + ranks
-    for ONE group, produced by the vectorized multi-group builder
-    (HLLSpec.build_from_codes), which only ever encodes it. Never
-    allocates the dense 2^p array unless the dense encoding is the
-    smaller — at 150k-group partials that is the difference between
-    kilobytes and gigabytes of transient state. ``to_bytes`` emits the
-    IDENTICAL blob a dense HLL with the same registers would (sparse
-    indices are sorted, matching flatnonzero order), so the two state
-    forms are indistinguishable on the wire."""
-
-    __slots__ = ("p", "idx", "ranks")
-
-    def __init__(self, p: int, idx: np.ndarray, ranks: np.ndarray):
-        self.p, self.idx, self.ranks = p, idx, ranks
-
-    def to_dense(self) -> HLL:
-        h = HLL(self.p)
-        h.registers[self.idx] = self.ranks
-        return h
-
-    def to_bytes(self) -> bytes:
-        m = 1 << self.p
-        if 4 + 5 * self.idx.size < m:
-            return (
-                _MAGIC + struct.pack("<BB", 2, self.p)
-                + struct.pack("<I", self.idx.size)
-                + self.idx.astype("<u4").tobytes()
-                + self.ranks.astype(np.uint8).tobytes()
-            )
-        return self.to_dense().to_bytes()

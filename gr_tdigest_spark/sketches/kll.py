@@ -188,12 +188,18 @@ class KLL:
         blob = bytes(blob)
         if blob[:4] != _MAGIC:
             raise ValueError("invalid GSKL magic")
+        off = 4 + struct.calcsize("<BIqdqI")
+        if len(blob) < off:
+            raise ValueError("truncated GSKL header")
         version, k, seed, n, compactions, h = struct.unpack_from("<BIqdqI", blob, 4)
         if version != 1:
             raise ValueError(f"unsupported GSKL version {version}")
-        off = 4 + struct.calcsize("<BIqdqI")
+        if len(blob) < off + 4 * h:
+            raise ValueError("truncated GSKL level sizes")
         sizes = struct.unpack_from(f"<{h}I", blob, off)
         off += 4 * h
+        if len(blob) != off + 8 * sum(sizes):
+            raise ValueError("GSKL payload length mismatch")
         levels = []
         for s in sizes:
             levels.append(

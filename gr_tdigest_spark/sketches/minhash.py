@@ -112,10 +112,12 @@ class MinHash:
         blob = bytes(blob)
         if blob[:4] != _MAGIC:
             raise ValueError("invalid GSMH magic")
+        off = 4 + struct.calcsize("<BIqd")
+        if len(blob) < off:
+            raise ValueError("truncated GSMH header")
         version, k, seed, n_items = struct.unpack_from("<BIqd", blob, 4)
         if version != 1:
             raise ValueError(f"unsupported GSMH version {version}")
-        off = 4 + struct.calcsize("<BIqd")
         sig = np.frombuffer(blob, dtype="<u8", offset=off)
         if sig.size != k:
             raise ValueError("GSMH signature payload length mismatch")

@@ -205,19 +205,15 @@ def _checksum_v3(blob: bytes, header_len: int) -> int:
 
 def wire_precision(blob: bytes) -> str:
     """Sniff 'f32'/'f64' from the header without a full decode
-    (wire.rs:224-272)."""
+    (wire.rs:224-272). A v3 blob is read through ``v3_header``, so one
+    ``decode`` rejects raises the same error here."""
     if len(blob) < 5:
         raise WireError("buffer too small")
     if blob[:4] != MAGIC:
         raise WireError("invalid TDIG magic header")
     version = blob[4]
     if version == 3:
-        if len(blob) < HEADER_LEN_V3:
-            raise WireError("buffer too small")
-        code = blob[7]
-        if code not in _CODE_PRECISION:
-            raise WireError(f"invalid TDIG precision code: {code}")
-        return _CODE_PRECISION[code]
+        return v3_header(blob)[1]
     if version in (1, 2):
         if len(blob) < HEADER_LEN_V12:
             raise WireError("buffer too small")

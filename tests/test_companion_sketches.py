@@ -1025,11 +1025,39 @@ class TestSparseWire:
             BloomFilter.from_bytes(b.to_bytes()[:-2])
 
 
+def _small_blob(kind):
+    """One small valid blob of each companion kind, with more than one
+    KLL level so cuts land in the level sizes."""
+    from gr_tdigest_spark.sketches.bottomk import BottomK
+    from gr_tdigest_spark.sketches.minhash import MinHash
+
+    objs = np.array([f"v{i}" for i in range(40)], dtype=object)
+    sk = {"hll": HLL(p=8), "cms": CMS(depth=3, width=32),
+          "bloom": BloomFilter(m_bits=1024, k=3), "kll": KLL(k=8),
+          "minhash": MinHash(k=16), "bottomk": BottomK(k=8)}[kind]
+    sk.add(np.arange(100.0) if kind == "kll" else objs)
+    return type(sk), sk.to_bytes()
+
+
+@pytest.mark.parametrize("cut", [5, 6, 9, 12, 28, 36, 40, -1])
+@pytest.mark.parametrize(
+    "kind", ["hll", "cms", "bloom", "kll", "minhash", "bottomk"])
+def test_truncated_blob_raises_value_error(kind, cut):
+    """A blob cut anywhere, inside the fixed header included, is
+    rejected with ``ValueError`` (the decoders' one error type), never
+    a ``struct.error`` or a sketch read past the end."""
+    cls, blob = _small_blob(kind)
+    assert len(blob) > 40
+    with pytest.raises(ValueError):
+        cls.from_bytes(blob[:cut])
+
+
 class TestVectorizedHLLBuild:
-    """HLLSpec.build_from_codes (one hash pass + sort + reduceat-max
-    with SparseHLL states), run by hll_agg's partial builder, must be
-    blob-exact vs the kernel's per-group build, including multi-key
-    grouping, null keys, and null values."""
+    """HLLSpec.build_blobs_from_codes (one hash pass + sort +
+    reduceat-max, each group's cells encoded by ``encode_hll``), run by
+    hll_agg's partial builder, must be register-exact vs the kernel's
+    per-group build, including multi-key grouping, null keys, and null
+    values."""
 
     def test_agg_equals_driver_build(self, spark, sf_dir):
         from gr_tdigest_spark.operators.companions import hll_agg
@@ -1078,30 +1106,6 @@ class TestVectorizedHLLBuild:
         np.testing.assert_array_equal(
             HLL.from_bytes(bytes(rows[None])).registers, rn.registers
         )
-
-    def test_sparse_state_blob_equals_dense_blob(self):
-        from gr_tdigest_spark.sketches.hashing import hash64
-        from gr_tdigest_spark.sketches.hll import HLL, SparseHLL, idx_rank
-
-        vals = np.arange(40)
-        dense = HLL(p=14)
-        dense.add(vals)
-        idx, rank = idx_rank(hash64(vals), 14)
-        order = np.argsort(idx, kind="stable")
-        idx_s, rank_s = idx[order], rank[order]
-        starts = np.flatnonzero(np.r_[True, idx_s[1:] != idx_s[:-1]])
-        sp = SparseHLL(14, idx_s[starts],
-                       np.maximum.reduceat(rank_s, starts))
-        assert sp.to_bytes() == dense.to_bytes()
-        big = np.arange(200_000)  # dense encoding regime
-        d2 = HLL(p=10)
-        d2.add(big)
-        i2, r2 = idx_rank(hash64(big), 10)
-        o = np.argsort(i2, kind="stable")
-        i2s, r2s = i2[o], r2[o]
-        st = np.flatnonzero(np.r_[True, i2s[1:] != i2s[:-1]])
-        sp2 = SparseHLL(10, i2s[st], np.maximum.reduceat(r2s, st))
-        assert sp2.to_bytes() == d2.to_bytes()
 
     def test_blobs_independent_of_partition_layout(self, spark):
         """Regression: nullable int64 columns used to hash as float64 in

@@ -234,12 +234,11 @@ def test_minhash_merge_associative_idempotent_exact_state(data, split):
 @settings(max_examples=_n(200), deadline=None)
 @given(payload=st.binary(min_size=0, max_size=64),
       magic=st.sampled_from([b"GSHL", b"GSCM", b"GSBF", b"GSMH",
-                             b"GSBK", b"GSWK"]))
+                             b"GSBK", b"GSWK", b"GSKL"]))
 def test_wire_decoders_never_crash_on_garbage(payload, magic):
     """Corrupt/truncated blobs (valid magic + arbitrary bytes) must
-    raise a clean ValueError/struct.error — never segfault, hang, or
-    silently return a sketch built from garbage lengths."""
-    import struct
+    raise a clean ValueError — never a struct.error, a segfault or a
+    hang, nor silently return a sketch built from garbage lengths."""
     from gr_tdigest_spark.sketches.bloom import BloomFilter
     from gr_tdigest_spark.sketches.bottomk import BottomK
     from gr_tdigest_spark.sketches.cms import CMS
@@ -250,11 +249,11 @@ def test_wire_decoders_never_crash_on_garbage(payload, magic):
 
     decoder = {b"GSHL": HLL, b"GSCM": CMS, b"GSBF": BloomFilter,
                b"GSMH": MinHash, b"GSBK": BottomK,
-               b"GSWK": WeightedBottomK}[magic]
+               b"GSWK": WeightedBottomK, b"GSKL": KLL}[magic]
     blob = magic + payload
     try:
         sk = decoder.from_bytes(blob)
-    except (ValueError, struct.error):
+    except ValueError:
         return
     # a blob that decodes must round-trip to identical state
     rt = decoder.from_bytes(sk.to_bytes())
@@ -267,6 +266,8 @@ def test_wire_decoders_never_crash_on_garbage(payload, magic):
     elif hasattr(sk, "hashes"):
         np.testing.assert_array_equal(rt.hashes, sk.hashes)
         assert rt.sample() == sk.sample()
+    elif hasattr(sk, "levels"):
+        assert rt.to_bytes() == sk.to_bytes()
     else:
         np.testing.assert_array_equal(rt.sig, sk.sig)
 
@@ -324,14 +325,12 @@ def test_wire_single_bitflip_raises_or_roundtrips(kind, pos, bit):
     either reject it cleanly or produce a sketch whose re-encoding
     decodes back to the same state — structured corruption exercises
     length/dimension fields that pure-garbage fuzzing rarely reaches."""
-    import struct
-
     blob, decode = _WIRE_BLOBS[kind]
     mut = bytearray(blob)
     mut[pos % len(mut)] ^= 1 << bit
     try:
         sk = decode(bytes(mut))
-    except (ValueError, struct.error):
+    except ValueError:
         # a MemoryError here would be an amplification-guard bug —
         # deliberately NOT caught
         return
@@ -339,6 +338,63 @@ def test_wire_single_bitflip_raises_or_roundtrips(kind, pos, bit):
     # re-encoding the re-decoded sketch reproduces identical bytes
     blob2 = sk.to_bytes()
     assert decode(blob2).to_bytes() == blob2
+
+
+# The companion encoders switch from the v2 sparse to the v1 dense wire
+# at n set cells: HLL p=8 at 51 (4 + 5n ≥ 256), CMS 3×32 at 64
+# (4 + 12n ≥ 8·96), Bloom 1024 bits at 31 (4 + 4n ≥ 128).
+_CELL_KINDS = {"hll": 256, "cms": 96, "bloom": 1024}
+
+
+@settings(max_examples=_n(60), deadline=None)
+@given(
+    kind=st.sampled_from(sorted(_CELL_KINDS)),
+    n=st.integers(min_value=0, max_value=96),
+    seed=st.integers(min_value=0, max_value=2**32 - 1),
+)
+@example(kind="hll", n=50, seed=0)
+@example(kind="hll", n=51, seed=0)
+@example(kind="hll", n=52, seed=0)
+@example(kind="cms", n=63, seed=1)
+@example(kind="cms", n=64, seed=1)
+@example(kind="cms", n=65, seed=1)
+@example(kind="bloom", n=30, seed=2)
+@example(kind="bloom", n=31, seed=2)
+@example(kind="bloom", n=32, seed=2)
+def test_cell_encoder_equals_dense_to_bytes(kind, n, seed):
+    """Each companion encoder, given a sorted cell set, writes exactly
+    the bytes the dense kernel with those cells set writes, on both
+    sides of the sparse/dense switch, and the blob decodes back to
+    those cells."""
+    from gr_tdigest_spark.sketches.bloom import encode_bloom
+    from gr_tdigest_spark.sketches.cms import encode_cms
+    from gr_tdigest_spark.sketches.hll import encode_hll
+
+    rng = np.random.default_rng(seed)
+    idx = np.sort(rng.choice(_CELL_KINDS[kind], size=n, replace=False))
+    if kind == "hll":
+        ranks = rng.integers(1, 58, size=n).astype(np.uint8)
+        dense = HLL(p=8)
+        dense.registers[idx] = ranks
+        blob = encode_hll(8, idx, ranks)
+        np.testing.assert_array_equal(
+            HLL.from_bytes(blob).registers, dense.registers)
+    elif kind == "cms":
+        counts = rng.integers(1, 1 << 40, size=n)
+        dense = CMS(depth=3, width=32, seed=5, total=float(counts.sum()))
+        dense.table.reshape(-1)[idx] = counts
+        blob = encode_cms(3, 32, 5, dense.total, idx, counts)
+        np.testing.assert_array_equal(CMS.from_bytes(blob).table,
+                                      dense.table)
+    else:
+        dense = BloomFilter(m_bits=1024, k=3, seed=9, n_added=2 * n)
+        bits = np.zeros(1024, dtype=np.uint8)
+        bits[idx] = 1
+        dense.words[:] = np.packbits(bits, bitorder="little").view("<u8")
+        blob = encode_bloom(1024, 3, 9, 2 * n, pos=idx)
+        np.testing.assert_array_equal(
+            BloomFilter.from_bytes(blob).words, dense.words)
+    assert blob == dense.to_bytes()
 
 
 @settings(max_examples=_n(30), deadline=None)
@@ -352,7 +408,7 @@ def test_wire_single_bitflip_raises_or_roundtrips(kind, pos, bit):
     ),
 )
 def test_vectorized_build_groups_equals_default_path(rows):
-    """Every spec's partial builder (Arrow batch → build_from_codes)
+    """Every spec's partial builder (Arrow batch → build_blobs_from_codes)
     must emit blobs identical to the base-class per-group reference on
     arbitrary (group, value) frames including null keys and null
     values."""

@@ -855,7 +855,7 @@ class TestWeightedTieSemantics:
         assert win == want
 
     def test_spec_tie_collision_layout_independent(self):
-        """Drive the spec's build_from_codes directly with crafted
+        """Drive the spec's build_blobs_from_codes directly with crafted
         race-key collisions split across flushes in different orders —
         the merged state must be identical."""
         import pandas as pd

@@ -132,7 +132,7 @@ class TestErrors:
 
 @pytest.mark.parametrize("name", [
     "tdigest_count", "tdigest_min", "tdigest_max", "tdigest_sum",
-    "tdigest_mean", "tdigest_n_centroids",
+    "tdigest_mean", "tdigest_n_centroids", "tdigest_wire_precision",
 ])
 def test_header_probes_check_like_decode(name):
     """The header-level probes read a v3 blob through every check
